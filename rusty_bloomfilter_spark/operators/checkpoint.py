@@ -5,35 +5,51 @@ checkpoints with lineage + metrics". Spark has no native checkpointing
 for batch aggregation state, so we define the unit of work as the
 *input file* (deterministic across runs, unlike physical partition
 ids): one sketch row per input file, persisted to a parquet checkpoint
-directory. Resume = list input files, anti-join against checkpointed
-lineage, build only the missing files, merge everything.
+directory.
+
+Resume reads the checkpoint once. Each scan partition drops the rows
+whose file is not in the work-list and folds the rest into one partial
+sketch that also carries its row counts and the files it covered. The
+driver collects the partials over Arrow and merges them; the union of
+their files is the done-list. A full resume is therefore one Spark
+job; a cold or partial build adds its build-and-append job and a fold
+of just the rows it appended. While the partials fit in
+``_DRIVER_MERGE_BYTES`` they merge on the driver; above it they go
+through the distributed tree merge first.
 
 At 100 TB scale this is the natural granularity: a file (or Iceberg
 data file) is the retry/skip unit; the checkpoint table stays tiny
-(one O(sketch_bytes) row per file) and the final tree merge reads only
+(one O(sketch_bytes) row per file) and the final merge reads only
 sketch rows, never raw data.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from dataclasses import dataclass
+from functools import partial
 
-
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .aggregate import MergePayloadsFn, UpdateFn, tree_merge
+from ..sketch import Shape
+from .aggregate import _FLUSH_AT, MergePayloadsFn, UpdateFn, tree_merge
 
 CKPT_SCHEMA = "file string, payload binary, n_items bigint, n_rows bigint"
+_PARTIAL_SCHEMA = "payload binary, n_items bigint, n_rows bigint, files array<string>"
+
+# Largest total of partial payloads the driver collects and merges
+# itself: scan partitions x the bytes one payload can reach.
+_DRIVER_MERGE_BYTES = 256 << 20
 
 
 def _list_input_files(spark: SparkSession, input_path: str) -> list[str]:
     """Deterministic work-list. Uses Spark's own file index so the
-    lineage matches what the scan would read."""
-    df = spark.read.parquet(input_path)
-    return sorted(df.inputFiles())
+    lineage matches what the scan would read. The explicit schema
+    skips the schema-inference job; only the listing is needed."""
+    return sorted(spark.read.schema("_ int").parquet(input_path).inputFiles())
 
 
 def _file_sketches(
@@ -78,12 +94,96 @@ def _file_sketches(
 
 
 @dataclass
+class _Folded:
+    payloads: list[bytes]
+    n_items: int
+    n_rows: int
+    files: set[str]
+
+
+def _payload_bound(empty) -> int:
+    """Bytes one payload of this sketch can reach: its empty size, or
+    for a sparse-coded Bloom accumulator the dense array it grows into."""
+    shape = getattr(empty, "shape", None)
+    dense = shape.number_of_bytes() if isinstance(shape, Shape) else 0
+    return max(len(empty.to_bytes()), dense)
+
+
+def _fold_checkpoint(
+    spark: SparkSession,
+    ckpt_dir: str,
+    work: list[str],
+    merge_payloads: MergePayloadsFn,
+    payload_bound: int,
+    fanout: int,
+) -> _Folded:
+    """Fold the checkpoint rows of ``work``'s files in one read: one
+    partial per scan partition, merged on the driver (or by
+    ``tree_merge`` when the partials would exceed the driver budget).
+    Rows of files outside ``work`` are ignored."""
+    ckpt = spark.read.schema(CKPT_SCHEMA).parquet(ckpt_dir)
+    n_parts = ckpt.rdd.getNumPartitions()
+    wanted = spark.sparkContext.broadcast(pa.array(work, pa.string()))
+
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        payloads: list[bytes] = []
+        files: set[str] = set()
+        n_items = n_rows = 0
+        for batch in batches:
+            batch = batch.filter(pc.is_in(batch.column("file"), value_set=wanted.value))
+            if not batch.num_rows:
+                continue
+            payloads.extend(batch.column("payload").to_pylist())
+            n_items += pc.sum(batch.column("n_items")).as_py()
+            n_rows += pc.sum(batch.column("n_rows")).as_py()
+            files.update(batch.column("file").to_pylist())
+            if len(payloads) >= _FLUSH_AT:
+                payloads = [merge_payloads(payloads)]
+        if payloads:
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "payload": [merge_payloads(payloads)],
+                    "n_items": [n_items],
+                    "n_rows": [n_rows],
+                    "files": [list(files)],
+                }
+            )
+
+    folded = ckpt.mapInArrow(fold, schema=_PARTIAL_SCHEMA)
+    try:
+        if n_parts * payload_bound <= _DRIVER_MERGE_BYTES:
+            table = folded.toArrow()
+            payloads = table.column("payload").to_pylist()
+        else:
+            # cached so the counters and the tree merge share one fold
+            folded.persist()
+            try:
+                table = folded.drop("payload").toArrow()
+                merged = tree_merge(
+                    folded.select("payload", "n_items"), merge_payloads,
+                    fanout=fanout, n_parts=n_parts,
+                ).collect()
+            finally:
+                folded.unpersist()
+            payloads = [bytes(r["payload"]) for r in merged]
+    finally:
+        wanted.destroy()
+    return _Folded(
+        payloads=payloads,
+        n_items=sum(table.column("n_items").to_pylist()),
+        n_rows=sum(table.column("n_rows").to_pylist()),
+        files={f for fs in table.column("files").to_pylist() for f in fs},
+    )
+
+
+@dataclass
 class CheckpointReport:
     total_files: int
     resumed_files: int
     built_files: int
     payload: bytes
     n_items: int
+    n_rows: int
 
     def metrics(self) -> dict:
         return {
@@ -91,6 +191,7 @@ class CheckpointReport:
             "resumed_files": self.resumed_files,
             "built_files": self.built_files,
             "n_items": self.n_items,
+            "n_rows": self.n_rows,
             "sketch_bytes": len(self.payload),
         }
 
@@ -108,20 +209,30 @@ def build_with_checkpoint(
 ) -> CheckpointReport:
     """Idempotent resumable build.
 
-    1. work-list = input files; done-list = checkpointed lineage
-    2. build sketches only for missing files; append to ckpt_dir
-    3. tree-merge ALL checkpointed rows into the final sketch
+    1. work-list = input files, listed without a Spark job
+    2. if ``ckpt_dir`` holds parquet parts, fold its rows for the
+       work-list in one read; the files the fold covered are the
+       done-list
+    3. build sketches only for the missing files, append them to
+       ``ckpt_dir``, and fold just those files' rows
+    4. merge the folds' partials on the driver
 
-    Killing the job mid-build loses at most the in-flight files;
-    rerunning skips everything already persisted.
+    Rows of files outside the work-list are ignored. Partials merge on
+    the driver while scan partitions x payload bytes stay within
+    ``_DRIVER_MERGE_BYTES``; above it ``tree_merge`` (with ``fanout``)
+    merges them first. Killing the job mid-build loses at most the
+    in-flight files; rerunning skips everything already persisted.
     """
     files = _list_input_files(spark, input_path)
-    done: set[str] = set()
+    empty = make_empty()
+    fold = partial(
+        _fold_checkpoint, spark, ckpt_dir, merge_payloads=merge_payloads,
+        payload_bound=_payload_bound(empty), fanout=fanout,
+    )
+    folds: list[_Folded] = []
     if _ckpt_exists(spark, ckpt_dir):
-        done = {
-            r["file"]
-            for r in spark.read.parquet(ckpt_dir).select("file").distinct().collect()
-        }
+        folds.append(fold(files))
+    done = folds[0].files if folds else set()
     missing = [f for f in files if f not in done]
 
     if missing:
@@ -129,25 +240,26 @@ def build_with_checkpoint(
             spark.read.parquet(*missing), make_empty, update, columns=columns
         )
         part.write.mode("append").parquet(ckpt_dir)
+        folds.append(fold(missing))
 
-    # semi-join, not isin(): a 100k-file lineage list as an IN-expression
-    # would blow up the plan; a broadcast semi join stays O(files)
-    files_df = spark.createDataFrame([(f,) for f in files], "file string")
-    ckpt = spark.read.parquet(ckpt_dir).join(F.broadcast(files_df), "file", "left_semi")
-    merged = tree_merge(
-        ckpt.select("payload", "n_items"), merge_payloads, fanout=fanout
-    ).collect()[0]
+    payloads = [p for f in folds for p in f.payloads]
     return CheckpointReport(
         total_files=len(files),
-        resumed_files=len(done & set(files)),
+        resumed_files=len(done),
         built_files=len(missing),
-        payload=bytes(merged["payload"]),
-        n_items=int(merged["n_items"]),
+        payload=merge_payloads(payloads) if payloads else empty.to_bytes(),
+        n_items=sum(f.n_items for f in folds),
+        n_rows=sum(f.n_rows for f in folds),
     )
 
 
 def _ckpt_exists(spark: SparkSession, ckpt_dir: str) -> bool:
-    path = ckpt_dir.removeprefix("file:")
-    if os.path.isdir(path):
-        return any(name.endswith(".parquet") for name in os.listdir(path))
-    return False
+    """True iff ``ckpt_dir`` holds parquet parts, checked through the
+    Hadoop FileSystem of its URI (so ``hdfs:``/``s3a:`` work too)."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(ckpt_dir)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(path):
+        return False
+    parts = fs.globStatus(jvm.org.apache.hadoop.fs.Path(path, "*.parquet"))
+    return parts is not None and len(parts) > 0

@@ -37,6 +37,8 @@ designed around.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -91,6 +93,22 @@ def _scan_bytes_under(path: str, cap: int) -> int | None:
         return None
 
 
+_BYTE_SHIFTS = {
+    "": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20,
+    "g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50,
+}
+
+
+def _parse_byte_string(value: str) -> int:
+    """Bytes in a Spark byte-size string, read as Spark's own config
+    parser reads it: a bare number is bytes, and k/m/g/t/p, each with
+    an optional b, are binary powers ("4m" and "4mb" are 4 MiB)."""
+    m = re.fullmatch(r"(\d+)([a-z]*)", value.strip().lower())
+    if m is None or m.group(2) not in _BYTE_SHIFTS:
+        raise ValueError(f"not a byte string: {value!r}")
+    return int(m.group(1)) << _BYTE_SHIFTS[m.group(2)]
+
+
 def fan_out_small_scan(
     spark: SparkSession, df: DataFrame, *, path: str | None = None
 ) -> DataFrame:
@@ -115,17 +133,10 @@ def fan_out_small_scan(
     target = spark.sparkContext.defaultParallelism
     if path is not None:
         try:
-            open_cost = int(
-                "".join(
-                    c
-                    for c in spark.conf.get(
-                        "spark.sql.files.openCostInBytes", "4194304"
-                    )
-                    if c.isdigit()
-                )
-                or "4194304"
+            open_cost = _parse_byte_string(
+                spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
             )
-        except Exception:
+        except ValueError:
             open_cost = 4194304
         cap = target * open_cost
         got = _scan_bytes_under(path, cap)

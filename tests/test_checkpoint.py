@@ -4,7 +4,8 @@ bitwise-identical final sketch (SURVEY.md §5 integration plan)."""
 import numpy as np
 import pytest
 
-from rusty_bloomfilter_spark.operators.checkpoint import build_with_checkpoint
+from rusty_bloomfilter_spark.operators import checkpoint
+from rusty_bloomfilter_spark.operators.checkpoint import CKPT_SCHEMA, build_with_checkpoint
 from rusty_bloomfilter_spark.operators.sketches import BloomSketch, flatten_tokens
 from rusty_bloomfilter_spark.sketch import BloomFilter, Shape, merge_payloads
 
@@ -41,12 +42,14 @@ def test_checkpoint_build_and_resume(spark, sequences_pdf, seq_parquet, tmp_path
     )
     assert BloomFilter.from_bytes(r1.payload).words.tobytes() == oracle.words.tobytes()
     assert r1.n_items == oracle.n_items
+    assert r1.n_rows == len(sequences_pdf)
 
     # full resume: nothing rebuilt, identical bytes
     r2 = _build(spark, seq_parquet, ckpt)
     assert r2.built_files == 0
     assert r2.resumed_files == r1.total_files
     assert r2.payload == r1.payload and r2.n_items == r1.n_items
+    assert r2.n_rows == len(sequences_pdf)
 
 
 def test_checkpoint_partial_failure_resume(spark, sequences_pdf, seq_parquet, tmp_path):
@@ -67,3 +70,82 @@ def test_checkpoint_partial_failure_resume(spark, sequences_pdf, seq_parquet, tm
     assert r2.payload == r1.payload
     assert r2.n_items == r1.n_items
     assert r2.metrics()["sketch_bytes"] == len(r1.payload)
+    assert r2.n_rows == r2.metrics()["n_rows"] == len(sequences_pdf)
+
+
+def test_checkpoint_file_uri_resume(spark, sequences_pdf, seq_parquet, tmp_path):
+    """A URI checkpoint dir is seen through the Hadoop FileSystem: the
+    rerun resumes instead of appending a duplicate set of rows."""
+    ckpt = (tmp_path / "ckpt_uri").as_uri()
+    r1 = _build(spark, seq_parquet, ckpt)
+    assert r1.built_files == r1.total_files > 0
+    r2 = _build(spark, seq_parquet, ckpt)
+    assert r2.built_files == 0 and r2.resumed_files == r1.total_files
+    assert r2.payload == r1.payload and r2.n_items == r1.n_items
+    assert r2.n_rows == len(sequences_pdf)
+
+
+def test_ckpt_exists_needs_parquet_parts(spark, tmp_path):
+    assert not checkpoint._ckpt_exists(spark, str(tmp_path / "absent"))
+    (tmp_path / "empty").mkdir()
+    (tmp_path / "empty" / "_SUCCESS").write_bytes(b"")
+    assert not checkpoint._ckpt_exists(spark, str(tmp_path / "empty"))
+    assert not checkpoint._ckpt_exists(spark, (tmp_path / "empty").as_uri())
+
+
+def test_full_resume_is_one_spark_job(spark, seq_parquet, tmp_path):
+    ckpt = str(tmp_path / "ckpt_jobs")
+    r1 = _build(spark, seq_parquet, ckpt)
+    sc = spark.sparkContext
+    group = "test_checkpoint.full_resume"
+    sc.setJobGroup(group, "full checkpoint resume")
+    try:
+        r2 = _build(spark, seq_parquet, ckpt)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert r2.built_files == 0 and r2.payload == r1.payload
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_tree_merge_route_matches_driver_route(spark, sequences_pdf, seq_parquet, tmp_path, monkeypatch):
+    """Past the driver budget the partials go through tree_merge; the
+    bytes and counts must not depend on the route."""
+    ckpt = str(tmp_path / "ckpt_tree")
+    r1 = _build(spark, seq_parquet, ckpt)
+    real, calls = checkpoint.tree_merge, []
+
+    def spy(*args, **kwargs):
+        calls.append(kwargs)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(checkpoint, "tree_merge", spy)
+    monkeypatch.setattr(checkpoint, "_DRIVER_MERGE_BYTES", 0)
+    r2 = _build(spark, seq_parquet, ckpt)
+    assert calls, "tree_merge route not taken"
+    assert r2.built_files == 0 and r2.resumed_files == r1.total_files
+    assert r2.payload == r1.payload and r2.n_items == r1.n_items
+    assert r2.n_rows == len(sequences_pdf)
+
+
+def test_driver_budget_counts_dense_growth():
+    """An empty classic-Bloom accumulator serializes sparse (a few
+    bytes), but a built one reaches the dense word array: the driver
+    budget must count the latter."""
+    empty = BloomSketch(SHAPE)._empty()
+    assert len(empty.to_bytes()) < SHAPE.number_of_bytes()
+    assert checkpoint._payload_bound(empty) == SHAPE.number_of_bytes()
+
+
+def test_rows_outside_worklist_are_ignored(spark, sequences_pdf, seq_parquet, tmp_path):
+    ckpt = str(tmp_path / "ckpt_foreign")
+    r1 = _build(spark, seq_parquet, ckpt)
+    foreign = BloomFilter.empty(SHAPE).add_tokens(np.arange(60_000, 61_000, dtype=np.int32))
+    spark.createDataFrame(
+        [("file:/elsewhere/not-an-input.parquet", foreign.to_bytes(), foreign.n_items, 7)],
+        CKPT_SCHEMA,
+    ).write.mode("append").parquet(ckpt)
+    r2 = _build(spark, seq_parquet, ckpt)
+    assert r2.built_files == 0 and r2.resumed_files == r1.total_files
+    assert r2.payload == r1.payload and r2.n_items == r1.n_items
+    assert r2.n_rows == len(sequences_pdf)

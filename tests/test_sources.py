@@ -217,3 +217,38 @@ def test_split_corrupt_survives_free_and_eviction(spark, tmp_path):
     rows = bad.collect()  # must recompute, not raise
     assert len(rows) == 1 and rows[0]["raw_line"] == "broken line"
     assert "doc_id" in bad.columns  # partially-parsed fields for triage
+
+
+@pytest.mark.parametrize(
+    "text, expected",
+    [("4194304", 4 << 20), ("4m", 4 << 20), ("4mb", 4 << 20), ("1g", 1 << 30), ("8K", 8 << 10)],
+)
+def test_parse_byte_string(text, expected):
+    from rusty_bloomfilter_spark.sources import _parse_byte_string
+
+    assert _parse_byte_string(text) == expected
+
+
+@pytest.mark.parametrize("text", ["", "m", "4x", "4mbb", "1.5g", "-1"])
+def test_parse_byte_string_rejects_garbage(text):
+    from rusty_bloomfilter_spark.sources import _parse_byte_string
+
+    with pytest.raises(ValueError):
+        _parse_byte_string(text)
+
+
+def test_fan_out_small_scan_reads_suffixed_open_cost(spark, sequences_pdf, tmp_path):
+    """A "4m" open cost is 4 MiB, not 4 bytes: a small one-split scan
+    still fans out to the session's parallelism."""
+    from rusty_bloomfilter_spark.sources import fan_out_small_scan
+
+    path = str(tmp_path / "small")
+    spark.createDataFrame(sequences_pdf).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    old_cost = spark.conf.get("spark.sql.files.openCostInBytes")
+    spark.conf.set("spark.sql.files.openCostInBytes", "4m")
+    try:
+        out = fan_out_small_scan(spark, df, path=path)
+    finally:
+        spark.conf.set("spark.sql.files.openCostInBytes", old_cost)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
