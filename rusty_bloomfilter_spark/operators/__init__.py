@@ -7,6 +7,7 @@ from .aggregate import (
     build_multi,
     build_multi_by_key,
     build_sketch,
+    build_sketch_bytes,
     collect_multi_bytes,
     collect_sketch_bytes,
     partition_sketches,
@@ -77,6 +78,7 @@ __all__ = [
     "build_multi",
     "build_multi_by_key",
     "build_sketch",
+    "build_sketch_bytes",
     "collect_multi_bytes",
     "collect_sketch_bytes",
     "flat_ngram_hashes",

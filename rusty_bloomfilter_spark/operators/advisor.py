@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sketch import CountMinSketch, HyperLogLog, MisraGries, merge_sketch_payloads
-from .aggregate import build_multi
+from .aggregate import build_multi, collect_multi_bytes
 from .skew import HotKey, _add_scalar, _hot_keys
 
 
@@ -91,13 +91,14 @@ def profile_join_side(
         ("hll", lambda: HyperLogLog(hll_p), upd, merge_sketch_payloads),
         ("mg", lambda: MisraGries(mg_capacity), upd, merge_sketch_payloads),
     ]
-    row = build_multi(df, specs, columns=[key_col], fanout=fanout).collect()[0]
-    n_rows = int(row["n_rows"])
-    mg = MisraGries.from_bytes(bytes(row["payload_mg"]))
+    n_rows, got = collect_multi_bytes(
+        build_multi(df, specs, columns=[key_col]), specs, fanout=fanout
+    )
+    mg = MisraGries.from_bytes(got["mg"][0])
     return SideProfile(
         n_rows=n_rows,
-        ndv_est=float(HyperLogLog.from_bytes(bytes(row["payload_hll"])).estimate()),
-        cms_payload=bytes(row["payload_cms"]),
+        ndv_est=float(HyperLogLog.from_bytes(got["hll"][0]).estimate()),
+        cms_payload=got["cms"][0],
         hot_keys=_hot_keys(mg, n_rows),
     )
 

@@ -3,7 +3,7 @@
 PySpark has no vectorized custom-Aggregator API, so the idiomatic (and
 north-rule-mandated explicit) substitute is:
 
-    stage 1  mapInPandas      one sketch row per *input partition*
+    stage 1  mapInArrow       one sketch row per *input partition*
                               (map-side combine: row data never
                               shuffles — only O(sketch_bytes) rows do)
     stage 2  repartition(fanout) + mapInPandas     partial OR-merge
@@ -13,6 +13,14 @@ This is exactly ``RDD.treeAggregate(depth=2)`` expressed in DataFrame
 form (semantics pinned by the reference's merge matrices,
 /root/reference/src/bloomfilter/mod.rs:621-761: merges are associative
 and commutative, so any tree shape yields the same bytes).
+
+Unkeyed builds that return bytes (``build_multi`` +
+``collect_multi_bytes``, ``build_sketch_bytes``) run stages 2-3 only
+above a driver budget: while partitions x payload bound stays within
+``_DRIVER_MERGE_BYTES`` the stage-1 rows are collected over Arrow in
+the build's own job and merged on the driver, so a build is one Spark
+job with one stage. ``build_sketch``/``tree_merge`` keep the full tree
+for callers that need a lazy single-row DataFrame.
 
 Scale notes (1000-executor / 100 TB framing):
 - Stage 1 scans row data once, in place — zero row shuffle. The only
@@ -38,6 +46,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sketch import Shape
+
 SKETCH_SCHEMA = "payload binary, n_items bigint"
 KEYED_SKETCH_SCHEMA = "key string, payload binary, n_items bigint"
 
@@ -53,6 +63,19 @@ MergePayloadsFn = Callable[[list[bytes]], bytes]
 # payloads regardless of fan-in (merges are associative, so folding
 # early yields the same canonical bytes)
 _FLUSH_AT = 64
+
+# Largest total of stage-1 payloads the driver collects and merges
+# itself: partitions x the bytes one row's payloads can reach. Shared by
+# the unkeyed builds (collect_multi_bytes) and the checkpoint resume.
+_DRIVER_MERGE_BYTES = 256 << 20
+
+
+def _payload_bound(empty) -> int:
+    """Bytes one payload of this sketch can reach: its empty size, or
+    for a sparse-coded Bloom accumulator the dense array it grows into."""
+    shape = getattr(empty, "shape", None)
+    dense = shape.number_of_bytes() if isinstance(shape, Shape) else 0
+    return max(len(empty.to_bytes()), dense)
 
 
 def keyed_payload_merge(
@@ -339,26 +362,25 @@ def build_multi(
     columns: list[str],
     fanout: int = 16,
 ) -> DataFrame:
-    """N GLOBAL sketches in one scan of the input, tree-merged.
+    """N GLOBAL sketches in one scan of the input: stage 1 only.
 
     The unkeyed sibling of ``build_multi_by_key``: every Arrow batch is
     folded into all N accumulators in a single pass — N separate builds
     would scan the same corpus N times, and at 100 TB the scan I/O
-    dominates, so fusing is an N x win on the dominant cost. The
-    shuffle carries one row per partition holding all N payloads side
-    by side; stages 2+3 tree-merge with fan-in bounded by ``fanout``,
-    exactly like ``build_sketch``.
+    dominates, so fusing is an N x win on the dominant cost. Each
+    partition emits one row holding all N payloads side by side;
+    ``collect_multi_bytes`` decides where those rows merge (on the
+    driver, or through the tree above the driver budget) and takes the
+    fan-in there. ``fanout`` is accepted for callers of the earlier
+    single-row form and has no effect here.
 
     ``columns`` must cover every spec's input column (e.g.
     ["tokens", "n_tok"] for token sketches + a length quantile sketch).
 
-    -> single row (n_rows, payload_<name> binary, n_<name> bigint, ...).
+    -> one row per input partition (n_rows, payload_<name> binary,
+    n_<name> bigint, ...), unmerged.
     """
     df = df.select(*columns)
-    schema = _multi_schema(specs)
-    # measured on the input before mapInArrow, shuffle-safely (see
-    # tree_merge note)
-    n_parts = safe_partition_count(df, default=_shuffle_conf(df))
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         accs = [mk() for _, mk, _, _ in specs]
@@ -373,7 +395,15 @@ def build_multi(
             out[f"n_{name}"] = [acc.n_items]
         yield pa.RecordBatch.from_pydict(out)
 
-    partial = df.mapInArrow(build, schema=schema)
+    return df.mapInArrow(build, schema=_multi_schema(specs))
+
+
+def _tree_merge_multi(
+    partial: DataFrame, specs: list[MultiSpec], *, fanout: int, n_parts: int
+) -> DataFrame:
+    """Stages 2+3 for ``build_multi`` rows: the tree levels of
+    ``tree_merge``, every spec merged side by side -> single row."""
+    schema = _multi_schema(specs)
 
     def merge_rows(batches: Iterator[pd.DataFrame], *, emit_empty: bool):
         payloads: dict[str, list[bytes]] = {name: [] for name, *_ in specs}
@@ -418,17 +448,61 @@ def build_multi(
 
 
 def collect_multi_bytes(
-    multi_df: DataFrame, specs: list[MultiSpec]
+    multi_df: DataFrame, specs: list[MultiSpec], *, fanout: int = 16
 ) -> tuple[int, dict[str, tuple[bytes, int]]]:
-    """Driver-side: -> (n_rows, {name: (payload, n_items)})."""
-    rows = multi_df.collect()
-    if not rows:
-        raise ValueError("multi-sketch pipeline produced no rows")
-    row = rows[0]
-    return int(row["n_rows"]), {
-        name: (bytes(row[f"payload_{name}"]), int(row[f"n_{name}"]))
-        for name, *_ in specs
-    }
+    """Merge ``build_multi``'s per-partition rows -> (n_rows,
+    {name: (payload, n_items)}). The one place that decides where they
+    merge, from partitions x the sum of the specs' ``_payload_bound``
+    (known from the sketch configs before the job runs):
+
+    - at or below ``_DRIVER_MERGE_BYTES`` the rows are collected over
+      Arrow by the build's own job (one job, one stage) and each spec
+      merges on the driver; an empty input gives each spec's
+      ``make_empty().to_bytes()``;
+    - above it the rows go through ``_tree_merge_multi`` (fan-in
+      ``fanout``) and the single merged row is collected.
+
+    Merges are associative and commutative, so both routes give the
+    same bytes. The partition count is taken shuffle-safely
+    (``safe_partition_count``), so a post-shuffle input counts as
+    ``spark.sql.shuffle.partitions`` partitions.
+    """
+    n_parts = safe_partition_count(multi_df, default=_shuffle_conf(multi_df))
+    bound = sum(_payload_bound(mk()) for _, mk, _, _ in specs)
+    if n_parts * bound > _DRIVER_MERGE_BYTES:
+        row = _tree_merge_multi(multi_df, specs, fanout=fanout, n_parts=n_parts).collect()[0]
+        return int(row["n_rows"]), {
+            name: (bytes(row[f"payload_{name}"]), int(row[f"n_{name}"]))
+            for name, *_ in specs
+        }
+    table = multi_df.toArrow()
+    out: dict[str, tuple[bytes, int]] = {}
+    for name, mk, _upd, mrg in specs:
+        payloads = table.column(f"payload_{name}").to_pylist()
+        out[name] = (
+            mrg(payloads) if payloads else mk().to_bytes(),
+            sum(table.column(f"n_{name}").to_pylist()),
+        )
+    return sum(table.column("n_rows").to_pylist()), out
+
+
+def build_sketch_bytes(
+    df: DataFrame,
+    make_empty: Callable[[], Any],
+    update: UpdateFn,
+    merge_payloads: MergePayloadsFn,
+    *,
+    columns: list[str],
+    fanout: int = 16,
+) -> tuple[bytes, int]:
+    """One sketch's (payload, n_items): a one-spec ``build_multi``
+    merged by ``collect_multi_bytes`` — the path behind every
+    ``*.build_bytes``. Use ``build_sketch`` for a lazy DataFrame."""
+    spec: list[MultiSpec] = [("sketch", make_empty, update, merge_payloads)]
+    _, out = collect_multi_bytes(
+        build_multi(df, spec, columns=columns), spec, fanout=fanout
+    )
+    return out["sketch"]
 
 
 def build_multi_by_key(

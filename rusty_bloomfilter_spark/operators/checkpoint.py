@@ -34,15 +34,17 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sketch import Shape
-from .aggregate import _FLUSH_AT, MergePayloadsFn, UpdateFn, tree_merge
+from .aggregate import (
+    _DRIVER_MERGE_BYTES,
+    _FLUSH_AT,
+    MergePayloadsFn,
+    UpdateFn,
+    _payload_bound,
+    tree_merge,
+)
 
 CKPT_SCHEMA = "file string, payload binary, n_items bigint, n_rows bigint"
 _PARTIAL_SCHEMA = "payload binary, n_items bigint, n_rows bigint, files array<string>"
-
-# Largest total of partial payloads the driver collects and merges
-# itself: scan partitions x the bytes one payload can reach.
-_DRIVER_MERGE_BYTES = 256 << 20
 
 
 def _list_input_files(spark: SparkSession, input_path: str) -> list[str]:
@@ -99,14 +101,6 @@ class _Folded:
     n_items: int
     n_rows: int
     files: set[str]
-
-
-def _payload_bound(empty) -> int:
-    """Bytes one payload of this sketch can reach: its empty size, or
-    for a sparse-coded Bloom accumulator the dense array it grows into."""
-    shape = getattr(empty, "shape", None)
-    dense = shape.number_of_bytes() if isinstance(shape, Shape) else 0
-    return max(len(empty.to_bytes()), dense)
 
 
 def _fold_checkpoint(

@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sketch import KLLSketch, merge_sketch_payloads
-from .aggregate import build_multi, collect_sketch_bytes
+from .aggregate import build_multi, build_sketch_bytes, collect_multi_bytes
 from .sketches import KllQuantiles
 
 
@@ -51,7 +51,10 @@ def range_boundaries(
     correspondingly fewer, still-correct buckets."""
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
-    payload, _ = collect_sketch_bytes(KllQuantiles(k=k, col=col).build(df, fanout=fanout))
+    kll = KllQuantiles(k=k, col=col)
+    payload, _ = build_sketch_bytes(
+        df, kll._empty, kll._update, kll._merge, columns=[col], fanout=fanout
+    )
     sk = KLLSketch.from_bytes(payload)
     qs = [i / n_buckets for i in range(1, n_buckets)]
     cuts = [float(sk.quantile(q)) for q in qs]
@@ -146,12 +149,14 @@ def multi_range_boundaries(
         (f"c{i}", sk._empty, sk._update, merge_sketch_payloads)
         for i, sk in enumerate(sketches)
     ]
-    row = build_multi(df.select(*cols), specs, columns=list(cols), fanout=fanout).collect()[0]
+    _, got = collect_multi_bytes(
+        build_multi(df.select(*cols), specs, columns=list(cols)), specs, fanout=fanout
+    )
     qs = [i / n_buckets for i in range(1, n_buckets)]
     out: dict[str, list[float]] = {}
     worst_err = 0.0
     for i, c in enumerate(cols):
-        sk = KLLSketch.from_bytes(bytes(row[f"payload_c{i}"]))
+        sk = KLLSketch.from_bytes(got[f"c{i}"][0])
         uniq: list[float] = []
         for cut in (float(sk.quantile(q)) for q in qs):
             if not uniq or cut > uniq[-1]:

@@ -45,11 +45,12 @@ def percentile_normalize(
     Two passes over the corpus (build, then annotate), zero joins,
     zero row shuffles; error <= the sketch's rank_error() uniformly.
     """
-    from .aggregate import collect_sketch_bytes
+    from .aggregate import build_sketch_bytes
     from .sketches import KllQuantiles
 
-    payload, _ = collect_sketch_bytes(
-        KllQuantiles(k, col=value_col).build(df, fanout=fanout)
+    kll = KllQuantiles(k, col=value_col)
+    payload, _ = build_sketch_bytes(
+        df, kll._empty, kll._update, kll._merge, columns=[value_col], fanout=fanout
     )
     bc = df.sparkSession.sparkContext.broadcast(payload)
     # StructType.add MUTATES (and returns) the instance — calling it on

@@ -16,8 +16,8 @@ feature; ``profile_table`` makes exactly ONE pass:
   NULLs masked out so they never count as a value), a KLL per numeric
   column (quantiles), and a Misra-Gries per integer column (hot values
   with deterministic bounds, feeding straight into skew salting
-  decisions). Only sketch rows shuffle; the driver receives one row of
-  payloads plus the metrics map, never data.
+  decisions). No row data moves; the driver receives one row of
+  payloads per partition plus the metrics map, never data.
 
 Every estimate carries its published error bound in the result
 (``ndv_rel_error``, ``quantile_rank_error``, ``hot_key_err_ub``) — no
@@ -53,7 +53,7 @@ from pyspark.sql.types import (
 )
 
 from ..sketch import HyperLogLog, KLLSketch, MisraGries, merge_sketch_payloads
-from .aggregate import build_multi
+from .aggregate import build_multi, collect_multi_bytes
 from .skew import HotKey, _hot_keys
 
 _INT_TYPES = (ByteType, ShortType, IntegerType, LongType)
@@ -203,9 +203,9 @@ def profile_table(
                 (f"mg_{i}", _mk(MisraGries, mg_capacity), _mg_update(f"__k_{i}"), merge_sketch_payloads)
             )
 
-    row = build_multi(
-        observed.select(*proj), specs, columns=sketch_cols, fanout=fanout
-    ).collect()[0]
+    _, got = collect_multi_bytes(
+        build_multi(observed.select(*proj), specs, columns=sketch_cols), specs, fanout=fanout
+    )
     totals = obs.get
 
     out: list[ColumnProfile] = []
@@ -213,18 +213,18 @@ def profile_table(
     ndv_err = 1.04 / math.sqrt(2.0**hll_p)
     for i, c in enumerate(columns):
         t = schema[c]
-        hll = HyperLogLog.from_bytes(bytes(row[f"payload_hll_{i}"]))
+        hll = HyperLogLog.from_bytes(got[f"hll_{i}"][0])
         qs: dict[float, float] = {}
         rank_err = 0.0
         if isinstance(t, _INT_TYPES + _FLOAT_TYPES):
-            kll = KLLSketch.from_bytes(bytes(row[f"payload_kll_{i}"]))
+            kll = KLLSketch.from_bytes(got[f"kll_{i}"][0])
             if kll.n_items:
                 qs = {q: float(kll.quantile(q)) for q in quantiles}
             rank_err = kll.rank_error()
         hot: list[HotKey] = []
         err_ub = 0
         if isinstance(t, _INT_TYPES):
-            mg = MisraGries.from_bytes(bytes(row[f"payload_mg_{i}"]))
+            mg = MisraGries.from_bytes(got[f"mg_{i}"][0])
             n_vals = n_rows - int(totals[f"nulls_{i}"])
             hot = _hot_keys(mg, n_vals)
             err_ub = int(mg.err_ub)

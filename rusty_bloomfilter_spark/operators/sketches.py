@@ -31,7 +31,7 @@ from ..sketch import (
     tokens_to_u64,
 )
 from ..sketch.hashing import splitmix64
-from .aggregate import build_by_key, build_sketch, collect_sketch_bytes
+from .aggregate import build_by_key, build_sketch, build_sketch_bytes
 
 # ---------------------------------------------------------------------------
 # Batch flattening helpers (ragged array<int> columns -> flat numpy)
@@ -321,7 +321,9 @@ class BloomSketch:
         )
 
     def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
+        return build_sketch_bytes(
+            df, self._empty, self._update, merge_payloads, columns=[self.col], fanout=fanout
+        )
 
     def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
         """-> DataFrame (key, payload, n_items), one Bloom per key."""
@@ -450,7 +452,9 @@ class BlockedBloomSketch:
         )
 
     def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
+        return build_sketch_bytes(
+            df, self._empty, self._update, merge_sketch_payloads, columns=[self.col], fanout=fanout
+        )
 
     def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
         return build_by_key(
@@ -508,7 +512,9 @@ class HllSketch:
         )
 
     def estimate(self, df: DataFrame, *, fanout: int = 16) -> float:
-        payload, _ = collect_sketch_bytes(self.build(df, fanout=fanout))
+        payload, _ = build_sketch_bytes(
+            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
+        )
         return HyperLogLog.from_bytes(payload).estimate()
 
     def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
@@ -566,7 +572,9 @@ class CmsSketch:
         )
 
     def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
+        return build_sketch_bytes(
+            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
+        )
 
     def estimate_counts(self, payload: bytes, tokens: np.ndarray) -> np.ndarray:
         return CountMinSketch.from_bytes(payload).query_tokens(tokens)
@@ -625,7 +633,9 @@ class AmsSketch:
         )
 
     def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
+        return build_sketch_bytes(
+            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
+        )
 
     def estimate_counts(self, payload: bytes, tokens: np.ndarray) -> np.ndarray:
         return CountSketch.from_bytes(payload).query_tokens(tokens)
@@ -670,7 +680,9 @@ class MgSketch:
         )
 
     def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
+        return build_sketch_bytes(
+            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -705,7 +717,9 @@ class TDigestQuantiles:
     def quantiles(self, df: DataFrame, qs: list[float], *, fanout: int = 16) -> list[float]:
         from ..sketch import TDigest
 
-        payload, _ = collect_sketch_bytes(self.build(df, fanout=fanout))
+        payload, _ = build_sketch_bytes(
+            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
+        )
         sk = TDigest.from_bytes(payload)
         return [float(sk.quantile(q)) for q in qs]
 
@@ -738,7 +752,9 @@ class KllQuantiles:
         )
 
     def quantiles(self, df: DataFrame, qs: list[float], *, fanout: int = 16) -> list[float]:
-        payload, _ = collect_sketch_bytes(self.build(df, fanout=fanout))
+        payload, _ = build_sketch_bytes(
+            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
+        )
         sk = KLLSketch.from_bytes(payload)
         return [float(sk.quantile(q)) for q in qs]
 
@@ -808,7 +824,9 @@ class DDQuantiles:
         )
 
     def quantiles(self, df: DataFrame, qs: list[float], *, fanout: int = 16) -> list[float]:
-        payload, _ = collect_sketch_bytes(self.build(df, fanout=fanout))
+        payload, _ = build_sketch_bytes(
+            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
+        )
         return [float(v) for v in DDSketch.from_bytes(payload).quantiles(list(qs))]
 
     def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
@@ -891,7 +909,9 @@ class CountingBloomSketch:
         )
 
     def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
+        return build_sketch_bytes(
+            df, self._empty, self._update, merge_sketch_payloads, columns=[self.col], fanout=fanout
+        )
 
     def might_contain_udf(self, payload: bytes, spark: SparkSession | None = None):
         """Vectorized membership probe for a scalar int column against

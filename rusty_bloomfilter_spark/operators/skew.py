@@ -44,7 +44,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from ..sketch import CountSketch, HyperLogLog, MisraGries, merge_sketch_payloads
-from .aggregate import build_multi
+from .aggregate import build_multi, collect_multi_bytes
 from .sketches import _scalar_values
 
 
@@ -118,8 +118,8 @@ def key_skew_profile(
     """One-scan skew profile of a scalar int shuffle/join key column.
 
     Exactly one corpus scan (build_multi fuses all three updates per
-    Arrow batch); only sketch rows shuffle; the driver receives one row
-    of payloads, never key data. ``mg_capacity`` bounds which keys can
+    Arrow batch); the driver receives one row of payloads per
+    partition, never key data. ``mg_capacity`` bounds which keys can
     surface as hot: every key with true share > 1/(capacity+1) is
     guaranteed present (MG superset guarantee)."""
     upd = lambda acc, batch: _add_scalar(acc, batch, key_col)  # noqa: E731
@@ -128,11 +128,12 @@ def key_skew_profile(
         ("hll", lambda: HyperLogLog(hll_p), upd, merge_sketch_payloads),
         ("mg", lambda: MisraGries(mg_capacity), upd, merge_sketch_payloads),
     ]
-    row = build_multi(df, specs, columns=[key_col], fanout=fanout).collect()[0]
-    n_rows = int(row["n_rows"])
-    ams = CountSketch.from_bytes(bytes(row["payload_ams"]))
-    hll = HyperLogLog.from_bytes(bytes(row["payload_hll"]))
-    mg = MisraGries.from_bytes(bytes(row["payload_mg"]))
+    n_rows, got = collect_multi_bytes(
+        build_multi(df, specs, columns=[key_col]), specs, fanout=fanout
+    )
+    ams = CountSketch.from_bytes(got["ams"][0])
+    hll = HyperLogLog.from_bytes(got["hll"][0])
+    mg = MisraGries.from_bytes(got["mg"][0])
     hot = _hot_keys(mg, n_rows)
     return SkewProfile(
         n_rows=n_rows,

@@ -24,7 +24,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from ..sketch import FrequentDirections, GramMatrix, merge_sketch_payloads
-from .aggregate import build_sketch, collect_sketch_bytes
+from .aggregate import build_sketch, build_sketch_bytes
 from .similarity import _stack_rows
 
 
@@ -53,7 +53,9 @@ class GramSketch:
         )
 
     def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
+        return build_sketch_bytes(
+            df, self._empty, self._update, self._merge, columns=[self.vec_col], fanout=fanout
+        )
 
 
 class FreqDirsSketch:
@@ -80,7 +82,9 @@ class FreqDirsSketch:
         )
 
     def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return collect_sketch_bytes(self.build(df, fanout=fanout))
+        return build_sketch_bytes(
+            df, self._empty, self._update, self._merge, columns=[self.vec_col], fanout=fanout
+        )
 
 
 def embedding_gram(

@@ -522,3 +522,160 @@ def test_dedup_counts_declines_uint64():
     from rusty_bloomfilter_spark.operators.sketches import dedup_counts
 
     assert dedup_counts(np.arange(1 << 15, dtype=np.uint64) % 100) is None
+
+
+# ---------------------------------------------------------------------------
+# Unkeyed builds merge their stage-1 rows on the driver under the byte
+# budget, through the tree above it
+# ---------------------------------------------------------------------------
+
+
+def _scalar_specs():
+    """Canonical-merge sketches (OR / max / add) over scalar columns:
+    their bytes cannot depend on partitioning or merge route."""
+    from rusty_bloomfilter_spark.sketch import merge_payloads, merge_sketch_payloads
+
+    bloom = BloomSketch.for_np(n=20_000, p=1e-3, col="k", scalar=True)
+    hll = HllSketch(p=10, col="k", scalar=True)
+    cms = CmsSketch(d=3, w=1 << 10, col="k", scalar=True)
+    return [
+        ("bloom", bloom._empty, bloom._update, merge_payloads),
+        ("hll", hll._empty, hll._update, merge_sketch_payloads),
+        ("cms", cms._empty, cms._update, merge_sketch_payloads),
+    ]
+
+
+def _scalar_df(spark, n_parts):
+    from pyspark.sql import functions as F
+
+    return spark.range(0, 20_000, numPartitions=n_parts).select(
+        (F.col("id") * 7919 % 5003).alias("k")
+    )
+
+
+def _jobs_and_stages(spark, group, fn):
+    """Run ``fn`` under a job group -> (result, jobs, stages)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    return out, len(jobs), len(stages)
+
+
+def test_unkeyed_builds_run_one_job_one_stage(spark, sequences_pdf, tmp_path):
+    """build_bytes and collect_multi_bytes(build_multi(...)) under the
+    driver budget: the stage-1 job is the whole build (the tree merge
+    used to add a job and two stages)."""
+    from rusty_bloomfilter_spark.operators import (
+        BlockedBloomSketch,
+        build_multi,
+        collect_multi_bytes,
+    )
+
+    path = str(tmp_path / "seq")
+    spark.createDataFrame(sequences_pdf).repartition(3).write.parquet(path)
+    df = spark.read.parquet(path)
+    sk = BlockedBloomSketch.for_np(n=300_000, p=1e-3, ngram=3)
+    (payload, n_items), jobs, stages = _jobs_and_stages(
+        spark, "test_spark_build.build_bytes", lambda: sk.build_bytes(df)
+    )
+    assert (jobs, stages) == (1, 1)
+    assert (payload, n_items) == collect_sketch_bytes(sk.build(df))
+
+    hll, cms = HllSketch(p=12), CmsSketch(d=3, w=1 << 12)
+    specs = [
+        ("hll", hll._empty, hll._update, hll._merge),
+        ("cms", cms._empty, cms._update, cms._merge),
+    ]
+    (n_rows, got), jobs, stages = _jobs_and_stages(
+        spark,
+        "test_spark_build.build_multi",
+        lambda: collect_multi_bytes(build_multi(df, specs, columns=["tokens"]), specs),
+    )
+    assert (jobs, stages) == (1, 1)
+    assert n_rows == len(sequences_pdf)
+    assert got["hll"] == collect_sketch_bytes(hll.build(df))
+    assert got["cms"] == collect_sketch_bytes(cms.build(df))
+
+
+def test_tree_route_matches_driver_route(spark, monkeypatch):
+    """Past the driver budget the rows go through the tree; with more
+    partitions than ``fanout`` an intermediate level runs. Payloads and
+    counts must not depend on the route."""
+    from rusty_bloomfilter_spark.operators import aggregate
+
+    df = _scalar_df(spark, 7)
+    specs = _scalar_specs()
+    bloom = BloomSketch.for_np(n=20_000, p=1e-3, col="k", scalar=True)
+
+    def build():
+        multi = aggregate.collect_multi_bytes(
+            aggregate.build_multi(df, specs, columns=["k"]), specs, fanout=2
+        )
+        return multi, bloom.build_bytes(df, fanout=2)
+
+    driver = build()
+    real, calls = aggregate._tree_merge_multi, []
+
+    def spy(partial, specs, *, fanout, n_parts):
+        calls.append((fanout, n_parts))
+        return real(partial, specs, fanout=fanout, n_parts=n_parts)
+
+    monkeypatch.setattr(aggregate, "_tree_merge_multi", spy)
+    monkeypatch.setattr(aggregate, "_DRIVER_MERGE_BYTES", 0)
+    tree = build()
+    assert calls == [(2, 7), (2, 7)], "tree route not taken"
+    assert tree == driver
+    assert driver[0][0] == 20_000
+    assert {name: n for name, (_, n) in driver[0][1].items()} == {
+        "bloom": 20_000, "hll": 20_000, "cms": 20_000,
+    }
+
+
+def test_build_multi_partition_invariance(spark):
+    """7 partitions merged on the driver == the 1-partition build, for
+    every spec."""
+    from rusty_bloomfilter_spark.operators import build_multi, collect_multi_bytes
+
+    specs = _scalar_specs()
+    seven, one = (
+        collect_multi_bytes(
+            build_multi(_scalar_df(spark, n), specs, columns=["k"]), specs
+        )
+        for n in (7, 1)
+    )
+    assert seven[0] == one[0] == 20_000
+    for name, *_ in specs:
+        assert seven[1][name] == one[1][name], name
+
+
+def test_ngram_hashes_shorter_than_n_are_empty(spark):
+    """Inputs shorter than the n-gram width hash to no n-grams (an empty
+    uint64 array, not a broadcast error), and a build over such rows is
+    the empty sketch."""
+    import pandas as pd
+
+    from rusty_bloomfilter_spark.operators import BlockedBloomSketch, flat_ngram_hashes
+    from rusty_bloomfilter_spark.sketch import ngram_hashes
+
+    for toks in (np.array([], np.int32), np.array([7], np.int32), np.array([7, 8], np.int32)):
+        h = ngram_hashes(toks, 3)
+        assert h.dtype == np.uint64 and h.size == 0
+    # every row shorter than n, though the concatenated stream is longer
+    h = flat_ngram_hashes(np.arange(7, dtype=np.int64), np.array([2, 1, 2, 2]), 3)
+    assert h.dtype == np.uint64 and h.size == 0
+
+    short = spark.createDataFrame(
+        pd.DataFrame({"tokens": [np.array(t, np.int32) for t in ([1, 2], [3], [], [4, 5])]})
+    )
+    sk = BlockedBloomSketch.for_np(n=10_000, p=1e-3, ngram=3)
+    payload, n_items = sk.build_bytes(short)
+    assert n_items == 0
+    assert payload == sk._empty().to_bytes()

@@ -61,7 +61,7 @@ from rusty_bloomfilter_spark.sketch import Shape
 seq = spark.read.parquet("/tmp/bench_seq_scaling.parquet")
 n_tokens = seq.agg({{"n_tok": "sum"}}).collect()[0][0]
 
-from rusty_bloomfilter_spark.operators.aggregate import build_multi
+from rusty_bloomfilter_spark.operators.aggregate import build_multi, collect_multi_bytes
 from rusty_bloomfilter_spark.operators.sketches import AmsSketch, MgSketch
 from rusty_bloomfilter_spark.sketch import merge_sketch_payloads
 
@@ -73,7 +73,7 @@ mg = MgSketch(1024, col="tokens")
 specs = [("ams", ams._empty, ams._update, merge_sketch_payloads),
          ("mg", mg._empty, mg._update, merge_sketch_payloads)]
 def profile_once():
-    build_multi(seq.select("tokens"), specs, columns=["tokens"], fanout=cpus).collect()
+    collect_multi_bytes(build_multi(seq.select("tokens"), specs, columns=["tokens"]), specs, fanout=cpus)
 # warm workers with FULL-SIZE runs (page-fault warmup dominates first
 # touches of large buffers on this microVM; small warmups bias the
 # first timed job)
