@@ -16,8 +16,9 @@ and commutative, so any tree shape yields the same bytes).
 
 Unkeyed builds that return bytes (``build_multi`` +
 ``collect_multi_bytes``, ``build_sketch_bytes``) run stages 2-3 only
-above a driver budget: while partitions x payload bound stays within
-``_DRIVER_MERGE_BYTES`` the stage-1 rows are collected over Arrow in
+above a driver budget: while partitions x the largest payload each
+sketch's config can serialize to stays within ``_DRIVER_MERGE_BYTES``
+(``_merges_on_driver``) the stage-1 rows are collected over Arrow in
 the build's own job and merged on the driver, so a build is one Spark
 job with one stage. ``build_sketch``/``tree_merge`` keep the full tree
 for callers that need a lazy single-row DataFrame.
@@ -46,8 +47,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sketch import Shape
-
 SKETCH_SCHEMA = "payload binary, n_items bigint"
 KEYED_SKETCH_SCHEMA = "key string, payload binary, n_items bigint"
 
@@ -66,16 +65,21 @@ _FLUSH_AT = 64
 
 # Largest total of stage-1 payloads the driver collects and merges
 # itself: partitions x the bytes one row's payloads can reach. Shared by
-# the unkeyed builds (collect_multi_bytes) and the checkpoint resume.
+# the unkeyed builds (collect_multi_bytes) and the checkpoint resume
+# through _merges_on_driver.
 _DRIVER_MERGE_BYTES = 256 << 20
 
 
-def _payload_bound(empty) -> int:
-    """Bytes one payload of this sketch can reach: its empty size, or
-    for a sparse-coded Bloom accumulator the dense array it grows into."""
-    shape = getattr(empty, "shape", None)
-    dense = shape.number_of_bytes() if isinstance(shape, Shape) else 0
-    return max(len(empty.to_bytes()), dense)
+def _merges_on_driver(n_parts: int, empties: list) -> bool:
+    """The driver-budget rule: True iff ``n_parts`` payloads of every
+    sketch in ``empties``, each at the largest size its config can
+    serialize to (``max_payload_bytes()``), fit in
+    ``_DRIVER_MERGE_BYTES``. A sketch that declares no maximum always
+    merges through the tree."""
+    bounds = [getattr(e, "max_payload_bytes", None) for e in empties]
+    if None in bounds:
+        return False
+    return n_parts * sum(b() for b in bounds) <= _DRIVER_MERGE_BYTES
 
 
 def keyed_payload_merge(
@@ -452,15 +456,17 @@ def collect_multi_bytes(
 ) -> tuple[int, dict[str, tuple[bytes, int]]]:
     """Merge ``build_multi``'s per-partition rows -> (n_rows,
     {name: (payload, n_items)}). The one place that decides where they
-    merge, from partitions x the sum of the specs' ``_payload_bound``
-    (known from the sketch configs before the job runs):
+    merge, by ``_merges_on_driver``: partitions x the sum of the specs'
+    largest payload sizes (known from the sketch configs before the job
+    runs) against ``_DRIVER_MERGE_BYTES``:
 
-    - at or below ``_DRIVER_MERGE_BYTES`` the rows are collected over
-      Arrow by the build's own job (one job, one stage) and each spec
-      merges on the driver; an empty input gives each spec's
+    - within the budget the rows are collected over Arrow by the
+      build's own job (one job, one stage) and each spec merges on the
+      driver; an empty input gives each spec's
       ``make_empty().to_bytes()``;
-    - above it the rows go through ``_tree_merge_multi`` (fan-in
-      ``fanout``) and the single merged row is collected.
+    - above it, or when a spec's sketch declares no largest size, the
+      rows go through ``_tree_merge_multi`` (fan-in ``fanout``) and
+      the single merged row is collected.
 
     Merges are associative and commutative, so both routes give the
     same bytes. The partition count is taken shuffle-safely
@@ -468,8 +474,7 @@ def collect_multi_bytes(
     ``spark.sql.shuffle.partitions`` partitions.
     """
     n_parts = safe_partition_count(multi_df, default=_shuffle_conf(multi_df))
-    bound = sum(_payload_bound(mk()) for _, mk, _, _ in specs)
-    if n_parts * bound > _DRIVER_MERGE_BYTES:
+    if not _merges_on_driver(n_parts, [mk() for _, mk, _, _ in specs]):
         row = _tree_merge_multi(multi_df, specs, fanout=fanout, n_parts=n_parts).collect()[0]
         return int(row["n_rows"]), {
             name: (bytes(row[f"payload_{name}"]), int(row[f"n_{name}"]))

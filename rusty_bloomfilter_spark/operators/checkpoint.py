@@ -13,9 +13,10 @@ sketch that also carries its row counts and the files it covered. The
 driver collects the partials over Arrow and merges them; the union of
 their files is the done-list. A full resume is therefore one Spark
 job; a cold or partial build adds its build-and-append job and a fold
-of just the rows it appended. While the partials fit in
-``_DRIVER_MERGE_BYTES`` they merge on the driver; above it they go
-through the distributed tree merge first.
+of just the rows it appended. While the partials fit the driver
+budget (``aggregate._merges_on_driver``, shared with the unkeyed
+builds) they merge on the driver; above it they go through the
+distributed tree merge first.
 
 At 100 TB scale this is the natural granularity: a file (or Iceberg
 data file) is the retry/skip unit; the checkpoint table stays tiny
@@ -35,11 +36,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .aggregate import (
-    _DRIVER_MERGE_BYTES,
     _FLUSH_AT,
     MergePayloadsFn,
     UpdateFn,
-    _payload_bound,
+    _merges_on_driver,
     tree_merge,
 )
 
@@ -108,7 +108,7 @@ def _fold_checkpoint(
     ckpt_dir: str,
     work: list[str],
     merge_payloads: MergePayloadsFn,
-    payload_bound: int,
+    empty,
     fanout: int,
 ) -> _Folded:
     """Fold the checkpoint rows of ``work``'s files in one read: one
@@ -145,7 +145,7 @@ def _fold_checkpoint(
 
     folded = ckpt.mapInArrow(fold, schema=_PARTIAL_SCHEMA)
     try:
-        if n_parts * payload_bound <= _DRIVER_MERGE_BYTES:
+        if _merges_on_driver(n_parts, [empty]):
             table = folded.toArrow()
             payloads = table.column("payload").to_pylist()
         else:
@@ -212,16 +212,16 @@ def build_with_checkpoint(
     4. merge the folds' partials on the driver
 
     Rows of files outside the work-list are ignored. Partials merge on
-    the driver while scan partitions x payload bytes stay within
-    ``_DRIVER_MERGE_BYTES``; above it ``tree_merge`` (with ``fanout``)
-    merges them first. Killing the job mid-build loses at most the
+    the driver while scan partitions x the sketch's largest payload
+    stay within ``aggregate._DRIVER_MERGE_BYTES``; above it
+    ``tree_merge`` (with ``fanout``) merges them first. Killing the job mid-build loses at most the
     in-flight files; rerunning skips everything already persisted.
     """
     files = _list_input_files(spark, input_path)
     empty = make_empty()
     fold = partial(
         _fold_checkpoint, spark, ckpt_dir, merge_payloads=merge_payloads,
-        payload_bound=_payload_bound(empty), fanout=fanout,
+        empty=empty, fanout=fanout,
     )
     folds: list[_Folded] = []
     if _ckpt_exists(spark, ckpt_dir):

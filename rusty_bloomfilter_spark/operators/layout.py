@@ -36,8 +36,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..sketch import KLLSketch, merge_sketch_payloads
-from .aggregate import build_multi, build_sketch_bytes, collect_multi_bytes
+from ..sketch import KLLSketch
+from .aggregate import build_multi, collect_multi_bytes
 from .sketches import KllQuantiles
 
 
@@ -51,10 +51,7 @@ def range_boundaries(
     correspondingly fewer, still-correct buckets."""
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
-    kll = KllQuantiles(k=k, col=col)
-    payload, _ = build_sketch_bytes(
-        df, kll._empty, kll._update, kll._merge, columns=[col], fanout=fanout
-    )
+    payload, _ = KllQuantiles(k=k, col=col).build_bytes(df, fanout=fanout)
     sk = KLLSketch.from_bytes(payload)
     qs = [i / n_buckets for i in range(1, n_buckets)]
     cuts = [float(sk.quantile(q)) for q in qs]
@@ -146,7 +143,7 @@ def multi_range_boundaries(
         raise ValueError("need at least one column")
     sketches = [KllQuantiles(k=k, col=c) for c in cols]
     specs = [
-        (f"c{i}", sk._empty, sk._update, merge_sketch_payloads)
+        (f"c{i}", sk._empty, sk._update, sk._merge)
         for i, sk in enumerate(sketches)
     ]
     _, got = collect_multi_bytes(

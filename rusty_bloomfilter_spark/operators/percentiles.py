@@ -45,13 +45,9 @@ def percentile_normalize(
     Two passes over the corpus (build, then annotate), zero joins,
     zero row shuffles; error <= the sketch's rank_error() uniformly.
     """
-    from .aggregate import build_sketch_bytes
     from .sketches import KllQuantiles
 
-    kll = KllQuantiles(k, col=value_col)
-    payload, _ = build_sketch_bytes(
-        df, kll._empty, kll._update, kll._merge, columns=[value_col], fanout=fanout
-    )
+    payload, _ = KllQuantiles(k, col=value_col).build_bytes(df, fanout=fanout)
     bc = df.sparkSession.sparkContext.broadcast(payload)
     # StructType.add MUTATES (and returns) the instance — calling it on
     # df.schema would corrupt the input frame's cached schema; build a

@@ -37,25 +37,28 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..sketch import merge_sketch_payloads
 from ..sketch.iblt import IBLT
-from .aggregate import build_sketch
+from .aggregate import build_sketch, build_sketch_bytes
 from .sketches import _scalar_values
+
+
+def _keyset_iblt_spec(df: DataFrame, key_col: str, max_diff: int, k: int):
+    """(distinct keys, make_empty, update, merge) of the key-set IBLT
+    (set semantics — the sketch XOR-cancels repeats, so the distinct()
+    is load-bearing, not an optimization)."""
+    keys = df.select(F.col(key_col).alias("key")).filter(F.col("key").isNotNull()).distinct()
+
+    def update(acc: IBLT, batch) -> None:
+        acc.add_u64(_scalar_values(batch, "key").astype(np.uint64))
+
+    return keys, lambda: IBLT.for_diff(max_diff, k), update, merge_sketch_payloads
 
 
 def build_keyset_iblt(
     df: DataFrame, key_col: str, *, max_diff: int, k: int = 4
 ) -> DataFrame:
     """One (payload, n_items) row: the IBLT of the DISTINCT values of
-    ``key_col`` (set semantics — the sketch XOR-cancels repeats, so the
-    distinct() is load-bearing, not an optimization)."""
-    keys = df.select(F.col(key_col).alias("key")).filter(F.col("key").isNotNull()).distinct()
-
-    def update(acc: IBLT, batch) -> None:
-        acc.add_u64(_scalar_values(batch, "key").astype(np.uint64))
-
-    return build_sketch(
-        keys, lambda: IBLT.for_diff(max_diff, k), update, merge_sketch_payloads,
-        columns=["key"],
-    )
+    ``key_col``."""
+    return build_sketch(*_keyset_iblt_spec(df, key_col, max_diff, k), columns=["key"])
 
 
 def set_reconcile(
@@ -71,9 +74,9 @@ def set_reconcile(
     ``max_diff``; raises ValueError on decode failure (undersized
     table), never a silently-partial answer."""
     spark = snap_a.sparkSession
-    pa_ = build_keyset_iblt(snap_a, key_col, max_diff=max_diff, k=k).collect()[0]
-    pb_ = build_keyset_iblt(snap_b, key_col, max_diff=max_diff, k=k).collect()[0]
-    diff = IBLT.from_bytes(pa_["payload"]).subtract(IBLT.from_bytes(pb_["payload"]))
+    pa_, _ = build_sketch_bytes(*_keyset_iblt_spec(snap_a, key_col, max_diff, k), columns=["key"])
+    pb_, _ = build_sketch_bytes(*_keyset_iblt_spec(snap_b, key_col, max_diff, k), columns=["key"])
+    diff = IBLT.from_bytes(pa_).subtract(IBLT.from_bytes(pb_))
     only_a, only_b, complete = diff.peel()
     if not complete:
         raise ValueError(

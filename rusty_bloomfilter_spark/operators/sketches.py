@@ -253,12 +253,42 @@ def flat_ngram_hashes(flat: np.ndarray, lengths: np.ndarray, n: int) -> np.ndarr
     return h[keep]
 
 
+class _ColumnSketch:
+    """The build entry points every column sketch shares. A subclass
+    defines its spec once: ``_empty()``, ``_update(acc, batch)``,
+    ``_merge`` and the input ``_columns()``; all three builds read it."""
+
+    _merge = staticmethod(merge_sketch_payloads)
+
+    def _columns(self) -> list[str]:
+        return [self.col]
+
+    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
+        """-> single-row DataFrame (payload binary, n_items bigint)."""
+        return build_sketch(
+            df, self._empty, self._update, self._merge, columns=self._columns(), fanout=fanout
+        )
+
+    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
+        """-> (payload, n_items) of the whole input."""
+        return build_sketch_bytes(
+            df, self._empty, self._update, self._merge, columns=self._columns(), fanout=fanout
+        )
+
+    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
+        """-> DataFrame (key, payload, n_items), one sketch per key."""
+        return build_by_key(
+            df, key_col, self._empty, self._update, self._merge,
+            columns=[key_col, *self._columns()], salt=salt,
+        )
+
+
 # ---------------------------------------------------------------------------
 # Bloom
 # ---------------------------------------------------------------------------
 
 
-class BloomSketch:
+class BloomSketch(_ColumnSketch):
     """Distributed Bloom filter over a token-array (or scalar) column.
 
     ``ngram`` > 1 inserts within-row token n-grams instead of single
@@ -314,28 +344,7 @@ class BloomSketch:
 
         return SparseBloomBuilder(self.shape)
 
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        """-> single-row DataFrame (payload binary, n_items bigint)."""
-        return build_sketch(
-            df, self._empty, self._update, merge_payloads, columns=[self.col], fanout=fanout
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return build_sketch_bytes(
-            df, self._empty, self._update, merge_payloads, columns=[self.col], fanout=fanout
-        )
-
-    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
-        """-> DataFrame (key, payload, n_items), one Bloom per key."""
-        return build_by_key(
-            df,
-            key_col,
-            self._empty,
-            self._update,
-            merge_payloads,
-            columns=[key_col, self.col],
-            salt=salt,
-        )
+    _merge = staticmethod(merge_payloads)
 
     # -- probing -----------------------------------------------------------
 
@@ -404,7 +413,7 @@ class BloomSketch:
 # ---------------------------------------------------------------------------
 
 
-class BlockedBloomSketch:
+class BlockedBloomSketch(_ColumnSketch):
     """Distributed split-block Bloom filter (see ..sketch.blocked for
     the published design). Same pipeline as BloomSketch; ~3x per-core
     build/probe throughput and cache-friendly under full parallelism —
@@ -445,23 +454,6 @@ class BlockedBloomSketch:
             if h.size:
                 acc.add_hashes(h)
 
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, merge_sketch_payloads,
-            columns=[self.col], fanout=fanout,
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return build_sketch_bytes(
-            df, self._empty, self._update, merge_sketch_payloads, columns=[self.col], fanout=fanout
-        )
-
-    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
-        return build_by_key(
-            df, key_col, self._empty, self._update, merge_sketch_payloads,
-            columns=[key_col, self.col], salt=salt,
-        )
-
     def count_contained(self, df: DataFrame, payload: bytes, spark: SparkSession | None = None) -> tuple[int, int]:
         return count_contained_in(df, payload, self.col, scalar=self.scalar, spark=spark)
 
@@ -474,7 +466,7 @@ class BlockedBloomSketch:
 # ---------------------------------------------------------------------------
 
 
-class HllSketch:
+class HllSketch(_ColumnSketch):
     """Distributed distinct-count over tokens (array col) or a scalar col."""
 
     def __init__(self, p: int = 14, *, col: str = "tokens", scalar: bool = False):
@@ -504,29 +496,9 @@ class HllSketch:
                     acc.add_tokens(dc[0])
                     acc.n_items += toks.size - dc[0].size
 
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
     def estimate(self, df: DataFrame, *, fanout: int = 16) -> float:
-        payload, _ = build_sketch_bytes(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
+        payload, _ = self.build_bytes(df, fanout=fanout)
         return HyperLogLog.from_bytes(payload).estimate()
-
-    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
-        return build_by_key(
-            df,
-            key_col,
-            self._empty,
-            self._update,
-            self._merge,
-            columns=[key_col, self.col],
-            salt=salt,
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -534,7 +506,7 @@ class HllSketch:
 # ---------------------------------------------------------------------------
 
 
-class CmsSketch:
+class CmsSketch(_ColumnSketch):
     """Distributed token-frequency sketch (count-min). ``scalar=True``
     sketches a scalar key column (join-size estimation via
     ``CountMinSketch.inner_product``) instead of an array column."""
@@ -564,28 +536,8 @@ class CmsSketch:
                 # to small exact ints, so the table bits are identical
                 acc.add_u64(tokens_to_u64(dc[0]), dc[1])
 
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return build_sketch_bytes(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
     def estimate_counts(self, payload: bytes, tokens: np.ndarray) -> np.ndarray:
         return CountMinSketch.from_bytes(payload).query_tokens(tokens)
-
-    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
-        """One frequency sketch per key (map-side combine; sketch rows
-        only on the shuffle)."""
-        return build_by_key(
-            df, key_col, self._empty, self._update, self._merge,
-            columns=[key_col, self.col], salt=salt,
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -593,7 +545,7 @@ class CmsSketch:
 # ---------------------------------------------------------------------------
 
 
-class AmsSketch:
+class AmsSketch(_ColumnSketch):
     """Distributed count sketch (AMS): UNBIASED two-sided frequency
     estimates plus the F2 second-moment estimate — the skew oracle
     behind operators/skew.key_skew_profile. ``scalar=True`` sketches a
@@ -625,18 +577,6 @@ class AmsSketch:
                 # stay exact small ints, table bits identical
                 acc.add_u64(tokens_to_u64(dc[0]), dc[1])
 
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return build_sketch_bytes(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
     def estimate_counts(self, payload: bytes, tokens: np.ndarray) -> np.ndarray:
         return CountSketch.from_bytes(payload).query_tokens(tokens)
 
@@ -646,7 +586,7 @@ class AmsSketch:
 # ---------------------------------------------------------------------------
 
 
-class MgSketch:
+class MgSketch(_ColumnSketch):
     """Distributed Misra–Gries heavy-hitter summary (the DETERMINISTIC
     frequency sibling: counter lower bounds with a tracked undercount
     cap, so summary keys are a provable superset of every key with
@@ -672,25 +612,13 @@ class MgSketch:
                 # correction needed
                 acc.add_u64(tokens_to_u64(dc[0]), dc[1])
 
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return build_sketch_bytes(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
 
 # ---------------------------------------------------------------------------
 # KLL quantiles
 # ---------------------------------------------------------------------------
 
 
-class TDigestQuantiles:
+class TDigestQuantiles(_ColumnSketch):
     """Distributed t-digest quantiles over a numeric scalar column
     (tail-accurate alternative to KLL; both named by the north rule)."""
 
@@ -707,30 +635,15 @@ class TDigestQuantiles:
         vals = batch.column(self.col).to_numpy(zero_copy_only=False)
         acc.update_batch(np.asarray(vals, dtype=np.float64))
 
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
     def quantiles(self, df: DataFrame, qs: list[float], *, fanout: int = 16) -> list[float]:
         from ..sketch import TDigest
 
-        payload, _ = build_sketch_bytes(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
+        payload, _ = self.build_bytes(df, fanout=fanout)
         sk = TDigest.from_bytes(payload)
         return [float(sk.quantile(q)) for q in qs]
 
-    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
-        return build_by_key(
-            df, key_col, self._empty, self._update, self._merge,
-            columns=[key_col, self.col], salt=salt,
-        )
 
-
-class KllQuantiles:
+class KllQuantiles(_ColumnSketch):
     """Distributed quantile sketch over a numeric scalar column."""
 
     def __init__(self, k: int = 200, *, col: str = "n_tok"):
@@ -744,26 +657,10 @@ class KllQuantiles:
         vals = batch.column(self.col).to_numpy(zero_copy_only=False)
         acc.update_batch(np.asarray(vals, dtype=np.float64))
 
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
     def quantiles(self, df: DataFrame, qs: list[float], *, fanout: int = 16) -> list[float]:
-        payload, _ = build_sketch_bytes(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
+        payload, _ = self.build_bytes(df, fanout=fanout)
         sk = KLLSketch.from_bytes(payload)
         return [float(sk.quantile(q)) for q in qs]
-
-    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
-        """One quantile sketch per key."""
-        return build_by_key(
-            df, key_col, self._empty, self._update, self._merge,
-            columns=[key_col, self.col], salt=salt,
-        )
 
     def quantiles_by_key(
         self, df: DataFrame, key_col: str, qs: list[float], *, salt: int = 0
@@ -790,7 +687,7 @@ class KllQuantiles:
         return keyed.mapInArrow(stats, schema="key string, q double, value double")
 
 
-class DDQuantiles:
+class DDQuantiles(_ColumnSketch):
     """Distributed RELATIVE-error quantile sketch over a numeric scalar
     column (sketch/ddsketch.py). Same tree-merge topology as
     KllQuantiles but with the stronger algebra: DDSketch bucket counts
@@ -816,24 +713,9 @@ class DDQuantiles:
         vals = vals[np.isfinite(vals)]  # NULL floats arrive as NaN: skip rows
         acc.add(vals)
 
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
-
     def quantiles(self, df: DataFrame, qs: list[float], *, fanout: int = 16) -> list[float]:
-        payload, _ = build_sketch_bytes(
-            df, self._empty, self._update, self._merge, columns=[self.col], fanout=fanout
-        )
+        payload, _ = self.build_bytes(df, fanout=fanout)
         return [float(v) for v in DDSketch.from_bytes(payload).quantiles(list(qs))]
-
-    def build_by_key(self, df: DataFrame, key_col: str, *, salt: int = 0) -> DataFrame:
-        return build_by_key(
-            df, key_col, self._empty, self._update, self._merge,
-            columns=[key_col, self.col], salt=salt,
-        )
 
     def quantiles_by_key(
         self, df: DataFrame, key_col: str, qs: list[float], *, salt: int = 0
@@ -871,7 +753,7 @@ class DDQuantiles:
 # ---------------------------------------------------------------------------
 
 
-class CountingBloomSketch:
+class CountingBloomSketch(_ColumnSketch):
     """Distributed counting Bloom filter over a scalar int64 column —
     the deletable membership sketch (sketch/counting.py). Build the
     corpus filter AND the revoke-set filter with the same mergeable
@@ -897,21 +779,6 @@ class CountingBloomSketch:
         if vals.size:
             # NO dedup fold: multiplicity IS the counter state
             acc.add_tokens(vals)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df,
-            self._empty,
-            self._update,
-            merge_sketch_payloads,
-            columns=[self.col],
-            fanout=fanout,
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return build_sketch_bytes(
-            df, self._empty, self._update, merge_sketch_payloads, columns=[self.col], fanout=fanout
-        )
 
     def might_contain_udf(self, payload: bytes, spark: SparkSession | None = None):
         """Vectorized membership probe for a scalar int column against

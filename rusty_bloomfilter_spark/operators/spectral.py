@@ -23,12 +23,12 @@ from collections.abc import Iterator
 import numpy as np
 from pyspark.sql import DataFrame
 
-from ..sketch import FrequentDirections, GramMatrix, merge_sketch_payloads
-from .aggregate import build_sketch, build_sketch_bytes
+from ..sketch import FrequentDirections, GramMatrix
 from .similarity import _stack_rows
+from .sketches import _ColumnSketch
 
 
-class GramSketch:
+class GramSketch(_ColumnSketch):
     """Distributed exact Gram accumulator over an array<float> column.
     NULL / wrong-width rows are skipped (same tolerance contract as the
     ANN operators — one bad row must not abort a corpus job)."""
@@ -45,20 +45,11 @@ class GramSketch:
         if mat.shape[0]:
             acc.add_rows(mat)
 
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.vec_col], fanout=fanout
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return build_sketch_bytes(
-            df, self._empty, self._update, self._merge, columns=[self.vec_col], fanout=fanout
-        )
+    def _columns(self) -> list[str]:
+        return [self.vec_col]
 
 
-class FreqDirsSketch:
+class FreqDirsSketch(_ColumnSketch):
     """Distributed Frequent Directions over an array<float> column."""
 
     def __init__(self, ell: int, dim: int, *, vec_col: str = "embedding"):
@@ -74,17 +65,8 @@ class FreqDirsSketch:
         if mat.shape[0]:
             acc.add_rows(mat)
 
-    _merge = staticmethod(merge_sketch_payloads)
-
-    def build(self, df: DataFrame, *, fanout: int = 16) -> DataFrame:
-        return build_sketch(
-            df, self._empty, self._update, self._merge, columns=[self.vec_col], fanout=fanout
-        )
-
-    def build_bytes(self, df: DataFrame, *, fanout: int = 16) -> tuple[bytes, int]:
-        return build_sketch_bytes(
-            df, self._empty, self._update, self._merge, columns=[self.vec_col], fanout=fanout
-        )
+    def _columns(self) -> list[str]:
+        return [self.vec_col]
 
 
 def embedding_gram(

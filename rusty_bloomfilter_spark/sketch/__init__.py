@@ -5,6 +5,10 @@ filter (`/root/reference/src/bloomfilter/mod.rs`, merge matrices at
 mod.rs:621-761): merge is associative and commutative with an empty
 identity, and serialization is canonical (a pure function of content),
 so distributed tree-merges are order-independent.
+
+Each accumulator also declares ``max_payload_bytes()``: the largest
+``to_bytes`` its config can produce, however much data it sees. The
+Spark builds size their driver-side merge budget with it.
 """
 
 from .iblt import IBLT

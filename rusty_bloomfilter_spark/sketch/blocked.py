@@ -213,6 +213,10 @@ class BlockedBloomFilter:
 
     # -- wire -------------------------------------------------------------------
 
+    def max_payload_bytes(self) -> int:
+        """``to_bytes`` size: the fixed block array."""
+        return _HEADER.size + self.words.nbytes
+
     def to_bytes(self) -> bytes:
         return _HEADER.pack(_MAGIC, 1, self.n_blocks, self.n_items) + self.words.tobytes()
 

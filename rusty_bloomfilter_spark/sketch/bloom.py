@@ -275,6 +275,11 @@ class BloomFilter:
 
     # -- wire ------------------------------------------------------------------
 
+    def max_payload_bytes(self) -> int:
+        """Largest ``to_bytes`` of this shape: the dense word array (the
+        sparse codec is only used while it is smaller)."""
+        return _HEADER.size + self.shape.number_of_bytes()
+
     def to_bytes(self) -> bytes:
         """Canonical serialization — a pure function of (shape, set
         bits, n_items); independent of build/merge order.
@@ -431,6 +436,10 @@ class SparseBloomBuilder:
             # would alias the snapshot to every later add_* call
             return BloomFilter(self.shape, self._dense.words.copy(), self.n_items)
         return BloomFilter.from_indices(self.shape, self.indices(), n_items=self.n_items)
+
+    def max_payload_bytes(self) -> int:
+        """Largest ``to_bytes``: the dense filter it promotes into."""
+        return _HEADER.size + self.shape.number_of_bytes()
 
     def to_bytes(self) -> bytes:
         """Canonical bytes — identical to a dense build of the same

@@ -148,6 +148,10 @@ class CountMinSketch:
 
     # -- wire ---------------------------------------------------------------
 
+    def max_payload_bytes(self) -> int:
+        """``to_bytes`` size: the fixed d x w table."""
+        return _HEADER.size + 8 * self.d * self.w
+
     def to_bytes(self) -> bytes:
         return _HEADER.pack(_MAGIC, 1, self.d, self.w, self.n_items) + self.table.tobytes()
 

@@ -216,6 +216,10 @@ class CountingBloomFilter:
 
     # -- wire -------------------------------------------------------------
 
+    def max_payload_bytes(self) -> int:
+        """``to_bytes`` size: one byte per counter."""
+        return _HEADER.size + self.shape.m
+
     def to_bytes(self) -> bytes:
         return (
             _HEADER.pack(_MAGIC, 1, self.shape.m, self.shape.k, self.n_items)

@@ -253,6 +253,11 @@ class DDSketch:
 
     # -- wire -----------------------------------------------------------------
 
+    def max_payload_bytes(self) -> int:
+        """Largest ``to_bytes``: ``max_buckets`` (key, count) pairs, at
+        least the 4096 a payload read back by ``from_bytes`` allows."""
+        return _HEADER.size + 16 * max(self.max_buckets, 4096)
+
     def to_bytes(self) -> bytes:
         """Canonical per CONTENT (not just per state): bucket counts
         are a pure function of the inserted multiset, keys ascending,

@@ -93,6 +93,10 @@ class GramMatrix:
         order = np.argsort(vals)[::-1]
         return vals[order], vecs[:, order]
 
+    def max_payload_bytes(self) -> int:
+        """``to_bytes`` size: the fixed dim x dim matrix."""
+        return _GRAM_HEADER.size + 8 * self.dim * self.dim
+
     def to_bytes(self) -> bytes:
         return _GRAM_HEADER.pack(_GRAM_MAGIC, 1, self.dim, self.n_items, self.fro_sq) + self.g.tobytes()
 
@@ -246,6 +250,10 @@ class FrequentDirections:
         return out.merge_in_place(other)
 
     # -- wire --------------------------------------------------------------------
+
+    def max_payload_bytes(self) -> int:
+        """Largest ``to_bytes``: at most ``ell`` shrunk rows."""
+        return _FD_HEADER.size + 8 * self.ell * self.dim
 
     def to_bytes(self) -> bytes:
         b = self.rows()  # canonical per state: always serialized shrunk

@@ -187,6 +187,11 @@ class HyperLogLog:
     # bytes for keyed/windowed sketches whose groups see few distincts
     # (an empty p=14 payload drops 16 KiB -> 16 B).
 
+    def max_payload_bytes(self) -> int:
+        """Largest ``to_bytes`` of this precision: the dense registers
+        (the sparse form is only used while it is smaller)."""
+        return _HEADER.size + self.m
+
     def to_bytes(self) -> bytes:
         idx = np.flatnonzero(self.registers)
         if 4 * len(idx) < self.m:

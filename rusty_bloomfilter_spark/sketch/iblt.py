@@ -228,6 +228,10 @@ class IBLT:
 
     # -- wire ----------------------------------------------------------------
 
+    def max_payload_bytes(self) -> int:
+        """``to_bytes`` size: three fixed m-cell arrays."""
+        return _HEADER.size + 24 * self.m
+
     def to_bytes(self) -> bytes:
         """Canonical: fully determined by the inserted key multiset
         (add/xor commute), independent of partitioning/merge order."""

@@ -173,6 +173,14 @@ class KLLSketch:
 
     # -- wire -----------------------------------------------------------------------
 
+    def max_payload_bytes(self) -> int:
+        """Largest ``to_bytes`` of this ``k``. A level exists only once
+        2^level items were compacted into it, so a uint64 ``n_items``
+        allows at most 64 levels; after ``_compress`` the items fit the
+        level capacities, which sum to at most 3k + 2 per level."""
+        levels = 64
+        return _HEADER.size + levels * 5 + 8 * (3 * self.k + 2 * levels)
+
     def to_bytes(self) -> bytes:
         parts = [_HEADER.pack(_MAGIC, 1, self.k, len(self.compactors), self.n_items)]
         for lv, buf in enumerate(self.compactors):

@@ -189,6 +189,10 @@ class MisraGries:
 
     # -- wire ----------------------------------------------------------------
 
+    def max_payload_bytes(self) -> int:
+        """Largest ``to_bytes``: ``capacity`` (key, count) pairs."""
+        return _HEADER.size + 16 * self.capacity
+
     def to_bytes(self) -> bytes:
         """Canonical per state: keys ascending (``_combine`` keeps them
         sorted — np.unique output), counts aligned."""

@@ -146,6 +146,12 @@ class TDigest:
 
     # -- wire -------------------------------------------------------------------------
 
+    def max_payload_bytes(self) -> int:
+        """Largest ``to_bytes``: the k1 scale spans compression/2 index
+        units and a flushed digest keeps one centroid per unit, so
+        ``compression`` centroids leave room for rounding."""
+        return _HEADER.size + 16 * self.compression
+
     def to_bytes(self) -> bytes:
         self._flushed()
         header = _HEADER.pack(

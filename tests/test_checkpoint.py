@@ -4,7 +4,7 @@ bitwise-identical final sketch (SURVEY.md §5 integration plan)."""
 import numpy as np
 import pytest
 
-from rusty_bloomfilter_spark.operators import checkpoint
+from rusty_bloomfilter_spark.operators import aggregate, checkpoint
 from rusty_bloomfilter_spark.operators.checkpoint import CKPT_SCHEMA, build_with_checkpoint
 from rusty_bloomfilter_spark.operators.sketches import BloomSketch, flatten_tokens
 from rusty_bloomfilter_spark.sketch import BloomFilter, Shape, merge_payloads
@@ -120,7 +120,7 @@ def test_tree_merge_route_matches_driver_route(spark, sequences_pdf, seq_parquet
         return real(*args, **kwargs)
 
     monkeypatch.setattr(checkpoint, "tree_merge", spy)
-    monkeypatch.setattr(checkpoint, "_DRIVER_MERGE_BYTES", 0)
+    monkeypatch.setattr(aggregate, "_DRIVER_MERGE_BYTES", 0)
     r2 = _build(spark, seq_parquet, ckpt)
     assert calls, "tree_merge route not taken"
     assert r2.built_files == 0 and r2.resumed_files == r1.total_files
@@ -128,13 +128,19 @@ def test_tree_merge_route_matches_driver_route(spark, sequences_pdf, seq_parquet
     assert r2.n_rows == len(sequences_pdf)
 
 
-def test_driver_budget_counts_dense_growth():
+def test_driver_budget_counts_dense_growth(monkeypatch):
     """An empty classic-Bloom accumulator serializes sparse (a few
     bytes), but a built one reaches the dense word array: the driver
     budget must count the latter."""
     empty = BloomSketch(SHAPE)._empty()
-    assert len(empty.to_bytes()) < SHAPE.number_of_bytes()
-    assert checkpoint._payload_bound(empty) == SHAPE.number_of_bytes()
+    full = BloomFilter(SHAPE, np.full(SHAPE.number_of_buckets(), ~np.uint64(0)))
+    dense = len(full.to_bytes())
+    assert len(empty.to_bytes()) < SHAPE.number_of_bytes() < dense
+    assert empty.max_payload_bytes() == dense
+    monkeypatch.setattr(aggregate, "_DRIVER_MERGE_BYTES", 2 * dense)
+    assert aggregate._merges_on_driver(2, [empty])
+    monkeypatch.setattr(aggregate, "_DRIVER_MERGE_BYTES", 2 * dense - 1)
+    assert not aggregate._merges_on_driver(2, [empty])
 
 
 def test_rows_outside_worklist_are_ignored(spark, sequences_pdf, seq_parquet, tmp_path):

@@ -639,6 +639,44 @@ def test_tree_route_matches_driver_route(spark, monkeypatch):
     }
 
 
+def test_driver_budget_counts_grown_payloads(spark, monkeypatch):
+    """The budget sizes each payload at the largest its sketch can
+    reach, not at its empty size: an empty p=14 HLL is 16 bytes, a
+    dense one 2^14 + 16. With P x empty within the budget but
+    P x dense over it, the rows must go through the tree."""
+    from pyspark.sql import functions as F
+
+    from rusty_bloomfilter_spark.operators import aggregate
+
+    hll = HllSketch(p=14, col="k", scalar=True)
+    specs = [("hll", hll._empty, hll._update, hll._merge)]
+    df = spark.range(0, 40_000, numPartitions=4).select(F.col("id").alias("k"))
+
+    def build():
+        return aggregate.collect_multi_bytes(
+            aggregate.build_multi(df, specs, columns=["k"]), specs, fanout=2
+        )
+
+    driver = build()
+    budget = 10 * 4 * len(hll._empty().to_bytes())
+    rows = aggregate.build_multi(df, specs, columns=["k"]).toArrow()
+    assert sum(len(p) for p in rows.column("payload_hll").to_pylist()) > budget
+    assert hll._empty().max_payload_bytes() == (1 << 14) + 16
+
+    real, calls = aggregate._tree_merge_multi, []
+
+    def spy(partial, specs, *, fanout, n_parts):
+        calls.append(n_parts)
+        return real(partial, specs, fanout=fanout, n_parts=n_parts)
+
+    monkeypatch.setattr(aggregate, "_tree_merge_multi", spy)
+    monkeypatch.setattr(aggregate, "_DRIVER_MERGE_BYTES", budget)
+    assert build() == driver
+    assert calls == [4], "tree route not taken"
+    # a sketch that declares no largest size never merges on the driver
+    assert not aggregate._merges_on_driver(1, [object()])
+
+
 def test_build_multi_partition_invariance(spark):
     """7 partitions merged on the driver == the 1-partition build, for
     every spec."""
