@@ -1,8 +1,8 @@
 """Text analysis as Catalyst column expressions (JVM-side, codegen'd).
 
-Every function here has a 1:1 DuckDB SQL rendering so driver-contract
-oracles can pin exact equality; nothing in this module touches Python
-row-at-a-time execution.
+Every function here has a 1:1 DuckDB SQL rendering, so an external SQL
+engine can reproduce its output exactly; nothing in this module touches
+Python row-at-a-time execution.
 """
 
 from __future__ import annotations
@@ -27,8 +27,7 @@ def tokenize_md5(text: Column, vocab: int = DEFAULT_VOCAB) -> Column:
     """text -> array<int> token ids, cross-engine reproducible.
 
     token_id = int(first 8 hex chars of md5(word), 16) % vocab.
-    DuckDB renders the same ids (see DUCKDB_TOKENIZE); verified
-    byte-equal across engines in tests/test_contract_harness.
+    DuckDB renders the same ids (see DUCKDB_TOKENIZE).
     """
     return F.transform(
         _words(text),
@@ -67,7 +66,7 @@ _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
 
 def quality_exprs(text: Column) -> dict[str, Column]:
     """Per-document quality features; all SQL-expressible in DuckDB with
-    identical results (see the q_quality oracle in __spark_entry__)."""
+    identical results."""
     words = _words(text)
     n_tok = F.size(words)
     n_chars = F.length(text)

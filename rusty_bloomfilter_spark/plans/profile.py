@@ -111,7 +111,7 @@ def token_profile(
     # relies on). posexplode_outer (not posexplode) keeps one row for
     # empty/NULL-token docs — so doc counting stays exact — and avoids
     # the inferred Generate filter that re-evaluates the upstream
-    # tokenize expression (plans/r06, q_heavy_tokens_exact finding).
+    # tokenize expression.
     ex = sequences.select("source", F.posexplode_outer("tokens").alias("pos", "tok"))
     counts = ex.groupBy("source", "tok").agg(
         F.count("*").alias("cnt"),

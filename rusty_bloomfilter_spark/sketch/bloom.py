@@ -314,16 +314,7 @@ class BloomFilter:
         shape = Shape(m=m, k=k)
         body = memoryview(data)[_HEADER.size :]
         if codec == _CODEC_SPARSE:
-            if len(body) % 4:
-                raise ValueError("corrupt sparse BloomFilter payload length")
-            idx = np.frombuffer(body, dtype=np.uint32).astype(np.int64)
-            # forged/corrupt indices >= m would silently set padding
-            # bits (breaking the canonical-bytes domain) or crash with
-            # a raw IndexError deep in the scatter
-            if idx.size and int(idx.max()) >= m:
-                raise ValueError(
-                    f"corrupt sparse BloomFilter payload: index {int(idx.max())} >= m={m}"
-                )
+            idx = _sparse_indices(body, m).astype(np.int64)
             return cls.from_indices(shape, idx, n_items=n_items)
         if len(body) != shape.number_of_bytes():
             raise ValueError(
@@ -461,6 +452,21 @@ class SparseBloomBuilder:
         return BloomFilter(self.shape, f.words, self.n_items).to_bytes()
 
 
+def _sparse_indices(body, m: int) -> np.ndarray:
+    """The uint32 set-bit indices of a sparse-coded body. Every encoder
+    writes them strictly increasing and below m; anything else (trailing
+    bytes, duplicates, forged indices that would set padding bits or
+    crash the scatter with an IndexError) is a corrupt payload."""
+    if len(body) % 4:
+        raise ValueError("corrupt sparse BloomFilter payload length")
+    idx = np.frombuffer(body, dtype=np.uint32)
+    if idx.size > 1 and not (idx[1:] > idx[:-1]).all():
+        raise ValueError("corrupt sparse BloomFilter payload: indices not strictly increasing")
+    if idx.size and int(idx[-1]) >= m:
+        raise ValueError(f"corrupt sparse BloomFilter payload: index {int(idx[-1])} >= m={m}")
+    return idx
+
+
 def merge_payloads(payloads: list[bytes]) -> bytes:
     """OR-merge serialized filters; associative/commutative, canonical
     output bytes. Used by the Spark tree-merge stages.
@@ -488,16 +494,10 @@ def merge_payloads(payloads: list[bytes]) -> bytes:
         for h in headers[1:]:
             if (h[5], h[6]) != (m, k):
                 raise ValueError(f"shape mismatch: {Shape(m=h[5], k=h[6])} vs {shape}")
+        # same checks as from_bytes: never re-emit forged indices
         idx = np.unique(
-            np.concatenate(
-                [np.frombuffer(memoryview(p)[_HEADER.size :], dtype=np.uint32) for p in payloads]
-            )
+            np.concatenate([_sparse_indices(memoryview(p)[_HEADER.size :], m) for p in payloads])
         )
-        # same bounds check as from_bytes: never re-emit forged indices
-        if idx.size and int(idx[-1]) >= m:
-            raise ValueError(
-                f"corrupt sparse BloomFilter payload: index {int(idx[-1])} >= m={m}"
-            )
         n_items = sum(h[7] for h in headers)
         if shape.is_sparse(len(idx)):
             header = _HEADER.pack(

@@ -212,6 +212,8 @@ class KLLSketch:
             off += 8 * n
             out.compactors.append(buf)
             out.parities.append(parity)
+        if off != len(data):
+            raise ValueError("corrupt KLLSketch payload: trailing bytes")
         if not out.compactors:
             out.compactors = [np.empty(0, dtype=np.float64)]
             out.parities = [0]

@@ -168,6 +168,8 @@ class TDigest:
         magic, ver, compression, n_c, n_items, mn, mx = _HEADER.unpack_from(data, 0)
         if magic != _MAGIC or ver != 1:
             raise ValueError("not a serialized TDigest")
+        if len(data) != _HEADER.size + 16 * n_c:
+            raise ValueError(f"corrupt TDigest payload: {len(data)} bytes for {n_c} centroids")
         out = cls(compression)
         off = _HEADER.size
         out.means = np.frombuffer(data, dtype=np.float64, count=n_c, offset=off).copy()

@@ -11,7 +11,7 @@ source: string)``. Two ways to obtain it:
 - :func:`synthetic_sequences` generates it at arbitrary scale,
   distributed over ``spark.range`` with a pure function of the row id
   (partition-layout independent, no wall clock, no unseeded RNG) —
-  used by bench and the skew/scale tests.
+  used by the skew/scale tests and ``tools/scaling_bench.py``.
 
 Iceberg note: at production scale the same `sequences` schema is read
 via an Iceberg catalog (`spark.read.table("catalog.db.sequences")`);
@@ -24,10 +24,9 @@ iceberg-spark-runtime jar (``ls /opt/spark/jars | grep -ci iceberg`` ->
 network egress to vendor one (repo1.maven.org does not resolve:
 ``urlopen error [Errno -2] Name or service not known``), and installs
 are disallowed. What IS exercised instead: (a) :func:`load_sequences`'s
-catalog-first fallback order (tests/test_sources.py), and (b) a real
-session-catalog managed table read via the SAME ``spark.read.table``
-API an Iceberg catalog serves, with partition pruning asserted
-(contract ``q_catalog_scan``). On a cluster with the jar present,
+catalog-first fallback order, and (b) a temp view resolved through
+the SAME ``spark.read.table`` API an Iceberg catalog serves (both in
+tests/test_sources.py). On a cluster with the jar present,
 ``spark.read.table("catalog.db.sequences")`` is the only line that
 changes — plus snapshot pinning via
 ``spark.read.option("snapshot-id", ...).table(...)`` for resumable

@@ -4,15 +4,11 @@
    trailing hits to trailing zero-gram docs (decontaminate — a zero-FN
    break), and the same pattern lived in contained_fraction_udf and
    simhash_signatures.
-2. media_stats' per-operator Arrow-batch conf set/restore never reached
-   execution; batches are now re-sliced inside the worker.
-3. decode_wav_pcm16 raised struct.error (task failure) on a truncated
-   fmt chunk instead of yielding a metadata-only row.
-4. learn_bpe_merges silently collided pair keys when vocab + n_merges
+2. learn_bpe_merges silently collided pair keys when vocab + n_merges
    exceeded PAIR_BASE.
-5. LSH bucket persists leaked cached RDDs for the session lifetime —
+3. LSH bucket persists leaked cached RDDs for the session lifetime —
    now tied to the result DataFrame (free() / GC finalizer).
-6. bigram_lm_scores broadcast the (potentially vocab^2-sized) bigram
+4. bigram_lm_scores broadcast the (potentially vocab^2-sized) bigram
    table — now an explicit shuffle-merge join.
 """
 
@@ -20,7 +16,6 @@ import gc
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -107,64 +102,7 @@ def test_simhash_signature_unchanged_by_trailing_empty_doc(spark):
 
 
 # ---------------------------------------------------------------------------
-# 2. media batch hint is applied in the worker
-# ---------------------------------------------------------------------------
-
-
-def test_sliced_rebatches_zero_copy():
-    from rusty_bloomfilter_spark.operators.multimodal import _sliced
-
-    batch = pa.record_batch({"x": pa.array(list(range(1000)))})
-    chunks = list(_sliced(iter([batch]), 256))
-    assert [c.num_rows for c in chunks] == [256, 256, 256, 232]
-    assert pa.Table.from_batches(chunks).column("x").to_pylist() == list(range(1000))
-
-
-def test_media_stats_leaves_session_conf_alone(spark):
-    from rusty_bloomfilter_spark.operators.multimodal import (
-        media_stats,
-        synthetic_real_media,
-    )
-
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    before = spark.conf.get(key, None)
-    out = media_stats(synthetic_real_media(spark, 8), media_batch_hint=2)
-    assert out.count() == 8
-    assert spark.conf.get(key, None) == before
-
-
-# ---------------------------------------------------------------------------
-# 3. truncated WAV fmt chunk -> metadata-only row, not task failure
-# ---------------------------------------------------------------------------
-
-
-def test_truncated_fmt_chunk_is_valueerror_and_metadata_only_row(spark):
-    import struct
-
-    from rusty_bloomfilter_spark.operators.multimodal import (
-        decode_wav_pcm16,
-        media_stats,
-    )
-
-    # RIFF/WAVE with an 8-byte fmt body (< the 16 required)
-    bad = (
-        b"RIFF" + struct.pack("<I", 36) + b"WAVEfmt "
-        + struct.pack("<I", 8) + b"\x01\x00\x01\x00\x40\x1f\x00\x00"
-        + b"data" + struct.pack("<I", 8) + b"\x00" * 8
-    )
-    with pytest.raises(ValueError, match="truncated WAVE fmt"):
-        decode_wav_pcm16(bad)
-    media = spark.createDataFrame(
-        [(1, "audio", bytearray(bad))], "media_id long, kind string, payload binary"
-    )
-    rows = media_stats(media).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["n_bytes"] == len(bad) and r["sample_rate"] is None and r["rms"] is None
-
-
-# ---------------------------------------------------------------------------
-# 4. BPE pair-key capacity contract
+# 2. BPE pair-key capacity contract
 # ---------------------------------------------------------------------------
 
 
@@ -185,7 +123,7 @@ def test_bpe_rejects_token_ids_outside_vocab(spark):
 
 
 # ---------------------------------------------------------------------------
-# 5. persisted-intermediate lifecycle
+# 3. persisted-intermediate lifecycle
 # ---------------------------------------------------------------------------
 
 
@@ -206,7 +144,7 @@ def test_lsh_bucket_frames_freed_after_free(spark, sequences_pdf):
 
 def test_persist_survives_chained_transformations(spark, sequences_pdf):
     """The code-review finding that killed the GC-finalizer design:
-    contract queries chain (.orderBy/.agg) off the operator result, so
+    callers chain (.orderBy/.agg) off the operator result, so
     the tied wrapper dies at plan-construction time. The persist must
     still be LIVE when the chained plan materializes (else the
     self-join recomputes the signature stage per side)."""
@@ -216,7 +154,7 @@ def test_persist_survives_chained_transformations(spark, sequences_pdf):
     gc.collect()
     base = _persistent_rdd_count(spark)
     seq = spark.createDataFrame(sequences_pdf.head(300))
-    # chain immediately and drop the tied wrapper — mirrors contract.py
+    # chain immediately and drop the tied wrapper
     chained = simhash_near_dups(simhash_signatures(seq), max_hamming=3).groupBy().count()
     gc.collect()  # under the old GC-finalizer design this unpersisted the deps
     chained.collect()  # materialize through the (still-)persisted frame
@@ -246,7 +184,7 @@ def test_tied_deps_evicted_fifo_beyond_cap(spark, sequences_pdf):
 
 
 # ---------------------------------------------------------------------------
-# 6. bigram join is shuffle-merge, not broadcast
+# 4. bigram join is shuffle-merge, not broadcast
 # ---------------------------------------------------------------------------
 
 

@@ -1,51 +1,9 @@
-"""Multimodal plumbing (stubbed decode, real Spark machinery) and
-streaming sketch maintenance."""
+"""Streaming sketch maintenance."""
 
 import numpy as np
 from pyspark.sql import functions as F
 import pandas as pd
 import pytest
-
-from rusty_bloomfilter_spark.operators.multimodal import (
-    FEATURE_DIM,
-    decode_media,
-    extract_features,
-    frame_sample_plan,
-    synthetic_media,
-)
-
-
-def test_decode_stub_raises_without_fake():
-    with pytest.raises(NotImplementedError):
-        decode_media(b"\x00" * 100, "image")
-
-
-def test_media_features_deterministic(spark):
-    media = synthetic_media(spark, 60)
-    rows = media.collect()
-    assert len(rows) == 60
-    assert all(len(r["payload"]) == 4096 for r in rows)
-    feats = extract_features(media).collect()
-    assert len(feats) == 60
-    by_id = {r["media_id"]: np.array(r["feature"]) for r in feats}
-    assert all(len(v) == FEATURE_DIM for v in by_id.values())
-    # deterministic: rebuild with different partitioning -> same features
-    feats2 = extract_features(synthetic_media(spark, 60).repartition(7)).collect()
-    for r in feats2:
-        assert np.allclose(by_id[r["media_id"]], np.array(r["feature"]))
-    # features vary across media
-    mat = np.stack(list(by_id.values()))
-    assert mat.std(axis=0).min() > 0
-
-
-def test_frame_sample_plan(spark):
-    media = synthetic_media(spark, 30)
-    frames = frame_sample_plan(media, every_ms=5000)
-    pdf = frames.toPandas()
-    vids = media.filter("kind = 'video'").select("media_id", "duration_ms").collect()
-    expect = sum(len(range(0, max(r["duration_ms"] - 1, 0) + 1, 5000)) for r in vids)
-    assert len(pdf) == expect
-    assert (pdf["frame_ts_ms"] % 5000 == 0).all()
 
 
 def test_streaming_bloom_build(spark, tmp_path, sequences_pdf):

@@ -9,14 +9,23 @@ import numpy as np
 import pytest
 
 from rusty_bloomfilter_spark.sketch import (
+    IBLT,
+    BlockedBloomFilter,
     BloomFilter,
     CountMinSketch,
     CountSketch,
     CountingBloomFilter,
+    DDSketch,
+    FrequentDirections,
+    GramMatrix,
     HyperLogLog,
     KLLSketch,
+    MisraGries,
     Shape,
     SparseBloomBuilder,
+    TDigest,
+    XorFilter,
+    _KINDS,
     merge_payloads,
     merge_sketch_payloads,
 )
@@ -43,6 +52,13 @@ def test_bloom_merge_payloads_fast_path_rejects_forged_index():
     bad = _sparse_payload(70, 3, [100])
     with pytest.raises(ValueError, match=">= m"):
         merge_payloads([ok, bad])
+    # encoders write strictly increasing indices: a duplicate or a
+    # trailing lower index is corrupt, not two more set bits
+    for bad in ([1, 1], [5, 2], [1, 2, 0, 0]):
+        with pytest.raises(ValueError, match="strictly increasing"):
+            merge_payloads([ok, _sparse_payload(70, 3, bad)])
+        with pytest.raises(ValueError, match="strictly increasing"):
+            BloomFilter.from_bytes(_sparse_payload(70, 3, bad))
 
 
 def test_bloom_unknown_codec_rejected():
@@ -93,19 +109,50 @@ def test_sparse_builder_dense_snapshot_is_isolated():
     assert f.to_bytes() == before  # later builder adds must not mutate it
 
 
-@pytest.mark.parametrize(
-    "cls,magic",
-    [
-        (HyperLogLog, b"RHLL"),
-        (CountMinSketch, b"RCMS"),
-        (CountSketch, b"RAMS"),
-        (KLLSketch, b"RKLL"),
-        (CountingBloomFilter, b"RCBF"),
+_TOKENS = np.arange(1, 3000, 7, dtype=np.int64)
+_VALUES = np.linspace(-5.0, 5.0, 500)
+
+# one or more canonical payloads per kind; Bloom and HLL cover both codecs
+_SAMPLES = {
+    BloomFilter: [
+        BloomFilter.empty(Shape.for_np(n=n, p=0.01)).add_tokens(_TOKENS).to_bytes()
+        for n in (100_000, 100)  # sparse-coded, dense-coded
     ],
-)
+    BlockedBloomFilter: [BlockedBloomFilter.for_np(1000, 0.01).add_tokens(_TOKENS).to_bytes()],
+    HyperLogLog: [
+        HyperLogLog(p).add_tokens(_TOKENS).to_bytes() for p in (14, 6)  # sparse, dense
+    ],
+    CountMinSketch: [CountMinSketch(3, 64).add_tokens(_TOKENS).to_bytes()],
+    CountingBloomFilter: [
+        CountingBloomFilter.empty(Shape.for_np(n=500, p=0.01)).add_tokens(_TOKENS).to_bytes()
+    ],
+    KLLSketch: [KLLSketch(20).update_batch(_VALUES).to_bytes()],
+    DDSketch: [DDSketch(0.05).add(np.exp(_VALUES)).to_bytes()],
+    TDigest: [TDigest(20).update_batch(_VALUES).to_bytes()],
+    MisraGries: [MisraGries(16).add_tokens(_TOKENS % 40).to_bytes()],
+    IBLT: [IBLT.for_diff(50, 4).add_u64(_TOKENS[:20].astype(np.uint64)).to_bytes()],
+    CountSketch: [CountSketch(3, 64).add_tokens(_TOKENS).to_bytes()],
+    GramMatrix: [GramMatrix(4).add_rows(np.eye(4)).to_bytes()],
+    FrequentDirections: [FrequentDirections(2, 4).add_rows(np.eye(4)).to_bytes()],
+    XorFilter: [XorFilter.build_tokens(_TOKENS).to_bytes()],
+}
+
+
+@pytest.mark.parametrize("cls,magic", [(cls, magic) for magic, cls in _KINDS.items()])
 def test_truncated_payloads_raise_valueerror_not_struct_error(cls, magic):
+    """Every kind's decoder accepts exactly its canonical bytes: a
+    header-only stub, a payload one byte short, one with 8 trailing
+    bytes, and one with a flipped version byte all raise ValueError."""
     with pytest.raises(ValueError):
         cls.from_bytes(magic + b"xx")
+    for raw in _SAMPLES[cls]:
+        assert raw[:4] == magic
+        assert cls.from_bytes(raw).to_bytes() == raw
+        bad_version = bytearray(raw)
+        bad_version[4] ^= 0xFF
+        for bad in (raw[:-1], raw + b"\x00" * 8, bytes(bad_version)):
+            with pytest.raises(ValueError):
+                cls.from_bytes(bad)
 
 
 def test_kll_forged_level_count_raises_valueerror():
