@@ -156,7 +156,6 @@ _WINDOW_FIRST = [  # r6 rotation (VERIFY_SCHEDULE.md): never driver-verified, re
     "q_compressibility",
     "q_lsh_recall_audit",
     "q_ann_ivf",
-    "q_media_stats",
     "q_source_overlap_hll",
     "q_incremental_dedup",
     "q_sharded_bloom",
@@ -178,7 +177,6 @@ _WINDOW_FIRST = [  # r6 rotation (VERIFY_SCHEDULE.md): never driver-verified, re
     "q_simhash_near_dups",
     "q_embedding_near_dups",
     "q_ann_lsh",
-    "q_media_features",
     "q_source_overlap_bloom",
     "q_bloom_doc_ids",
     "q_topk_cms",
@@ -196,9 +194,6 @@ _WINDOW_MIDDLE = [  # stale-first (last green round shown)
     "q_bottomk_sample",  # r3
     "q_weighted_sample",  # r3
     "q_salted_skew_build",  # r4
-    "q_mp4_frame_plan",  # r4
-    "q_container_stats",  # r4
-    "q_video_near_dups",  # r4
     "q_stratified_sample",  # r4
     "q_kmv_distinct",  # r4
     "q_kmv_overlap",  # r4
@@ -1310,21 +1305,6 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_lsh_topk(emb, [0, 7, 42, 99, 123], k=5, n_planes=16, bands=8)
 
 
-@register("q_media_features")
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: deterministic fake media -> feature
-    extraction (decode stubbed; Spark machinery real)."""
-    from .operators.multimodal import extract_features, synthetic_media
-
-    media = synthetic_media(spark, 200)
-    feats = extract_features(media)
-    return feats.groupBy("kind").agg(
-        F.count("*").alias("n_media"),
-        F.round(F.avg(F.element_at("feature", 1)), 6).alias("avg_f0"),
-        F.sum("n_bytes").alias("total_bytes"),
-    )
-
-
 @register("q_ann_ivf")
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN (coarse spherical-k-means quantizer, nprobe inverted
@@ -1334,148 +1314,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return ann_ivf_topk(emb, [0, 7, 42, 99, 123], k=5, n_centroids=16, nprobe=8)
-
-
-@register("q_media_stats")
-def q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL media decode, distributed: WAV (PCM16), BMP (24-bit), PNG
-    (zlib inflate), and baseline JPEG (pure-numpy huffman + IDCT,
-    jpeg.py) payloads are decoded inside mapInArrow — ids ≡ 1 (mod 8)
-    in the synthetic table are 4:2:0 JPEGs, so this query exercises the
-    lossy compressed path end to end. Per-kind aggregate of real
-    audio/image statistics. (MP3/MP4 container parsing lives in
-    q_container_stats / q_mp4_frame_plan; their codec-payload decode
-    stays stubbed — ffmpeg absent.)"""
-    from .operators.multimodal import media_stats, synthetic_real_media
-
-    stats = media_stats(synthetic_real_media(spark, 120))
-    return stats.groupBy("kind").agg(
-        F.count("*").alias("n_media"),
-        F.round(F.avg("rms"), 4).alias("avg_rms"),
-        F.round(F.avg("zero_cross_rate"), 4).alias("avg_zcr"),
-        F.round(F.avg("duration_ms"), 4).alias("avg_duration_ms"),
-        F.round(F.avg("width"), 4).alias("avg_width"),
-        F.round(F.avg("mean_g"), 4).alias("avg_mean_g"),
-        F.sum("n_bytes").alias("total_bytes"),
-    )
-
-
-@register(
-    "q_mp4_frame_plan",
-    oracle="""
-    WITH vids AS (
-      SELECT i AS media_id,
-             CAST(24 + (i % 40) AS BIGINT) AS n_frames,
-             CAST(20 + (i % 5) * 10 AS BIGINT) AS delta_ms
-      FROM range(0, 90) t(i) WHERE i % 3 <> 2
-    ),
-    frames AS (
-      SELECT v.media_id, v.delta_ms, g.j AS frame_idx,
-             CAST(200 + ((v.media_id*31 + g.j*17) % 512) AS BIGINT) AS byte_len,
-             CAST(32 + COALESCE(SUM(200 + ((v.media_id*31 + g.j*17) % 512))
-                OVER (PARTITION BY v.media_id ORDER BY g.j
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS BIGINT) AS byte_off
-      FROM vids v, LATERAL (SELECT unnest(generate_series(0, v.n_frames - 1)) AS j) g
-    ),
-    ticks AS (
-      SELECT v.media_id, g.tick_ms
-      FROM vids v, LATERAL (
-        SELECT unnest(generate_series(0, v.n_frames * v.delta_ms - 1, 250)) AS tick_ms
-      ) g
-    )
-    SELECT t.media_id, t.tick_ms, f.frame_idx,
-           f.frame_idx * f.delta_ms AS frame_ts_ms, f.byte_off, f.byte_len
-    FROM ticks t JOIN frames f
-      ON f.media_id = t.media_id AND f.frame_idx = t.tick_ms // f.delta_ms
-    """,
-)
-def q_mp4_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MP4 container parsing with an arithmetic cross-check: the
-    synthetic video table's payloads are structurally valid ISO BMFF
-    files whose sample tables (stts/stsc/stsz/stco) are closed-form
-    functions of the id. Spark PARSES THE BYTES (operators.containers)
-    and emits a ranged-read frame-sampling plan — one row per 250 ms
-    tick with the covering frame's absolute byte range — while the
-    DuckDB oracle re-derives the identical rows from the closed form
-    without touching a byte. A hash match proves the box walker,
-    chunk-offset expansion, and timestamp math end to end. At 100 TB
-    this plan is what turns "decode every video" into "ranged-read only
-    the sampled frames"."""
-    from .operators.multimodal import frame_sample_plan_bytes, synthetic_video_media
-
-    media = synthetic_video_media(spark, 90)
-    return frame_sample_plan_bytes(media, every_ms=250)
-
-
-@register(
-    "q_container_stats",
-    oracle="""
-    SELECT i AS media_id,
-           CASE WHEN i % 3 = 2 THEN 'mp3' ELSE 'mp4' END AS container,
-           CASE WHEN i % 3 = 2 THEN 'mp3' ELSE 'avc1' END AS codec,
-           CAST(CASE WHEN i % 3 = 2 THEN 20 + (i % 30)
-                     ELSE 24 + (i % 40) END AS BIGINT) AS n_frames,
-           CASE WHEN i % 3 = 2
-                THEN round((20 + (i % 30)) * 1152 * 1000.0 / 44100, 6)
-                ELSE CAST((24 + (i % 40)) * (20 + (i % 5) * 10) AS DOUBLE)
-           END AS duration_ms,
-           CAST(CASE WHEN i % 3 = 2 THEN 44100 END AS INTEGER) AS sample_rate,
-           CAST(CASE WHEN i % 3 <> 2 THEN 160 + (i % 4) * 80 END AS INTEGER) AS width,
-           CAST(CASE WHEN i % 3 <> 2 THEN 120 + (i % 3) * 60 END AS INTEGER) AS height
-    FROM range(0, 90) t(i)
-    """,
-)
-def q_container_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-media container metadata, no sample decode: MP4 box-tree
-    walk (mvhd/tkhd/mdhd/stsd + sample tables) and MPEG-1 Layer III
-    frame-header walk (bitrate/samplerate tables, ID3v2 skip), both
-    pure byte-structure parsers in operators.containers. The oracle
-    re-derives every field from the generator's closed form — a hash
-    match pins frame counts, durations (exact integer-sample
-    arithmetic), dimensions, and codec fourcc extraction."""
-    from .operators.multimodal import container_stats, synthetic_video_media
-
-    return container_stats(synthetic_video_media(spark, 90))
-
-
-@register(
-    "q_video_near_dups",
-    oracle="""
-    SELECT i AS media_a,
-           i + 100 AS media_b,
-           CAST(((24 + (i % 40)) * (20 + (i % 5) * 10) - 1) // 250 + 1 AS BIGINT)
-             AS n_common_frames
-    FROM range(0, 60) t(i) WHERE i % 3 <> 2
-    """,
-)
-def q_video_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video near-duplicate detection by sampled-frame CONTENT hashes,
-    hash-matched: each synthetic MP4 is unioned with an exact copy
-    under media_id+100, frames are sampled every 250 ms, their byte
-    ranges sliced out of mdat via the parsed sample tables and
-    md5-hashed, and pairs sharing >= 2 frame hashes are emitted. Every
-    (i, i+100) pair must appear with n_common_frames equal to the
-    closed-form sampling-tick count — and NO cross-video pair may
-    appear. Cross-video distinctness is a VERIFIED property of the
-    generator, not a construction guarantee: the filler is
-    position-derived, so two videos sharing a frame at the same
-    (offset, length) would hash equal — tests/test_containers.py::
-    test_synthetic_videos_have_distinct_frames pins that the sizes
-    formula never aligns two ids' frames, so a formula tweak fails in
-    pytest rather than as a confusing oracle mismatch here. The
-    oracle catches spurious collisions or a candidate-generation bug.
-    The video analogue of MinHash-LSH text
-    dedup: candidates meet only inside a frame-hash bucket, no
-    all-pairs work, only 3-column rows shuffle."""
-    from .operators.multimodal import frame_hash_near_dups, synthetic_video_media
-
-    # video rows only: sampled_frame_hashes also handles MP3 audio (the
-    # retagged-copy dedup case, pinned in pytest), which would add
-    # audio pairs this oracle's closed form does not model
-    m = synthetic_video_media(spark, 60).filter(F.col("kind") == "video")
-    copies = m.withColumn("media_id", F.col("media_id") + F.lit(100))
-    return frame_hash_near_dups(m.unionByName(copies), every_ms=250, min_common=2)
 
 
 @register(
@@ -8334,7 +8172,7 @@ def q_compressibility(spark: SparkSession, sf_dir: str) -> DataFrame:
     (boilerplate/spam compresses far below prose) and the high-entropy
     tail (base64/hex/minified blobs) — the Gopher-family repetition
     signal the Catalyst ratio features can't express. One scoring scan
-    (per-payload C call, same cost class as the multimodal codecs)
+    (one per-payload C call)
     into one map-side-combinable aggregate. Rows-only (zlib is not
     SQL-expressible); in-query gates: a planted repeated-phrase doc
     must land deep in the repetitive tail, a planted md5-chain hex doc

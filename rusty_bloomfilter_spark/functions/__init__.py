@@ -1,7 +1,8 @@
 """JVM-side column expression builders (Catalyst-codegen'd, no Python).
 
 The tokenizer is *cross-engine reproducible*: the same token ids are
-computable in Spark SQL and in DuckDB, via md5 — both engines implement the identical published digest. The
+computable in Spark SQL and in DuckDB (for driver-contract oracles),
+via md5 — both engines implement the identical published digest. The
 hot path for production-scale hashing of strings is `F.xxhash64`
 (JVM-side); md5-tokenization exists so exact SQL oracles can pin the
 token pipeline end to end.

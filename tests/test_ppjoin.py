@@ -100,6 +100,17 @@ def test_no_cartesian_in_plan(spark):
     assert "BroadcastNestedLoopJoin" not in phys, phys
 
 
+def test_lsh_recall_audit_gates(spark):
+    # the contract audit's in-row gates must hold at the smoke SF too
+    from rusty_bloomfilter_spark import contract
+
+    row = contract.q_lsh_recall_audit(spark, "/root/testdata/sf0.001").collect()[0]
+    assert row["recall_ok"] is True
+    assert row["err_ok"] is True
+    assert row["n_lsh_true"] <= row["n_lsh"]
+    assert row["hits_hi"] <= row["n_exact_hi"] <= row["n_exact"]
+
+
 def _brute_containment(rows, tau):
     out = {}
     sets = {i: set(ts) for i, ts in rows if ts}
