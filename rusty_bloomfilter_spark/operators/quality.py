@@ -28,16 +28,22 @@ No reference analogue (/root/reference has no text operators).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
-@pandas_udf("double")
-def compression_ratio(text: pd.Series) -> pd.Series:
+def compression_ratio(text: Column) -> Column:
     """len(zlib.compress(utf8, 6)) / len(utf8), rounded to 6 dp.
     NULL text or empty bytes -> NULL (no ratio to report — never a
-    fake 0.0 that a threshold would happily keep or cut)."""
+    fake 0.0 that a threshold would happily keep or cut). The pandas
+    UDF is made here, not at import: declaring it parses its return
+    type through the active SparkContext, and the module must import
+    without one."""
+    return pandas_udf(_ratios, "double")(text)
+
+
+def _ratios(text: pd.Series) -> pd.Series:
     import zlib
 
     def ratio(s):

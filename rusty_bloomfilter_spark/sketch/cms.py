@@ -10,6 +10,21 @@ Row hashing reuses the Kirsch-Mitzenmacher pair expansion that the
 reference pins for the Bloom filter (hasher.rs:48-70): row i probes
 column (h1 + i*h2) mod w — the same double-hashing family, published
 as sufficient for CMS row independence.
+
+Two wire layouts behind one canonical chooser (as HLL's dense/sparse
+and the Bloom filter's dense/sparse codecs), both after the same
+24-byte header:
+  v1 dense  : the d*w uint64 cells, row-major.
+  v2 compact: the d*w cells as uint8, any cell >= 255 written as 255;
+              then an escape list of those cells' flat indices
+              (strictly increasing <u4) and their full values (<u8).
+              The escape count is the body length minus d*w, over 12.
+``to_bytes`` writes v2 exactly when it is smaller (12*escapes <
+7*d*w) and d*w < 2^32 fits the <u4 indices; otherwise v1. The choice
+is a function of the table alone, so bytes stay canonical under any
+partitioning or merge order. In memory the table is always the dense
+uint64 matrix; tables whose cells are mostly below 255 (keyed and
+per-partition builds) cross the wire at ~1/8 of the dense size.
 """
 
 from __future__ import annotations
@@ -24,6 +39,13 @@ from .hashing import hash_pair, tokens_to_u64
 _U64 = np.uint64
 _MAGIC = b"RCMS"
 _HEADER = struct.Struct("<4sBxxxIIQ")  # magic, version, d, w, n_items
+_ESCAPE = 255  # v2 cell marker: the full value is in the escape list
+
+
+def _compact(n_escapes: int, cells: int) -> bool:
+    """v2 is written iff it is smaller than v1 (cells + 12*escapes <
+    8*cells) and every flat index fits its <u4 escape slot."""
+    return cells < 1 << 32 and 12 * n_escapes < 7 * cells
 
 
 class CountMinSketch:
@@ -149,26 +171,63 @@ class CountMinSketch:
     # -- wire ---------------------------------------------------------------
 
     def max_payload_bytes(self) -> int:
-        """``to_bytes`` size: the fixed d x w table."""
+        """Largest ``to_bytes``: the v1 dense d x w uint64 table (the
+        v2 compact layout is written only while it is smaller)."""
         return _HEADER.size + 8 * self.d * self.w
 
     def to_bytes(self) -> bytes:
-        return _HEADER.pack(_MAGIC, 1, self.d, self.w, self.n_items) + self.table.tobytes()
+        flat = self.table.reshape(-1)
+        esc = np.flatnonzero(flat >= _ESCAPE)
+        if not _compact(len(esc), flat.size):
+            return _HEADER.pack(_MAGIC, 1, self.d, self.w, self.n_items) + self.table.tobytes()
+        small = flat.astype(np.uint8)
+        small[esc] = _ESCAPE
+        return b"".join((
+            _HEADER.pack(_MAGIC, 2, self.d, self.w, self.n_items),
+            small.tobytes(),
+            esc.astype("<u4").tobytes(),
+            flat[esc].astype("<u8").tobytes(),
+        ))
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "CountMinSketch":
+        """Decode either layout; only canonical bytes are accepted
+        (``from_bytes(raw).to_bytes() == raw``), anything else raises
+        ``ValueError``."""
         if len(data) < _HEADER.size:
             raise ValueError("not a serialized CountMinSketch (truncated header)")
         magic, version, d, w, n_items = _HEADER.unpack_from(data, 0)
-        if magic != _MAGIC or version != 1:
+        if magic != _MAGIC or version not in (1, 2):
             raise ValueError("not a serialized CountMinSketch")
         body = memoryview(data)[_HEADER.size :]
-        if len(body) != 8 * d * w:
+        cells = d * w
+        n_esc, rem = divmod(len(body) - cells, 12)
+        if (version == 1 and len(body) != 8 * cells) or (version == 2 and (n_esc < 0 or rem)):
             raise ValueError(
                 f"corrupt CountMinSketch payload: {len(body)} bytes for d={d}, w={w}"
             )
-        table = np.frombuffer(body, dtype=_U64).reshape(d, w).copy()
-        return cls(d, w, table, n_items=n_items)
+        if version == 1:
+            table = np.frombuffer(body, dtype=_U64).copy()
+            if _compact(int(np.count_nonzero(table >= _ESCAPE)), cells):
+                raise ValueError("non-canonical CountMinSketch: dense table that is compact")
+        else:
+            if not _compact(n_esc, cells):
+                raise ValueError("non-canonical CountMinSketch: compact table that is dense")
+            small = np.frombuffer(body, dtype=np.uint8, count=cells)
+            idx = np.frombuffer(body, dtype="<u4", count=n_esc, offset=cells)
+            vals = np.frombuffer(body, dtype="<u8", count=n_esc, offset=cells + 4 * n_esc)
+            # the escape indices must be exactly the 255 markers, in
+            # order: this also bounds them and rejects duplicates
+            if not np.array_equal(idx, np.flatnonzero(small == _ESCAPE)):
+                raise ValueError(
+                    "corrupt CountMinSketch payload: escape indices are not the"
+                    " strictly increasing positions of the 255 markers"
+                )
+            if n_esc and int(vals.min()) < _ESCAPE:
+                raise ValueError("corrupt CountMinSketch payload: escaped value below 255")
+            table = small.astype(_U64)
+            table[idx] = vals
+        return cls(d, w, table.reshape(d, w), n_items=n_items)
 
     def __eq__(self, other: object) -> bool:
         if not isinstance(other, CountMinSketch):

@@ -229,14 +229,21 @@ class HyperLogLog:
         # forged states must not enter the merge algebra: a rank above
         # the reachable cap (64-p+1) is unproducible by any insert and
         # would inflate every downstream max-merge permanently; dup
-        # indices would silently last-win
-        if len(idx) != len(np.unique(idx)):
-            raise ValueError("sparse HLL payload has duplicate register indices")
+        # indices would silently last-win. The encoder writes the
+        # nonzero registers in index order, so out-of-order words or a
+        # rank-0 word are non-canonical bytes for the same registers.
+        if (np.diff(idx) <= 0).any():
+            raise ValueError(
+                "sparse HLL register indices must be strictly increasing"
+                " (duplicate or out of order)"
+            )
         ranks = (packed & np.uint32(0x3F)).astype(np.uint8)
         if len(ranks) and int(ranks.max()) > 64 - p + 1:
             raise ValueError(
                 f"sparse HLL register rank {int(ranks.max())} exceeds cap {64 - p + 1}"
             )
+        if len(ranks) and int(ranks.min()) == 0:
+            raise ValueError("sparse HLL payload has a rank-0 register word")
         regs[idx] = ranks
         return cls(p, regs, n_items=n_items)
 

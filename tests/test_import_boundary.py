@@ -29,3 +29,21 @@ def test_aggregate_import_loads_only_core_modules():
     sketch = "rusty_bloomfilter_spark.sketch"
     foreign = {m for m in loaded - CORE if m != sketch and not m.startswith(sketch + ".")}
     assert not foreign, f"{len(loaded)} package modules loaded; not core: {sorted(foreign)}"
+
+
+def test_every_module_imports_without_spark_context():
+    """No module may need a SparkContext at import time (a module-level
+    UDF declaration parses its return type through one)."""
+    code = (
+        "import importlib, pkgutil, traceback\n"
+        "import rusty_bloomfilter_spark as pkg\n"
+        "for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + '.'):\n"
+        "    try:\n"
+        "        importlib.import_module(m.name)\n"
+        "    except Exception as e:\n"
+        "        print(m.name, type(e).__name__)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, check=True
+    ).stdout
+    assert not out, f"modules that fail to import without Spark:\n{out}"

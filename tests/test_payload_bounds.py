@@ -36,6 +36,7 @@ CASES = {
     "tdigest": (lambda: TDigest(21), lambda s: s.update_batch(rng.standard_cauchy(100_000)), False),
     "ddsketch": (lambda: DDSketch(0.05), lambda s: s.add(np.exp(rng.normal(0, 30, 50_000))), False),
     "cms": (lambda: CountMinSketch(3, 64), lambda s: s.add_tokens(TOKENS), True),
+    "cms_compact": (lambda: CountMinSketch(3, 4096), lambda s: s.add_tokens(TOKENS[:20_000]), False),
     "ams": (lambda: CountSketch(3, 64), lambda s: s.add_tokens(TOKENS), True),
     "blocked": (lambda: BlockedBloomFilter.for_np(1000, 0.01), lambda s: s.add_tokens(TOKENS), True),
     "bloom": (lambda: BloomFilter(SHAPE), lambda s: s.add_tokens(TOKENS), True),
@@ -63,3 +64,18 @@ def test_max_payload_bytes_bounds_built_and_merged(name):
     if fixed:
         # saturated fixed-layout sketches reach their bound exactly
         assert len(merged) == bound
+
+
+def test_cms_compact_payload_stays_below_dense_bound():
+    """Cells below 255 cross the wire as one byte each, so a lightly
+    filled count-min table, merged, is the compact layout at about an
+    eighth of the dense bound; the saturated "cms" case stays dense."""
+    make_empty, fill, _ = CASES["cms_compact"]
+    payloads = []
+    for _ in range(3):
+        acc = make_empty()
+        fill(acc)
+        payloads.append(acc.to_bytes())
+    merged = merge_sketch_payloads(payloads)
+    assert merged[4] == 2
+    assert len(merged) < make_empty().max_payload_bytes() / 7

@@ -122,7 +122,10 @@ _SAMPLES = {
     HyperLogLog: [
         HyperLogLog(p).add_tokens(_TOKENS).to_bytes() for p in (14, 6)  # sparse, dense
     ],
-    CountMinSketch: [CountMinSketch(3, 64).add_tokens(_TOKENS).to_bytes()],
+    CountMinSketch: [
+        CountMinSketch(3, 64).add_tokens(t).to_bytes()
+        for t in (_TOKENS, np.repeat(_TOKENS, 64))  # compact, dense (saturated)
+    ],
     CountingBloomFilter: [
         CountingBloomFilter.empty(Shape.for_np(n=500, p=0.01)).add_tokens(_TOKENS).to_bytes()
     ],
@@ -172,6 +175,85 @@ def test_cms_wrong_body_length_raises():
         CountMinSketch.from_bytes(raw[:-8])
 
 
+_CMS_HDR = struct.Struct("<4sBxxxIIQ")
+
+
+def _cms_compact_payload(d, w, small, idx, vals, n_items=1) -> bytes:
+    return b"".join((
+        _CMS_HDR.pack(b"RCMS", 2, d, w, n_items),
+        np.asarray(small, dtype=np.uint8).tobytes(),
+        np.asarray(idx, dtype="<u4").tobytes(),
+        np.asarray(vals, dtype="<u8").tobytes(),
+    ))
+
+
+def _cms_with_escapes(n_esc, d=2, w=12):
+    table = np.full(d * w, 3, dtype=np.uint64)
+    table[1] = 254  # largest cell stored inline
+    table[d * w - n_esc :] = 255 + np.arange(n_esc, dtype=np.uint64) * 1000
+    return CountMinSketch(d, w, table.reshape(d, w), n_items=int(table.sum()))
+
+
+def test_cms_layouts_roundtrip_and_switch_point():
+    """v2 (one byte per cell + escapes) is written exactly while it is
+    smaller than the v1 dense table: 12*escapes < 7*d*w. At d*w = 24
+    that is up to 13 escapes; at 14 both would be 216 bytes, so v1."""
+    d, w = 2, 12
+    cases = [  # (escapes, version, payload bytes)
+        (0, 2, 24 + 24),
+        (1, 2, 24 + 24 + 12),
+        (13, 2, 24 + 24 + 12 * 13),
+        (14, 1, 24 + 8 * 24),
+        (23, 1, 24 + 8 * 24),
+    ]
+    for n_esc, version, size in cases:
+        sk = _cms_with_escapes(n_esc, d, w)
+        raw = sk.to_bytes()
+        assert (raw[4], len(raw)) == (version, size), n_esc
+        got = CountMinSketch.from_bytes(raw)
+        assert got == sk and got.n_items == sk.n_items
+        assert np.array_equal(got.query_tokens(_TOKENS), sk.query_tokens(_TOKENS))
+        assert got.to_bytes() == raw
+        assert len(raw) <= sk.max_payload_bytes() == 24 + 8 * d * w
+
+
+def test_cms_malformed_compact_payloads_rejected():
+    d, w = 2, 12
+    sk = _cms_with_escapes(3, d, w)
+    raw = sk.to_bytes()
+    small = np.frombuffer(raw, np.uint8, d * w, 24)
+    idx = [21, 22, 23]
+    vals = [255, 1255, 2255]
+    assert raw == _cms_compact_payload(d, w, small, idx, vals, sk.n_items)
+
+    def rejects(bad, match=None):
+        with pytest.raises(ValueError, match=match):
+            CountMinSketch.from_bytes(bad)
+
+    rejects(_cms_compact_payload(d, w, small, [21, 23, 22], vals))   # out of order
+    rejects(_cms_compact_payload(d, w, small, [21, 22, 22], vals))   # duplicate
+    rejects(_cms_compact_payload(d, w, small, [21, 22, 24], vals))   # out of range
+    rejects(_cms_compact_payload(d, w, small, idx, [255, 1255, 254]))  # escape below 255
+    more = small.copy()
+    more[0] = 255  # a marker with no escape entry
+    rejects(_cms_compact_payload(d, w, more, idx, vals))
+    rejects(_cms_compact_payload(d, w, small, idx[:2], vals[:2]))   # an escape-less marker
+    for cut in (1, 4, 8):
+        rejects(raw[:-cut], match="bytes")
+    rejects(raw + b"\x00" * 12, match="bytes|escape")
+    rejects(raw[:24 + d * w - 1], match="bytes")
+    # each layout's table written in the other layout is not canonical
+    dense_of_compact = _CMS_HDR.pack(b"RCMS", 1, d, w, 1) + sk.table.tobytes()
+    rejects(dense_of_compact, match="canonical")
+    full = _cms_with_escapes(14, d, w)
+    flat = full.table.reshape(-1)
+    esc = np.flatnonzero(flat >= 255)
+    rejects(
+        _cms_compact_payload(d, w, np.minimum(flat, 255), esc, flat[esc]),
+        match="canonical",
+    )
+
+
 def test_hll_v1_wrong_register_count_raises():
     h = HyperLogLog(10)
     h.add_tokens(np.arange(5000, dtype=np.int64))  # dense encoding
@@ -200,6 +282,17 @@ def test_hll_sparse_forged_rank_rejected():
 def test_hll_sparse_duplicate_indices_rejected():
     with pytest.raises(ValueError, match="duplicate"):
         HyperLogLog.from_bytes(_sparse_hll_payload(14, [(5, 3), (5, 7)]))
+
+
+def test_hll_sparse_decode_is_canonical():
+    """The encoder writes nonzero registers in index order: out-of-order
+    words and rank-0 words would decode to registers whose bytes differ
+    from the payload."""
+    for bad in ([(7, 3), (5, 2)], [(5, 2), (9, 0)]):
+        with pytest.raises(ValueError):
+            HyperLogLog.from_bytes(_sparse_hll_payload(14, bad))
+    raw = _sparse_hll_payload(14, [(5, 2), (7, 3)])
+    assert HyperLogLog.from_bytes(raw).to_bytes() == raw
 
 
 def test_merge_sketch_payloads_mixed_kinds_rejected():
