@@ -218,10 +218,14 @@ class HyperLogLog:
                 raise ValueError(
                     f"corrupt HyperLogLog payload: {regs.size} registers, expected {1 << p}"
                 )
+            if 4 * np.count_nonzero(regs) < regs.size:
+                raise ValueError("non-canonical HyperLogLog: dense registers that are sparse")
             return cls(p, regs, n_items=n_items)
         if len(body) % 4:
             raise ValueError("corrupt sparse HyperLogLog payload length")
         packed = np.frombuffer(body, dtype="<u4").astype(np.uint32)
+        if 4 * len(packed) >= 1 << p:
+            raise ValueError("non-canonical HyperLogLog: sparse registers that are dense")
         regs = np.zeros(1 << p, dtype=np.uint8)
         idx = (packed >> np.uint32(6)).astype(np.int64)
         if len(idx) and (idx >= (1 << p)).any():

@@ -293,6 +293,13 @@ def test_hll_sparse_decode_is_canonical():
             HyperLogLog.from_bytes(_sparse_hll_payload(14, bad))
     raw = _sparse_hll_payload(14, [(5, 2), (7, 3)])
     assert HyperLogLog.from_bytes(raw).to_bytes() == raw
+    # each layout's registers written in the other layout
+    with pytest.raises(ValueError, match="canonical"):
+        HyperLogLog.from_bytes(_sparse_hll_payload(4, [(i, 1) for i in range(4)]))
+    dense = struct.Struct("<4sBBxxQ").pack(b"RHLL", 1, 4, 1) + bytes([1, 1, 1] + [0] * 13)
+    with pytest.raises(ValueError, match="canonical"):
+        HyperLogLog.from_bytes(dense)
+    assert HyperLogLog.from_bytes(_sparse_hll_payload(4, [(i, 1) for i in range(3)])).to_bytes()[4] == 2
 
 
 def test_merge_sketch_payloads_mixed_kinds_rejected():
