@@ -1,49 +1,63 @@
-"""Distributed sketch aggregation: the tree-merge topology.
+"""Distributed sketch aggregation: one partition fold, one row merge.
 
-PySpark has no vectorized custom-Aggregator API, so the idiomatic (and
-north-rule-mandated explicit) substitute is:
+PySpark has no vectorized custom-Aggregator API, so every build is the
+same two explicit steps:
 
-    stage 1  mapInArrow       one sketch row per *input partition*
-                              (map-side combine: row data never
-                              shuffles — only O(sketch_bytes) rows do)
-    stage 2  repartition(fanout) + mapInPandas     partial OR-merge
-    stage 3  repartition(1)   + mapInPandas        final merge
+    fold    ``_fold``: one ``mapInArrow`` body folds a partition's Arrow
+            batches into one accumulator per spec (per key, for keyed
+            builds) and emits one row per (partition, key) with all the
+            payloads side by side. Row data never shuffles; only these
+            O(sketch_bytes) rows do.
+    merge   ``merge_rows``: a left fold of payload rows, in arrival
+            order, into one row. A column plan (``MergeCol``) says which
+            columns are payloads (with their merge function and identity
+            payload), which are counts to sum and which are keys to pass
+            through.
 
-This is exactly ``RDD.treeAggregate(depth=2)`` expressed in DataFrame
-form (semantics pinned by the reference's merge matrices,
-/root/reference/src/bloomfilter/mod.rs:621-761: merges are associative
-and commutative, so any tree shape yields the same bytes).
+Where the merge runs is the only thing that differs between builds:
 
-Unkeyed builds that return bytes (``build_multi`` +
-``collect_multi_bytes``, ``build_sketch_bytes``) run stages 2-3 only
-above a driver budget: while partitions x the largest payload each
-sketch's config can serialize to stays within ``_DRIVER_MERGE_BYTES``
-(``_merges_on_driver``) the stage-1 rows are collected over Arrow in
-the build's own job and merged on the driver, so a build is one Spark
-job with one stage. ``build_sketch``/``tree_merge`` keep the full tree
-for callers that need a lazy single-row DataFrame.
+- unkeyed builds that return bytes (``build_multi`` +
+  ``collect_multi_bytes``, ``build_sketch_bytes``) merge on the driver
+  while partitions x the largest payload each sketch's config can
+  serialize to stays within ``_DRIVER_MERGE_BYTES``
+  (``_merges_on_driver``), so a build is one Spark job with one stage;
+  above it, and for ``build_sketch``/``tree_merge``'s lazy single-row
+  DataFrame, the rows go through the tree levels of ``_merge_levels``
+  (``mapInArrow`` per level, ceil(P/fanout) tasks each, until one task
+  can finish);
+- keyed builds (``build_multi_by_key``, ``build_by_key``) merge per key
+  with ``groupBy(key).applyInArrow`` (``group_merge``), optionally
+  after a salted (key, salt) level.
+
+The reference's merge matrices (``src/bloomfilter/mod.rs:621-761``)
+make merges associative and commutative, so any tree shape or grouping
+yields the same bytes. KLL, t-digest and Misra-Gries merges are not
+byte-associative, but a left fold flushed every ``_FLUSH_AT`` payloads
+equals one left fold over the same rows (tests/test_merge_algebra.py),
+so their bytes depend only on the arrival order.
 
 Scale notes (1000-executor / 100 TB framing):
-- Stage 1 scans row data once, in place — zero row shuffle. The only
-  shuffled bytes are P sketch payloads (P = input partitions), each
-  O(m/8). At P=100k partitions and a 16 MB filter that is ~1.6 TB of
-  payloads in the worst case — which is why fanout is a tree, not a
-  single reducer: each stage-2 task merges P/fanout payloads, and the
-  final task merges only `fanout` of them.
-- Keyed builds (``build_by_key``) shuffle one sketch row per
-  (partition, key): the classic partial-agg pattern. A skewed key
-  (hot `source`) therefore costs nothing extra at stage 1 — its rows
-  are already spread across partitions — and its merge fan-in is
-  bounded by the partition count, optionally salted down further.
+- The fold scans row data once, in place. The only shuffled bytes are
+  P sketch payloads (P = input partitions), each O(m/8). At P=100k
+  partitions and a 16 MB filter that is ~1.6 TB of payloads in the
+  worst case, which is why the merge above the driver budget is a tree:
+  every task merges ~fanout payloads, and a merge never holds more than
+  ``_FLUSH_AT`` of them.
+- Keyed builds shuffle one sketch row per (partition, key): the classic
+  partial-agg pattern. A skewed key (hot `source`) costs nothing extra
+  in the fold, since its rows are already spread across partitions, and
+  its merge fan-in is bounded by the partition count, optionally salted
+  down further.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-from typing import Any
+from collections.abc import Callable, Iterable, Iterator
+from functools import partial
+from typing import Any, NamedTuple
 
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -57,10 +71,11 @@ KEYED_SKETCH_SCHEMA = "key string, payload binary, n_items bigint"
 UpdateFn = Callable[[Any, pa.RecordBatch], None]
 MergePayloadsFn = Callable[[list[bytes]], bytes]
 
-# merge stages fold their payload buffer down to one whenever it grows
-# past this many live payloads — bounds task memory at FLUSH_AT
-# payloads regardless of fan-in (merges are associative, so folding
-# early yields the same canonical bytes)
+# A multi-sketch spec: (name, make_empty, update, merge_payloads).
+MultiSpec = tuple[str, Callable[[], Any], UpdateFn, MergePayloadsFn]
+
+# merge_rows folds a payload buffer down to one whenever it grows past
+# this many live payloads, bounding task memory regardless of fan-in
 _FLUSH_AT = 64
 
 # Largest total of stage-1 payloads the driver collects and merges
@@ -80,34 +95,6 @@ def _merges_on_driver(n_parts: int, empties: list) -> bool:
     if None in bounds:
         return False
     return n_parts * sum(b() for b in bounds) <= _DRIVER_MERGE_BYTES
-
-
-def keyed_payload_merge(
-    key_col: str,
-    *,
-    merge_fn: MergePayloadsFn,
-    sum_cols: tuple[str, ...] = ("n_items",),
-    key_out: Callable[[Any], Any] | None = None,
-):
-    """THE single-payload keyed group-merge for applyInPandas: one row
-    out per key — payload = merge_fn(group payloads), every counter in
-    ``sum_cols`` summed. Shared by build_by_key, the sharded build /
-    cross-snapshot union (sharded.merge_shard_group) and the file-index
-    compaction (pruning.compact_index) so payload handling cannot
-    diverge across them. ``key_out`` coerces the group key for the
-    output schema (int for shard ids, str for file names)."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[key_col].iloc[0]
-        out: dict[str, list] = {
-            key_col: [key if key_out is None else key_out(key)],
-            "payload": [merge_fn([bytes(p) for p in pdf["payload"]])],
-        }
-        for c in sum_cols:
-            out[c] = [int(pdf[c].sum())]
-        return pd.DataFrame(out)
-
-    return merge
 
 
 def safe_partition_count(df: DataFrame, default: int) -> int:
@@ -137,6 +124,214 @@ def _shuffle_conf(df: DataFrame, fallback: int = 200) -> int:
         return fallback
 
 
+# ---------------------------------------------------------------------------
+# The fold
+# ---------------------------------------------------------------------------
+
+
+def iter_key_slices(batch: pa.RecordBatch, key_col: str):
+    """Yield (key, sub_batch) per distinct key in the batch.
+
+    One stable argsort + take, then zero-copy slices — O(n log n) per
+    batch regardless of key cardinality. The previous per-key
+    ``batch.filter(keys == key)`` loop rescanned the whole batch for
+    every key (O(keys_in_batch * batch_rows)): fine for 5 sources,
+    quadratic for high-cardinality keys.
+    """
+    import numpy as np
+
+    col = batch.column(key_col)
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if col.null_count:
+        # None is not orderable against strings (np.unique would raise);
+        # split the null-key rows out and slice the rest normally
+        valid = col.is_valid()
+        null_mask = pc.invert(valid)
+        yield None, batch.filter(null_mask)
+        batch = batch.filter(valid)
+        if batch.num_rows == 0:
+            return
+        col = batch.column(key_col)
+    keys = col.to_numpy(zero_copy_only=False)
+    if len(keys) == 0:
+        return
+    uniq, counts = np.unique(keys, return_counts=True)
+    if len(uniq) == 1:
+        yield keys[0], batch
+        return
+    order = np.argsort(keys, kind="stable")
+    sorted_batch = batch.take(pa.array(order))
+    # uniq is sorted, so equal-key runs in sorted_batch follow uniq order
+    offsets = np.concatenate(([0], np.cumsum(counts)))
+    for i, key in enumerate(uniq):
+        yield key, sorted_batch.slice(offsets[i], offsets[i + 1] - offsets[i])
+
+
+def _multi_schema(specs: list[MultiSpec], *, keyed: bool = False) -> str:
+    return ("key string, " if keyed else "") + "n_rows bigint, " + ", ".join(
+        f"payload_{name} binary, n_{name} bigint" for name, *_ in specs
+    )
+
+
+def _fold(df: DataFrame, specs: list[MultiSpec], *, key_col: str | None = None) -> DataFrame:
+    """THE stage-1 fold: every Arrow batch of a partition goes into one
+    accumulator per spec — per key of ``key_col`` when given
+    (``iter_key_slices``) — in a single pass over the batch.
+
+    Unkeyed, each partition emits exactly one row, empty partitions
+    included: (n_rows, payload_<name>, n_<name>, ...). Keyed, one row
+    per (partition, key), with a leading ``key string`` column.
+    ``df`` must already be projected to the columns the specs (and the
+    key) read."""
+    makers = [mk for _, mk, _, _ in specs]
+    updates = [upd for _, _, upd, _ in specs]
+
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        accs: dict[Any, list] = {}  # key -> [n_rows, acc per spec...]
+        for batch in batches:
+            slices = [(None, batch)] if key_col is None else iter_key_slices(batch, key_col)
+            for key, sub in slices:
+                ent = accs.get(key)
+                if ent is None:
+                    ent = accs[key] = [0, *(mk() for mk in makers)]
+                ent[0] += sub.num_rows
+                for acc, upd in zip(ent[1:], updates):
+                    upd(acc, sub)
+        if key_col is None and not accs:
+            accs[None] = [0, *(mk() for mk in makers)]
+        if not accs:
+            return
+        out: dict[str, list] = {}
+        if key_col is not None:
+            out["key"] = [None if k is None else str(k) for k in accs]
+        out["n_rows"] = [ent[0] for ent in accs.values()]
+        for i, (name, *_rest) in enumerate(specs, start=1):
+            out[f"payload_{name}"] = [ent[i].to_bytes() for ent in accs.values()]
+            out[f"n_{name}"] = [ent[i].n_items for ent in accs.values()]
+        yield pa.RecordBatch.from_pydict(out)
+
+    return df.mapInArrow(fold, schema=_multi_schema(specs, keyed=key_col is not None))
+
+
+def _single(frame: DataFrame, *keys) -> DataFrame:
+    """A one-spec ("sketch") fold or merge under the single-sketch
+    column names: (*keys, payload, n_items)."""
+    return frame.select(
+        *keys, F.col("payload_sketch").alias("payload"), F.col("n_sketch").alias("n_items")
+    )
+
+
+# ---------------------------------------------------------------------------
+# The merge
+# ---------------------------------------------------------------------------
+
+
+class MergeCol(NamedTuple):
+    """One output column of ``merge_rows``, in schema order: a payload
+    column when ``merge`` is set (``identity`` makes its empty payload),
+    a group key passed through from the first row when ``key``, else a
+    count that is summed."""
+
+    name: str
+    merge: MergePayloadsFn | None = None
+    identity: Callable[[], bytes] | None = None
+    key: bool = False
+
+
+def merge_rows(
+    batches: Iterable[pa.RecordBatch], plan: list[MergeCol], *, or_identity: bool = False
+) -> Iterator[pa.RecordBatch]:
+    """THE payload merge: left-fold every row of ``batches``, in arrival
+    order, into one row laid out by ``plan``. Each payload buffer folds
+    down to one payload whenever it reaches ``_FLUSH_AT`` (stream-fold:
+    a task at P=100k partitions would otherwise buffer its whole fan-in
+    before the first merge call).
+
+    Yields that one row, or nothing when ``batches`` hold no rows —
+    unless ``or_identity``, which yields the identity row then (every
+    payload's ``identity()``, counts 0; key columns are not allowed)."""
+    payloads = {c.name: [] for c in plan if c.merge}
+    sums = {c.name: 0 for c in plan if not c.merge and not c.key}
+    first = None
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        if first is None:
+            first = batch.slice(0, 1)
+        for name in sums:
+            sums[name] += pc.sum(batch.column(name)).as_py() or 0
+        for c in plan:
+            if c.merge:
+                buf = payloads[c.name]
+                buf.extend(batch.column(c.name).to_pylist())
+                if len(buf) >= _FLUSH_AT:
+                    payloads[c.name] = [c.merge(buf)]
+    if first is None and not or_identity:
+        return
+    cols = []
+    for c in plan:
+        if c.key:
+            cols.append(first.column(c.name))
+        elif c.merge:
+            buf = payloads[c.name]
+            cols.append(pa.array([c.merge(buf) if buf else c.identity()], pa.binary()))
+        else:
+            cols.append(pa.array([sums[c.name]], pa.int64()))
+    yield pa.RecordBatch.from_arrays(cols, names=[c.name for c in plan])
+
+
+def group_merge(plan: list[MergeCol]):
+    """``merge_rows`` as a ``groupBy(...).applyInArrow`` function: one
+    merged row per group, streamed over the group's batches. Columns the
+    plan does not name (a salt) are dropped."""
+
+    def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return merge_rows(batches, plan)
+
+    return merge
+
+
+def _spec_plan(specs: list[MultiSpec], *, keyed: bool = False) -> list[MergeCol]:
+    """The merge plan of ``_fold``'s rows (``_multi_schema`` order)."""
+    plan = [MergeCol("key", key=True)] if keyed else []
+    plan.append(MergeCol("n_rows"))
+    for name, mk, _upd, mrg in specs:
+        plan.append(MergeCol(f"payload_{name}", mrg, lambda mk=mk: mk().to_bytes()))
+        plan.append(MergeCol(f"n_{name}"))
+    return plan
+
+
+def _merge_levels(
+    rows: DataFrame, plan: list[MergeCol], schema: str, *, fanout: int, n_parts: int,
+    or_identity: bool,
+) -> DataFrame:
+    """The tree levels shared by ``tree_merge`` and ``_tree_merge_multi``
+    -> single-row DataFrame (``or_identity``: the identity row on an
+    empty input, else no row).
+
+    Intermediate levels only help when they REDUCE fan-in: with
+    P <= fanout rows they're pure extra shuffle + python round-trip over
+    the same rows (measured ~2.7s of overhead on 8x 5 MB payloads) — go
+    straight to the final merge then. Above that, repartition(ceil(P/
+    fanout)) per level keeps EVERY task's expected fan-in at ~fanout (a
+    fixed repartition(fanout) would give each task P/fanout payloads —
+    unbounded in P), looping levels until one task can finish the job:
+    depth grows as log_fanout(P)."""
+    level = rows
+    while n_parts > fanout:
+        n_tasks = -(-n_parts // fanout)  # ceil
+        level = level.repartition(n_tasks).mapInArrow(partial(merge_rows, plan=plan), schema)
+        n_parts = n_tasks
+    final = partial(merge_rows, plan=plan, or_identity=or_identity)
+    return level.repartition(1).mapInArrow(final, schema)
+
+
+# ---------------------------------------------------------------------------
+# Single-sketch builds
+# ---------------------------------------------------------------------------
+
+
 def partition_sketches(
     df: DataFrame,
     make_empty: Callable[[], Any],
@@ -144,22 +339,12 @@ def partition_sketches(
     *,
     columns: list[str] | None = None,
 ) -> DataFrame:
-    """Stage 1: fold every Arrow batch of each partition into one local
-    sketch; emit one (payload, n_items) row per partition. Column-prunes
-    before the UDF so the parquet scan reads only what the sketch needs.
-    """
+    """Stage 1 for one sketch: one (payload, n_items) row per partition,
+    from a one-spec ``_fold``. Column-prunes before the UDF so the
+    parquet scan reads only what the sketch needs."""
     if columns:
         df = df.select(*columns)
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc = make_empty()
-        for batch in batches:
-            update(acc, batch)
-        yield pa.RecordBatch.from_pydict(
-            {"payload": [acc.to_bytes()], "n_items": [acc.n_items]}
-        )
-
-    return df.mapInArrow(build, schema=SKETCH_SCHEMA)
+    return _single(_fold(df, [("sketch", make_empty, update, None)]))
 
 
 def tree_merge(
@@ -170,56 +355,19 @@ def tree_merge(
     empty_payload: bytes | None = None,
     n_parts: int | None = None,
 ) -> DataFrame:
-    """Stages 2+3: depth-2 tree reduction over sketch rows. Returns a
-    single-row DataFrame (payload, n_items). ``empty_payload`` (the
-    sketch identity) is emitted when the input has no rows at all."""
-
-    def _fold(batches: Iterator[pd.DataFrame]) -> tuple[list[bytes], int]:
-        # stream-fold: never hold more than _FLUSH_AT payloads live —
-        # a stage task at P=100k partitions would otherwise buffer its
-        # whole fan-in (GBs of payloads) before the first merge call
-        payloads: list[bytes] = []
-        n_items = 0
-        for pdf in batches:
-            payloads.extend(bytes(p) for p in pdf["payload"])
-            n_items += int(pdf["n_items"].sum())
-            if len(payloads) >= _FLUSH_AT:
-                payloads = [merge_payloads(payloads)]
-        return payloads, n_items
-
-    def merge_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        payloads, n_items = _fold(batches)
-        if payloads:
-            yield pd.DataFrame({"payload": [merge_payloads(payloads)], "n_items": [n_items]})
-
-    def merge_final(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        payloads, n_items = _fold(batches)
-        if not payloads and empty_payload is not None:
-            yield pd.DataFrame({"payload": [empty_payload], "n_items": [0]})
-        elif payloads:
-            yield pd.DataFrame({"payload": [merge_payloads(payloads)], "n_items": [n_items]})
-
-    # Intermediate levels only help when they REDUCE fan-in: with
-    # P <= fanout partial rows they're pure extra shuffle + python
-    # round-trip over the same rows (measured ~2.7s of overhead on 8x
-    # 5 MB payloads) — go straight to the final merge then. Above that,
-    # repartition(ceil(P/fanout)) per level keeps EVERY task's expected
-    # fan-in at ~fanout (a fixed repartition(fanout) would give stage-2
-    # tasks P/fanout payloads each — unbounded in P), looping levels
-    # until one task can finish the job: depth grows as log_fanout(P).
-    # Callers that know the upstream partition count pass n_parts;
-    # otherwise it is derived WITHOUT touching .rdd on a shuffled plan
-    # (safe_partition_count — the AQE eager-materialization trap).
+    """The tree levels over (payload, n_items) rows -> single-row
+    DataFrame (payload, n_items). ``empty_payload`` (the sketch
+    identity) is emitted when the input has no rows at all. Callers
+    that know the upstream partition count pass ``n_parts``; otherwise
+    it is derived WITHOUT touching .rdd on a shuffled plan
+    (``safe_partition_count`` — the AQE eager-materialization trap)."""
     if n_parts is None:
         n_parts = safe_partition_count(sketch_df, default=_shuffle_conf(sketch_df))
-    level = sketch_df
-    while n_parts > fanout:
-        n_tasks = -(-n_parts // fanout)  # ceil
-        level = level.repartition(n_tasks).mapInPandas(
-            merge_partition, schema=SKETCH_SCHEMA
-        )
-        n_parts = n_tasks
-    return level.repartition(1).mapInPandas(merge_final, schema=SKETCH_SCHEMA)
+    plan = [MergeCol("payload", merge_payloads, lambda: empty_payload), MergeCol("n_items")]
+    return _merge_levels(
+        sketch_df, plan, SKETCH_SCHEMA, fanout=fanout, n_parts=n_parts,
+        or_identity=empty_payload is not None,
+    )
 
 
 def build_sketch(
@@ -254,46 +402,6 @@ def collect_sketch_bytes(sketch_df: DataFrame) -> tuple[bytes, int]:
     return bytes(rows[0]["payload"]), int(rows[0]["n_items"])
 
 
-def iter_key_slices(batch: pa.RecordBatch, key_col: str):
-    """Yield (key, sub_batch) per distinct key in the batch.
-
-    One stable argsort + take, then zero-copy slices — O(n log n) per
-    batch regardless of key cardinality. The previous per-key
-    ``batch.filter(keys == key)`` loop rescanned the whole batch for
-    every key (O(keys_in_batch * batch_rows)): fine for 5 sources,
-    quadratic for high-cardinality keys.
-    """
-    import numpy as np
-    import pyarrow.compute as pc
-
-    col = batch.column(key_col)
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    if col.null_count:
-        # None is not orderable against strings (np.unique would raise);
-        # split the null-key rows out and slice the rest normally
-        valid = col.is_valid()
-        null_mask = pc.invert(valid)
-        yield None, batch.filter(null_mask)
-        batch = batch.filter(valid)
-        if batch.num_rows == 0:
-            return
-        col = batch.column(key_col)
-    keys = col.to_numpy(zero_copy_only=False)
-    if len(keys) == 0:
-        return
-    uniq, counts = np.unique(keys, return_counts=True)
-    if len(uniq) == 1:
-        yield keys[0], batch
-        return
-    order = np.argsort(keys, kind="stable")
-    sorted_batch = batch.take(pa.array(order))
-    # uniq is sorted, so equal-key runs in sorted_batch follow uniq order
-    offsets = np.concatenate(([0], np.cumsum(counts)))
-    for i, key in enumerate(uniq):
-        yield key, sorted_batch.slice(offsets[i], offsets[i + 1] - offsets[i])
-
-
 def build_by_key(
     df: DataFrame,
     key_col: str,
@@ -304,59 +412,16 @@ def build_by_key(
     columns: list[str] | None = None,
     salt: int = 0,
 ) -> DataFrame:
-    """Per-key sketches with map-side combine.
-
-    Stage 1 (mapInPandas) folds each partition's rows into one sketch
-    *per key present in the partition* — the hot key's row data never
-    concentrates. Stage 2 groupBy(key) merges the tiny sketch rows.
-    ``salt > 0`` adds an intermediate merge level: groupBy(key, salt)
-    first, bounding any single task's fan-in to partitions/salt — use
-    when the partition count is huge (the north rule's explicit skew
-    handling).
-    """
-    cols = columns or df.columns
-    if key_col not in cols:
-        cols = [key_col, *cols]
-    df = df.select(*cols)
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        accs: dict[str, Any] = {}
-        for batch in batches:
-            for key, sub in iter_key_slices(batch, key_col):
-                acc = accs.get(key)
-                if acc is None:
-                    acc = accs[key] = make_empty()
-                update(acc, sub)
-        if accs:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "key": [None if k is None else str(k) for k in accs],
-                    "payload": [a.to_bytes() for a in accs.values()],
-                    "n_items": [a.n_items for a in accs.values()],
-                }
-            )
-
-    partial = df.mapInArrow(build, schema=KEYED_SKETCH_SCHEMA)
-
-    merge_group = keyed_payload_merge("key", merge_fn=merge_payloads)
-
-    if salt > 0:
-        # merge_group ignores the extra _salt column, so it serves both
-        # levels directly (no wrapper indirection)
-        salted = partial.withColumn("_salt", F.pmod(F.xxhash64(F.col("payload")), F.lit(salt)))
-        level1 = salted.groupBy("key", "_salt").applyInPandas(merge_group, KEYED_SKETCH_SCHEMA)
-        return level1.groupBy("key").applyInPandas(merge_group, KEYED_SKETCH_SCHEMA)
-    return partial.groupBy("key").applyInPandas(merge_group, KEYED_SKETCH_SCHEMA)
+    """Per-key sketches with map-side combine -> (key, payload, n_items):
+    a one-spec ``build_multi_by_key`` (same fold, same merge levels and
+    ``salt``)."""
+    spec: list[MultiSpec] = [("sketch", make_empty, update, merge_payloads)]
+    return _single(build_multi_by_key(df, key_col, spec, columns=columns, salt=salt), "key")
 
 
-# A multi-sketch spec: (name, make_empty, update, merge_payloads).
-MultiSpec = tuple[str, Callable[[], Any], UpdateFn, MergePayloadsFn]
-
-
-def _multi_schema(specs: list[MultiSpec]) -> str:
-    return "n_rows bigint, " + ", ".join(
-        f"payload_{name} binary, n_{name} bigint" for name, *_ in specs
-    )
+# ---------------------------------------------------------------------------
+# Multi-sketch builds
+# ---------------------------------------------------------------------------
 
 
 def build_multi(
@@ -366,7 +431,7 @@ def build_multi(
     columns: list[str],
     fanout: int = 16,
 ) -> DataFrame:
-    """N GLOBAL sketches in one scan of the input: stage 1 only.
+    """N GLOBAL sketches in one scan of the input: the fold only.
 
     The unkeyed sibling of ``build_multi_by_key``: every Arrow batch is
     folded into all N accumulators in a single pass — N separate builds
@@ -384,71 +449,18 @@ def build_multi(
     -> one row per input partition (n_rows, payload_<name> binary,
     n_<name> bigint, ...), unmerged.
     """
-    df = df.select(*columns)
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        accs = [mk() for _, mk, _, _ in specs]
-        n_rows = 0
-        for batch in batches:
-            n_rows += batch.num_rows
-            for acc, (_, _, upd, _) in zip(accs, specs):
-                upd(acc, batch)
-        out: dict[str, list] = {"n_rows": [n_rows]}
-        for acc, (name, *_rest) in zip(accs, specs):
-            out[f"payload_{name}"] = [acc.to_bytes()]
-            out[f"n_{name}"] = [acc.n_items]
-        yield pa.RecordBatch.from_pydict(out)
-
-    return df.mapInArrow(build, schema=_multi_schema(specs))
+    return _fold(df.select(*columns), specs)
 
 
 def _tree_merge_multi(
     partial: DataFrame, specs: list[MultiSpec], *, fanout: int, n_parts: int
 ) -> DataFrame:
-    """Stages 2+3 for ``build_multi`` rows: the tree levels of
-    ``tree_merge``, every spec merged side by side -> single row."""
-    schema = _multi_schema(specs)
-
-    def merge_rows(batches: Iterator[pd.DataFrame], *, emit_empty: bool):
-        payloads: dict[str, list[bytes]] = {name: [] for name, *_ in specs}
-        n_items: dict[str, int] = {name: 0 for name, *_ in specs}
-        n_rows = 0
-        for pdf in batches:
-            n_rows += int(pdf["n_rows"].sum())
-            for name, *_rest in specs:
-                payloads[name].extend(bytes(p) for p in pdf[f"payload_{name}"])
-                n_items[name] += int(pdf[f"n_{name}"].sum())
-            # stream-fold per spec: bound live payloads at _FLUSH_AT
-            # each regardless of this task's fan-in (see tree_merge)
-            for name, _mk, _upd, mrg in specs:
-                if len(payloads[name]) >= _FLUSH_AT:
-                    payloads[name] = [mrg(payloads[name])]
-        have_rows = any(payloads[name] for name, *_ in specs)
-        if not have_rows and not emit_empty:
-            return
-        out: dict[str, list] = {"n_rows": [n_rows]}
-        for name, mk, _upd, mrg in specs:
-            out[f"payload_{name}"] = [
-                mrg(payloads[name]) if payloads[name] else mk().to_bytes()
-            ]
-            out[f"n_{name}"] = [n_items[name]]
-        yield pd.DataFrame(out)
-
-    def merge_partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from merge_rows(batches, emit_empty=False)
-
-    def merge_final(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from merge_rows(batches, emit_empty=True)
-
-    # same level topology as tree_merge: skip levels that don't reduce
-    # fan-in; otherwise ceil(P/fanout) tasks per level (~fanout payloads
-    # each) looping until one task can finish
-    level = partial
-    while n_parts > fanout:
-        n_tasks = -(-n_parts // fanout)
-        level = level.repartition(n_tasks).mapInPandas(merge_partial, schema=schema)
-        n_parts = n_tasks
-    return level.repartition(1).mapInPandas(merge_final, schema=schema)
+    """The tree levels for ``build_multi`` rows, every spec merged side
+    by side -> single row (each spec's identity on an empty input)."""
+    return _merge_levels(
+        partial, _spec_plan(specs), _multi_schema(specs), fanout=fanout, n_parts=n_parts,
+        or_identity=True,
+    )
 
 
 def collect_multi_bytes(
@@ -461,34 +473,29 @@ def collect_multi_bytes(
     runs) against ``_DRIVER_MERGE_BYTES``:
 
     - within the budget the rows are collected over Arrow by the
-      build's own job (one job, one stage) and each spec merges on the
-      driver; an empty input gives each spec's
+      build's own job (one job, one stage) and ``merge_rows`` merges
+      them on the driver; an empty input gives each spec's
       ``make_empty().to_bytes()``;
     - above it, or when a spec's sketch declares no largest size, the
       rows go through ``_tree_merge_multi`` (fan-in ``fanout``) and
       the single merged row is collected.
 
-    Merges are associative and commutative, so both routes give the
-    same bytes. The partition count is taken shuffle-safely
+    Both routes are the same left fold, so they give the same bytes.
+    The partition count is taken shuffle-safely
     (``safe_partition_count``), so a post-shuffle input counts as
     ``spark.sql.shuffle.partitions`` partitions.
     """
     n_parts = safe_partition_count(multi_df, default=_shuffle_conf(multi_df))
-    if not _merges_on_driver(n_parts, [mk() for _, mk, _, _ in specs]):
-        row = _tree_merge_multi(multi_df, specs, fanout=fanout, n_parts=n_parts).collect()[0]
-        return int(row["n_rows"]), {
-            name: (bytes(row[f"payload_{name}"]), int(row[f"n_{name}"]))
-            for name, *_ in specs
-        }
-    table = multi_df.toArrow()
-    out: dict[str, tuple[bytes, int]] = {}
-    for name, mk, _upd, mrg in specs:
-        payloads = table.column(f"payload_{name}").to_pylist()
-        out[name] = (
-            mrg(payloads) if payloads else mk().to_bytes(),
-            sum(table.column(f"n_{name}").to_pylist()),
+    if _merges_on_driver(n_parts, [mk() for _, mk, _, _ in specs]):
+        (merged,) = merge_rows(
+            multi_df.toArrow().to_batches(), _spec_plan(specs), or_identity=True
         )
-    return sum(table.column("n_rows").to_pylist()), out
+    else:
+        merged = _tree_merge_multi(multi_df, specs, fanout=fanout, n_parts=n_parts).toArrow()
+    row = merged.to_pylist()[0]
+    return row["n_rows"], {
+        name: (row[f"payload_{name}"], row[f"n_{name}"]) for name, *_ in specs
+    }
 
 
 def build_sketch_bytes(
@@ -524,59 +531,23 @@ def build_multi_by_key(
     (at 100 TB: N x 100 TB of I/O for the same bytes), this folds every
     Arrow batch into all N accumulators per key in a single pass. The
     shuffle still carries only sketch rows — one row per
-    (partition, key) with all N payloads side by side.
+    (partition, key) with all N payloads side by side — and
+    ``groupBy(key).applyInArrow`` merges them. ``salt > 0`` adds an
+    intermediate (key, salt) merge level first, bounding any single
+    task's fan-in to partitions/salt — use when the partition count is
+    huge (the north rule's explicit skew handling).
 
     -> (key, n_rows, payload_<name>, n_<name>, ...) one row per key.
     """
     cols = columns or df.columns
     if key_col not in cols:
         cols = [key_col, *cols]
-    df = df.select(*cols)
-    schema = "key string, n_rows bigint, " + ", ".join(
-        f"payload_{name} binary, n_{name} bigint" for name, *_ in specs
-    )
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        accs: dict[str, list] = {}  # key -> [acc_per_spec..., n_rows]
-        for batch in batches:
-            for key, sub in iter_key_slices(batch, key_col):
-                ent = accs.get(key)
-                if ent is None:
-                    ent = accs[key] = [[mk() for _, mk, _, _ in specs], 0]
-                for acc, (_, _, upd, _) in zip(ent[0], specs):
-                    upd(acc, sub)
-                ent[1] += sub.num_rows
-        if accs:
-            out: dict[str, list] = {
-                "key": [None if k is None else str(k) for k in accs],
-                "n_rows": [ent[1] for ent in accs.values()],
-            }
-            for i, (name, *_rest) in enumerate(specs):
-                out[f"payload_{name}"] = [ent[0][i].to_bytes() for ent in accs.values()]
-                out[f"n_{name}"] = [ent[0][i].n_items for ent in accs.values()]
-            yield pa.RecordBatch.from_pydict(out)
-
-    partial = df.mapInArrow(build, schema=schema)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {
-            "key": [pdf["key"].iloc[0]],
-            "n_rows": [int(pdf["n_rows"].sum())],
-        }
-        for name, _mk, _upd, mrg in specs:
-            out[f"payload_{name}"] = [mrg([bytes(p) for p in pdf[f"payload_{name}"]])]
-            out[f"n_{name}"] = [int(pdf[f"n_{name}"].sum())]
-        return pd.DataFrame(out)
-
+    rows = _fold(df.select(*cols), specs, key_col=key_col)
+    schema = _multi_schema(specs, keyed=True)
+    merge_group = group_merge(_spec_plan(specs, keyed=True))
     if salt > 0:
-        # same skew bound as build_by_key: intermediate (key, salt) merge
-        # level caps any single task's fan-in at partitions/salt;
-        # merge_group ignores the extra _salt column so it serves both
-        # levels directly
-        first_payload = f"payload_{specs[0][0]}"
-        salted = partial.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(first_payload)), F.lit(salt))
+        salted = rows.withColumn(
+            "_salt", F.pmod(F.xxhash64(F.col(f"payload_{specs[0][0]}")), F.lit(salt))
         )
-        level1 = salted.groupBy("key", "_salt").applyInPandas(merge_group, schema)
-        return level1.groupBy("key").applyInPandas(merge_group, schema)
-    return partial.groupBy("key").applyInPandas(merge_group, schema)
+        rows = salted.groupBy("key", "_salt").applyInArrow(merge_group, schema)
+    return rows.groupBy("key").applyInArrow(merge_group, schema)

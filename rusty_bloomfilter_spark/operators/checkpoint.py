@@ -5,18 +5,20 @@ checkpoints with lineage + metrics". Spark has no native checkpointing
 for batch aggregation state, so we define the unit of work as the
 *input file* (deterministic across runs, unlike physical partition
 ids): one sketch row per input file, persisted to a parquet checkpoint
-directory.
+directory. The rows come from the shared stage-1 fold
+(``aggregate._fold``) keyed by ``input_file_name()``.
 
 Resume reads the checkpoint once. Each scan partition drops the rows
-whose file is not in the work-list and folds the rest into one partial
-sketch that also carries its row counts and the files it covered. The
-driver collects the partials over Arrow and merges them; the union of
-their files is the done-list. A full resume is therefore one Spark
-job; a cold or partial build adds its build-and-append job and a fold
-of just the rows it appended. While the partials fit the driver
-budget (``aggregate._merges_on_driver``, shared with the unkeyed
-builds) they merge on the driver; above it they go through the
-distributed tree merge first.
+whose file is not in the work-list and merges the rest with the shared
+Arrow row merge (``aggregate.merge_rows``) into one partial sketch
+that also carries its row counts and the files it covered. The driver
+collects the partials over Arrow and merges them; the union of their
+files is the done-list. A full resume is therefore one Spark job; a
+cold or partial build adds its build-and-append job and a fold of just
+the rows it appended. While the partials fit the driver budget
+(``aggregate._merges_on_driver``, shared with the unkeyed builds) they
+merge on the driver; above it they go through the distributed tree
+merge (``tree_merge``) first.
 
 At 100 TB scale this is the natural granularity: a file (or Iceberg
 data file) is the retry/skip unit; the checkpoint table stays tiny
@@ -36,10 +38,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .aggregate import (
-    _FLUSH_AT,
+    MergeCol,
     MergePayloadsFn,
     UpdateFn,
+    _fold,
     _merges_on_driver,
+    merge_rows,
     tree_merge,
 )
 
@@ -60,39 +64,18 @@ def _file_sketches(
     update: UpdateFn,
     columns: list[str],
 ) -> DataFrame:
-    """One sketch row per input file. Partitions align with file splits,
-    so this is a per-partition dict keyed by file name — a big file read
-    as several splits yields several rows that merge later (OR-merge is
-    associative, so split boundaries don't matter)."""
+    """One sketch row per input file (``CKPT_SCHEMA``): the shared fold
+    keyed by ``input_file_name()``. Partitions align with file splits,
+    so a big file read as several splits yields several rows that merge
+    later (the merge algebra makes split boundaries invisible)."""
     picked = df.select(F.input_file_name().alias("_file"), *columns)
-
-    def build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import numpy as np
-        import pyarrow as pa
-
-        accs: dict[str, object] = {}
-        rows: dict[str, int] = {}
-        for batch in batches:
-            fnames = batch.column("_file").to_numpy(zero_copy_only=False)
-            for fname in np.unique(fnames):
-                sub = batch.filter(pa.array(fnames == fname))
-                acc = accs.get(fname)
-                if acc is None:
-                    acc = accs[fname] = make_empty()
-                    rows[fname] = 0
-                update(acc, sub)
-                rows[fname] += sub.num_rows
-        if accs:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "file": [str(f) for f in accs],
-                    "payload": [a.to_bytes() for a in accs.values()],
-                    "n_items": [a.n_items for a in accs.values()],
-                    "n_rows": [rows[f] for f in accs],
-                }
-            )
-
-    return picked.mapInArrow(build, schema=CKPT_SCHEMA)
+    per_file = _fold(picked, [("sketch", make_empty, update, None)], key_col="_file")
+    return per_file.select(
+        F.col("key").alias("file"),
+        F.col("payload_sketch").alias("payload"),
+        F.col("n_sketch").alias("n_items"),
+        "n_rows",
+    )
 
 
 @dataclass
@@ -119,29 +102,19 @@ def _fold_checkpoint(
     n_parts = ckpt.rdd.getNumPartitions()
     wanted = spark.sparkContext.broadcast(pa.array(work, pa.string()))
 
+    plan = [MergeCol("payload", merge_payloads), MergeCol("n_items"), MergeCol("n_rows")]
+
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        payloads: list[bytes] = []
         files: set[str] = set()
-        n_items = n_rows = 0
-        for batch in batches:
-            batch = batch.filter(pc.is_in(batch.column("file"), value_set=wanted.value))
-            if not batch.num_rows:
-                continue
-            payloads.extend(batch.column("payload").to_pylist())
-            n_items += pc.sum(batch.column("n_items")).as_py()
-            n_rows += pc.sum(batch.column("n_rows")).as_py()
-            files.update(batch.column("file").to_pylist())
-            if len(payloads) >= _FLUSH_AT:
-                payloads = [merge_payloads(payloads)]
-        if payloads:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "payload": [merge_payloads(payloads)],
-                    "n_items": [n_items],
-                    "n_rows": [n_rows],
-                    "files": [list(files)],
-                }
-            )
+
+        def in_work() -> Iterator[pa.RecordBatch]:
+            for batch in batches:
+                batch = batch.filter(pc.is_in(batch.column("file"), value_set=wanted.value))
+                files.update(batch.column("file").to_pylist())
+                yield batch
+
+        for row in merge_rows(in_work(), plan):
+            yield row.append_column("files", pa.array([list(files)], pa.list_(pa.string())))
 
     folded = ckpt.mapInArrow(fold, schema=_PARTIAL_SCHEMA)
     try:

@@ -23,9 +23,10 @@ composition is ours (no reference analogue — it has no I/O).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -132,19 +133,24 @@ def compact_index(*indexes: DataFrame) -> DataFrame:
         raise ValueError("compact_index needs at least one index frame")
 
     from ..sketch import merge_sketch_payloads
-    from .aggregate import keyed_payload_merge
-    from .checkpoint import CKPT_SCHEMA
+    from .aggregate import MergeCol, group_merge
 
-    merge_file_group = keyed_payload_merge(
-        "file",
-        merge_fn=merge_sketch_payloads,
-        sum_cols=("n_items", "n_rows"),
-        key_out=_checked_file_name,
-    )
+    merge_group = group_merge([
+        MergeCol("file", key=True),
+        MergeCol("payload", merge_sketch_payloads),
+        MergeCol("n_items"),
+        MergeCol("n_rows"),
+    ])
+
+    def merge_file_group(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for row in merge_group(batches):
+            _checked_file_name(row.column("file")[0].as_py())
+            yield row
+
     unioned = indexes[0]
     for extra in indexes[1:]:
         unioned = unioned.unionByName(extra)
-    return unioned.groupBy("file").applyInPandas(merge_file_group, CKPT_SCHEMA)
+    return unioned.groupBy("file").applyInArrow(merge_file_group, CKPT_SCHEMA)
 
 
 def prune_files(index: DataFrame, keys: Sequence[int]) -> list[str]:

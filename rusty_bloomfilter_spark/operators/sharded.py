@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from ..sketch import BlockedBloomFilter, merge_sketch_payloads, sketch_from_bytes
 from ..sketch.hashing import splitmix64
-from .aggregate import keyed_payload_merge
+from .aggregate import MergeCol, group_merge
 from .sketches import arrow_flat_tokens, flat_ngram_hashes
 
 SHARD_SALT = np.uint64(0xA076_1D64_78BD_642F)  # splitmix64 increment constant
@@ -59,14 +59,13 @@ SHARD_SALT = np.uint64(0xA076_1D64_78BD_642F)  # splitmix64 increment constant
 SHARDED_SCHEMA = "shard int, payload binary, n_items bigint"
 
 
-# OR-merge sketch rows sharing one shard id -> one row. THE shard-wise
-# merge: the build fan-in (ShardedBloomSketch.build) and the
-# cross-snapshot union (plans/incremental.merge_shard_frames) both go
-# through this single function so their semantics cannot diverge
-# (payload validation, schema, n_items accounting). Body shared with
-# every other single-payload keyed merge via aggregate.
-merge_shard_group = keyed_payload_merge(
-    "shard", merge_fn=merge_sketch_payloads, key_out=int
+# OR-merge sketch rows sharing one shard id -> one row, for
+# groupBy("shard").applyInArrow. THE shard-wise merge: the build fan-in
+# (ShardedBloomSketch.build) and the cross-snapshot union
+# (plans/incremental.merge_shard_frames) both go through it, and its
+# body is aggregate.merge_rows, the merge every build shares.
+merge_shard_group = group_merge(
+    [MergeCol("shard", key=True), MergeCol("payload", merge_sketch_payloads), MergeCol("n_items")]
 )
 
 
@@ -176,7 +175,7 @@ class ShardedBloomSketch:
                 )
 
         partial = df.select(self.col).mapInArrow(build_partition, schema=SHARDED_SCHEMA)
-        return partial.groupBy("shard").applyInPandas(merge_shard_group, SHARDED_SCHEMA)
+        return partial.groupBy("shard").applyInArrow(merge_shard_group, SHARDED_SCHEMA)
 
     def _hash_rows(self, df: DataFrame, *, with_counts: bool = False) -> DataFrame:
         """(shard, h) per token — the narrow routing frame both the

@@ -64,7 +64,7 @@ def merge_shard_frames(a: DataFrame, b: DataFrame) -> DataFrame:
     function with ShardedBloomSketch.build."""
     from ..operators.sharded import merge_shard_group
 
-    return a.unionByName(b).groupBy("shard").applyInPandas(
+    return a.unionByName(b).groupBy("shard").applyInArrow(
         merge_shard_group, SHARDED_SCHEMA
     )
 

@@ -53,6 +53,13 @@ _CODEC_SPARSE = 1
 _HEADER = struct.Struct("<4sBBBBQIQ")
 
 
+def _sparse_codec(shape: Shape, bits: int) -> bool:
+    """The codec rule every encoder and decoder shares: sparse iff the
+    sparse body is smaller (``Shape.is_sparse``) and every index fits
+    the uint32 it is written as."""
+    return shape.is_sparse(bits) and shape.m <= 0xFFFFFFFF
+
+
 def popcount_words(words: np.ndarray) -> int:
     """Total set bits in a uint64 word array."""
     if words.size == 0:
@@ -287,8 +294,7 @@ class BloomFilter:
         Codec picked by the corrected density rule (Shape.is_sparse):
         sparse = sorted uint32 indices, dense = full word array.
         """
-        card = self.cardinality()
-        sparse = self.shape.is_sparse(card) and self.shape.m <= 0xFFFFFFFF
+        sparse = _sparse_codec(self.shape, self.cardinality())
         codec = _CODEC_SPARSE if sparse else _CODEC_DENSE
         header = _HEADER.pack(
             _MAGIC, _VERSION, _KIND_BLOOM, codec, 0, self.shape.m, self.shape.k, self.n_items
@@ -314,7 +320,7 @@ class BloomFilter:
         shape = Shape(m=m, k=k)
         body = memoryview(data)[_HEADER.size :]
         if codec == _CODEC_SPARSE:
-            idx = _sparse_indices(body, m).astype(np.int64)
+            idx = _sparse_indices(body, shape).astype(np.int64)
             return cls.from_indices(shape, idx, n_items=n_items)
         if len(body) != shape.number_of_bytes():
             raise ValueError(
@@ -327,6 +333,8 @@ class BloomFilter:
         tail = m % 64
         if tail and words.size and int(words[-1]) >> tail:
             raise ValueError("corrupt dense BloomFilter payload: padding bits set")
+        if _sparse_codec(shape, popcount_words(words)):
+            raise ValueError("non-canonical BloomFilter payload: dense-coded but sparse by the codec rule")
         return cls(shape, words, n_items=n_items)
 
     # -- dunder ------------------------------------------------------------------
@@ -439,7 +447,7 @@ class SparseBloomBuilder:
         if self._dense is not None:
             return self._dense_to_bytes()
         idx = self.indices()
-        if self.shape.is_sparse(len(idx)) and self.shape.m <= 0xFFFFFFFF:
+        if _sparse_codec(self.shape, len(idx)):
             header = _HEADER.pack(
                 _MAGIC, _VERSION, _KIND_BLOOM, _CODEC_SPARSE, 0,
                 self.shape.m, self.shape.k, self.n_items,
@@ -452,18 +460,23 @@ class SparseBloomBuilder:
         return BloomFilter(self.shape, f.words, self.n_items).to_bytes()
 
 
-def _sparse_indices(body, m: int) -> np.ndarray:
+def _sparse_indices(body, shape: Shape) -> np.ndarray:
     """The uint32 set-bit indices of a sparse-coded body. Every encoder
-    writes them strictly increasing and below m; anything else (trailing
-    bytes, duplicates, forged indices that would set padding bits or
-    crash the scatter with an IndexError) is a corrupt payload."""
+    writes them strictly increasing and below m, and only when the codec
+    rule picks sparse; anything else (trailing bytes, duplicates, forged
+    indices that would set padding bits or crash the scatter with an
+    IndexError, a body the rule would have written dense) is a corrupt
+    payload."""
     if len(body) % 4:
         raise ValueError("corrupt sparse BloomFilter payload length")
     idx = np.frombuffer(body, dtype=np.uint32)
+    m = shape.m
     if idx.size > 1 and not (idx[1:] > idx[:-1]).all():
         raise ValueError("corrupt sparse BloomFilter payload: indices not strictly increasing")
     if idx.size and int(idx[-1]) >= m:
         raise ValueError(f"corrupt sparse BloomFilter payload: index {int(idx[-1])} >= m={m}")
+    if not _sparse_codec(shape, idx.size):
+        raise ValueError("non-canonical BloomFilter payload: sparse-coded but dense by the codec rule")
     return idx
 
 
@@ -496,10 +509,10 @@ def merge_payloads(payloads: list[bytes]) -> bytes:
                 raise ValueError(f"shape mismatch: {Shape(m=h[5], k=h[6])} vs {shape}")
         # same checks as from_bytes: never re-emit forged indices
         idx = np.unique(
-            np.concatenate([_sparse_indices(memoryview(p)[_HEADER.size :], m) for p in payloads])
+            np.concatenate([_sparse_indices(memoryview(p)[_HEADER.size :], shape) for p in payloads])
         )
         n_items = sum(h[7] for h in headers)
-        if shape.is_sparse(len(idx)):
+        if _sparse_codec(shape, len(idx)):
             header = _HEADER.pack(
                 _MAGIC, _VERSION, _KIND_BLOOM, _CODEC_SPARSE, 0, m, k, n_items
             )

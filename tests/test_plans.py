@@ -136,8 +136,8 @@ def test_salted_keyed_build_has_two_merge_levels(spark):
     plan_plain = plan_of(sk.build_by_key(seq, "source"))
     # AQE may print operators in both initial and final plans; compare
     # relative structure: salted has twice the group-merge levels
-    n_salted = plan_salted.count("FlatMapGroupsInPandas")
-    n_plain = plan_plain.count("FlatMapGroupsInPandas")
+    n_salted = plan_salted.count("FlatMapGroupsInArrow")
+    n_plain = plan_plain.count("FlatMapGroupsInArrow")
     assert n_plain >= 1 and n_salted == 2 * n_plain
 
 

@@ -214,24 +214,6 @@ def test_cms_weighted_add():
     assert a.n_items == b.n_items == 6
 
 
-def test_direct_scan_build_equals_standard(spark, sequences_pdf, tmp_path):
-    """fastscan (pyarrow reads in workers) produces the bitwise-same
-    sketch as the standard JVM-scan pipeline."""
-    from rusty_bloomfilter_spark.operators.fastscan import build_sketch_direct
-    from rusty_bloomfilter_spark.operators.sketches import BlockedBloomSketch
-    from rusty_bloomfilter_spark.sketch import merge_sketch_payloads
-
-    path = str(tmp_path / "seq_direct")
-    spark.createDataFrame(sequences_pdf).repartition(5).write.parquet(path)
-
-    sk = BlockedBloomSketch.for_np(n=300_000, p=1e-3)
-    std_payload, std_n = sk.build_bytes(spark.read.parquet(path))
-    d_payload, d_n = build_sketch_direct(
-        spark, path, sk._empty, sk._update, merge_sketch_payloads, columns=["tokens"]
-    )
-    assert d_payload == std_payload and d_n == std_n
-
-
 def test_sql_sketch_aggregates(spark, seq_df, sequences_pdf):
     """Pure-SQL sketch aggregation: hll_agg/bloom_agg payloads are
     bitwise identical to the tree-merge builders (canonical bytes), and
@@ -692,6 +674,75 @@ def test_build_multi_partition_invariance(spark):
     assert seven[0] == one[0] == 20_000
     for name, *_ in specs:
         assert seven[1][name] == one[1][name], name
+
+
+def test_every_route_gives_the_same_sketches(spark, sequences_pdf, tmp_path, monkeypatch):
+    """HLL, CMS and KLL over one token table through every route: the
+    unkeyed driver and tree merges, the keyed build over a constant key
+    (plain and salted), the one-spec keyed build, and the checkpointed
+    build cold and resumed. HLL and CMS payloads and every count must be
+    equal. KLL bytes depend on the merge order, so its rank errors are
+    checked against the bound instead."""
+    from pyspark.sql import functions as F
+
+    from rusty_bloomfilter_spark.operators import aggregate
+    from rusty_bloomfilter_spark.operators.checkpoint import build_with_checkpoint
+    from rusty_bloomfilter_spark.sketch import KLLSketch
+
+    path = str(tmp_path / "seq")
+    spark.createDataFrame(sequences_pdf[["tokens", "n_tok"]]).repartition(6).write.parquet(path)
+    df = spark.read.parquet(path)
+    keyed_df = df.withColumn("k", F.lit("all"))
+    sketches = {"hll": HllSketch(p=12), "cms": CmsSketch(d=3, w=1 << 12), "kll": KllQuantiles(k=50)}
+    specs = [(name, sk._empty, sk._update, sk._merge) for name, sk in sketches.items()]
+    columns = ["tokens", "n_tok"]
+
+    def unkeyed():
+        multi = aggregate.build_multi(df, specs, columns=columns)
+        return aggregate.collect_multi_bytes(multi, specs, fanout=2)
+
+    routes = {"driver": unkeyed()}
+    monkeypatch.setattr(aggregate, "_DRIVER_MERGE_BYTES", 0)
+    routes["tree"] = unkeyed()
+    monkeypatch.undo()
+    for salt in (0, 4):
+        (row,) = aggregate.build_multi_by_key(
+            keyed_df, "k", specs, columns=["k", *columns], salt=salt
+        ).collect()
+        routes[f"keyed salt={salt}"] = (
+            row["n_rows"],
+            {name: (bytes(row[f"payload_{name}"]), row[f"n_{name}"]) for name in sketches},
+        )
+    by_key = {}
+    for name, sk in sketches.items():
+        (row,) = sk.build_by_key(keyed_df, "k").collect()
+        by_key[name] = (bytes(row["payload"]), row["n_items"])
+    routes["build_by_key"] = (len(sequences_pdf), by_key)
+    for resumed in (False, True):
+        out = {}
+        for name, sk in sketches.items():
+            rep = build_with_checkpoint(
+                spark, path, str(tmp_path / f"ckpt_{name}"), sk._empty, sk._update, sk._merge,
+                columns=sk._columns(),
+            )
+            assert rep.resumed_files == (rep.total_files if resumed else 0)
+            assert rep.n_rows == len(sequences_pdf)
+            out[name] = (rep.payload, rep.n_items)
+        routes["resumed" if resumed else "checkpoint"] = (len(sequences_pdf), out)
+
+    n_tok = np.sort(sequences_pdf["n_tok"].to_numpy())
+    qs = np.linspace(0.01, 0.99, 99)
+    bound = KLLSketch(50).rank_error()
+    ref = routes["driver"][1]
+    for route, (n_rows, out) in routes.items():
+        assert n_rows == len(sequences_pdf), route
+        assert out["hll"] == ref["hll"] and out["cms"] == ref["cms"], route
+        assert out["hll"][1] == out["cms"][1] == n_tok.sum(), route
+        assert out["kll"][1] == len(n_tok), route
+        est = KLLSketch.from_bytes(out["kll"][0]).quantile(qs)
+        lo = np.searchsorted(n_tok, est, side="left") / len(n_tok)
+        hi = np.searchsorted(n_tok, est, side="right") / len(n_tok)
+        assert np.maximum(lo - qs, qs - hi).max() <= bound, route
 
 
 def test_ngram_hashes_shorter_than_n_are_empty(spark):

@@ -92,6 +92,43 @@ def test_bloom_dense_wrong_length_rejected():
         BloomFilter.from_bytes(raw + b"\x00" * 8)
 
 
+def test_bloom_dense_coded_sparse_filter_rejected():
+    """Five tokens in a Shape.for_np(n=100_000, p=0.01) filter encode
+    sparse (168 bytes); the same bits dense-coded (119,844 bytes) are a
+    non-canonical payload and must not decode."""
+    shape = Shape.for_np(n=100_000, p=0.01)
+    f = BloomFilter.empty(shape).add_tokens(np.arange(5, dtype=np.int64))
+    canonical = f.to_bytes()
+    assert canonical[6] == 1 and len(canonical) == 168
+    dense = _BLOOM_HDR.pack(b"RBSK", 1, 1, 0, 0, shape.m, shape.k, f.n_items) + f.words.tobytes()
+    assert len(dense) == 119_844
+    with pytest.raises(ValueError, match="non-canonical"):
+        BloomFilter.from_bytes(dense)
+    with pytest.raises(ValueError, match="non-canonical"):
+        merge_payloads([canonical, dense])
+
+
+def test_bloom_sparse_coded_dense_filter_rejected():
+    """The mirror case: a sparse body whose index count, or whose m,
+    the codec rule would have written dense is rejected by the decoder
+    and by merge_payloads' sparse fast path."""
+    shape = Shape.for_np(n=100, p=0.01)
+    f = BloomFilter.empty(shape).add_tokens(_TOKENS)
+    canonical = f.to_bytes()
+    assert canonical[6] == 0
+    sparse = _sparse_payload(shape.m, shape.k, f.to_indices(), f.n_items)
+    small = _sparse_payload(shape.m, shape.k, [1, 2])
+    assert BloomFilter.from_bytes(small).to_bytes() == small
+    huge_m = _sparse_payload(1 << 33, 3, [1, 2])  # indices past 2^32 cannot be uint32
+    for bad in (sparse, huge_m):
+        with pytest.raises(ValueError, match="non-canonical"):
+            BloomFilter.from_bytes(bad)
+    with pytest.raises(ValueError, match="non-canonical"):
+        merge_payloads([small, sparse])
+    with pytest.raises(ValueError, match="non-canonical"):
+        merge_payloads([huge_m, huge_m])
+
+
 def test_shape_for_np_clamps_k_at_64():
     s = Shape.for_np(10**6, 1e-20)  # optimal k would be 66
     assert s.k == 64
