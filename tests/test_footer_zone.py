@@ -152,8 +152,8 @@ def test_storage_profile_single_file_and_missing(spark, tmp_path):
 
 
 def test_storage_profile_hive_partitioned_tree(spark, tmp_path):
-    # review fix: recursive part-file discovery — the partitionBy
-    # layout q_partitioned_scan writes must be profileable too
+    # review fix: recursive part-file discovery — a partitionBy
+    # layout must be profileable too
     from pyspark.sql import functions as F
 
     from rusty_bloomfilter_spark.operators.zonemap import storage_profile

@@ -47,3 +47,26 @@ def test_every_module_imports_without_spark_context():
         [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, check=True
     ).stdout
     assert not out, f"modules that fail to import without Spark:\n{out}"
+
+
+# Operator families whose last harness query was deleted with the
+# relational and analytics queries; the harness must not load them.
+NO_HARNESS_CALLER = {
+    "assoc", "benford", "changepoint", "compaction", "cube", "drift", "funnel",
+    "gof", "graph", "integrity", "keyness", "layout", "markov", "outliers",
+    "profile", "reconcile", "retention", "sampling", "scd", "sharding", "spans",
+    "stats", "strings", "survival", "sweep", "temporal", "trend", "validate",
+}
+
+
+def test_harness_import_skips_families_without_a_query():
+    code = (
+        "import sys\n"
+        "import rusty_bloomfilter_spark.contract\n"
+        "print(*(m for m in sys.modules if m.startswith('rusty_bloomfilter_spark.operators.')))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, check=True
+    ).stdout
+    loaded = {m.rsplit(".", 1)[1] for m in out.split()}
+    assert not loaded & NO_HARNESS_CALLER, sorted(loaded & NO_HARNESS_CALLER)

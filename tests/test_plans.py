@@ -21,17 +21,6 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
-def test_pricing_summary_pushdown_and_partial_agg(spark):
-    from rusty_bloomfilter_spark.contract import q_pricing_summary
-
-    plan = plan_of(q_pricing_summary(spark, SF))
-    assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
-    # map-side combine: partial_sum before the exchange
-    assert "partial_sum" in plan
-    # column pruning: unneeded wide columns never read
-    assert "l_comment" not in plan
-
-
 def test_bloom_build_scan_reads_only_tokens(spark):
     from rusty_bloomfilter_spark.operators.sketches import BlockedBloomSketch
     from rusty_bloomfilter_spark.sources import load_table
@@ -53,14 +42,6 @@ def test_bloom_build_scan_reads_only_tokens(spark):
         # through mapInArrow's .select)
         assert "ReadSchema: struct<tokens:array<int>>" in plan
         assert "doc_id" not in plan.split("ReadSchema")[1].splitlines()[0]
-
-
-def test_top_customers_broadcast_join(spark):
-    from rusty_bloomfilter_spark.contract import q_top_customers
-
-    plan = plan_of(q_top_customers(spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_semi_join_candidates_broadcast(spark):
@@ -260,88 +241,8 @@ def test_bloom_join_prune_filters_before_join(spark):
     assert "join" in order, plan
 
 
-def test_domain_cap_one_shuffle_and_pruned_scan(spark):
-    """The window rank and the per-source aggregate share one hash
-    partitioning on source: exactly ONE Exchange in the whole plan —
-    at 100 TB the cap pass costs a single shuffle. The documents scan
-    must not read text (only doc_id/source/n_chars)."""
-    import re
-
-    from rusty_bloomfilter_spark.contract import q_domain_cap
-
-    plan = plan_of(q_domain_cap(spark, SF))
-    n_exchanges = len(re.findall(r"\(\d+\) Exchange", plan))
-    assert n_exchanges == 1, plan
-    read_schema = plan.split("ReadSchema")[1][:200]
-    assert "text" not in read_schema, read_schema
-
-
-def test_temperature_mix_broadcasts_rates(spark):
-    """The rates frame is |domains| rows: the corpus-side join MUST be
-    a broadcast — a sort-merge join would shuffle the whole corpus to
-    apply a 20-row threshold map."""
-    from rusty_bloomfilter_spark.contract import q_temperature_mix
-
-    plan = plan_of(q_temperature_mix(spark, SF))
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-
-
-def test_span_dedup_single_corpus_pass_pruned_scan(spark):
-    """Span dedup reads the corpus exactly ONCE: occurrence counts and
-    canonical owners are window functions over the key partition, not
-    a groupBy+self-join (which re-runs the explode+md5 stage per join
-    side — at 100 TB that doubles the most expensive stage). The scan
-    must also not read lang/source/n_chars (only doc_id + text)."""
-    import re
-
-    from rusty_bloomfilter_spark.contract import q_span_dedup
-
-    plan = plan_of(q_span_dedup(spark, SF))
-    n_scans = len(re.findall(r"\(\d+\) Scan parquet", plan))
-    assert n_scans == 1, plan
-    assert "Join" not in plan and "CartesianProduct" not in plan, plan
-    read_schema = plan.split("ReadSchema")[1][:200]
-    assert "lang" not in read_schema and "n_chars" not in read_schema, read_schema
-
-
-def test_pack_sequences_no_global_sort(spark):
-    """Packing's running sum is a PER-KEY window: the plan may sort
-    within hash partitions but must never range-partition (a global
-    sort would serialize the corpus through one ordering at scale).
-    The final (source, bin) aggregate map-side combines."""
-    from rusty_bloomfilter_spark.contract import q_pack_sequences
-
-    plan = plan_of(q_pack_sequences(spark, SF))
-    assert "rangepartitioning" not in plan, plan
-    assert "partial_count" in plan or "partial_sum" in plan, plan
-
-
-def test_regional_volume_plan_broadcasts_dims(spark):
-    """q_regional_volume's six-table join: dimension sides broadcast
-    (no shuffle for supplier/nation/region) and the date filter pushes
-    into the orders scan."""
-    import contextlib
-    import io
-    import re
-
-    from rusty_bloomfilter_spark.contract import _QUERIES
-
-    df = _QUERIES["q_regional_volume"](spark, "/root/testdata/sf0.001")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    phys = buf.getvalue()
-    assert phys.count("BroadcastHashJoin") >= 3, phys
-    # date predicate reaches the orders parquet scan
-    m = re.search(r"PushedFilters: \[[^\]]*o_orderdate[^\]]*GreaterThanOrEqual", phys)
-    assert m or "o_orderdate" in phys.split("PushedFilters")[1][:400], phys
-    rows = df.collect()
-    assert all(r["revenue"] > 0 for r in rows)
-
-
 def test_partitioned_scan_prunes_directories(spark, tmp_path):
-    """q_partitioned_scan's layout: a predicate on the partition column
+    """A partitionBy parquet layout: a predicate on the partition column
     must land in PartitionFilters (directory pruning, before any file
     I/O) and the scan must read only the matching partitions."""
     import contextlib
