@@ -9,16 +9,19 @@ directory. The rows come from the shared stage-1 fold
 (``aggregate._fold``) keyed by ``input_file_name()``.
 
 Resume reads the checkpoint once. Each scan partition drops the rows
-whose file is not in the work-list and merges the rest with the shared
-Arrow row merge (``aggregate.merge_rows``) into one partial sketch
-that also carries its row counts and the files it covered. The driver
-collects the partials over Arrow and merges them; the union of their
-files is the done-list. A full resume is therefore one Spark job; a
-cold or partial build adds its build-and-append job and a fold of just
-the rows it appended. While the partials fit the driver budget
+whose file is not in the work-list (an Arrow array in the task
+closure) and merges the rest with the shared Arrow row merge
+(``aggregate.merge_rows``) into one partial sketch that also carries
+its row counts and the files it covered. The driver collects the
+partials over Arrow and merges them; the union of their files is the
+done-list. A full resume is therefore one Spark job; a cold or partial
+build adds its build-and-append job and a fold of just the rows it
+appended. While the partials fit the driver budget
 (``aggregate._merges_on_driver``, shared with the unkeyed builds) they
 merge on the driver; above it they go through the distributed tree
-merge (``tree_merge``) first.
+merge (``tree_merge``) first. The partial count is bounded from the
+checkpoint's part-file listing, so the scan is planned only once, by
+the job itself.
 
 At 100 TB scale this is the natural granularity: a file (or Iceberg
 data file) is the retry/skip unit; the checkpoint table stays tiny
@@ -89,6 +92,7 @@ class _Folded:
 def _fold_checkpoint(
     spark: SparkSession,
     ckpt_dir: str,
+    part_sizes: list[int],
     work: list[str],
     merge_payloads: MergePayloadsFn,
     empty,
@@ -97,10 +101,12 @@ def _fold_checkpoint(
     """Fold the checkpoint rows of ``work``'s files in one read: one
     partial per scan partition, merged on the driver (or by
     ``tree_merge`` when the partials would exceed the driver budget).
-    Rows of files outside ``work`` are ignored."""
+    Rows of files outside ``work`` are ignored. ``part_sizes`` are the
+    byte sizes of the checkpoint's parquet parts; they bound the scan
+    partitions without planning the scan."""
     ckpt = spark.read.schema(CKPT_SCHEMA).parquet(ckpt_dir)
-    n_parts = ckpt.rdd.getNumPartitions()
-    wanted = spark.sparkContext.broadcast(pa.array(work, pa.string()))
+    n_parts = _max_scan_partitions(spark, part_sizes)
+    wanted = pa.array(work, pa.string())
 
     plan = [MergeCol("payload", merge_payloads), MergeCol("n_items"), MergeCol("n_rows")]
 
@@ -109,7 +115,9 @@ def _fold_checkpoint(
 
         def in_work() -> Iterator[pa.RecordBatch]:
             for batch in batches:
-                batch = batch.filter(pc.is_in(batch.column("file"), value_set=wanted.value))
+                keep = pc.is_in(batch.column("file"), value_set=wanted)
+                if keep.false_count:
+                    batch = batch.filter(keep)
                 files.update(batch.column("file").to_pylist())
                 yield batch
 
@@ -117,24 +125,21 @@ def _fold_checkpoint(
             yield row.append_column("files", pa.array([list(files)], pa.list_(pa.string())))
 
     folded = ckpt.mapInArrow(fold, schema=_PARTIAL_SCHEMA)
-    try:
-        if _merges_on_driver(n_parts, [empty]):
-            table = folded.toArrow()
-            payloads = table.column("payload").to_pylist()
-        else:
-            # cached so the counters and the tree merge share one fold
-            folded.persist()
-            try:
-                table = folded.drop("payload").toArrow()
-                merged = tree_merge(
-                    folded.select("payload", "n_items"), merge_payloads,
-                    fanout=fanout, n_parts=n_parts,
-                ).collect()
-            finally:
-                folded.unpersist()
-            payloads = [bytes(r["payload"]) for r in merged]
-    finally:
-        wanted.destroy()
+    if _merges_on_driver(n_parts, [empty]):
+        table = folded.toArrow()
+        payloads = table.column("payload").to_pylist()
+    else:
+        # cached so the counters and the tree merge share one fold
+        folded.persist()
+        try:
+            table = folded.drop("payload").toArrow()
+            merged = tree_merge(
+                folded.select("payload", "n_items"), merge_payloads,
+                fanout=fanout, n_parts=n_parts,
+            ).collect()
+        finally:
+            folded.unpersist()
+        payloads = [bytes(r["payload"]) for r in merged]
     return _Folded(
         payloads=payloads,
         n_items=sum(table.column("n_items").to_pylist()),
@@ -197,8 +202,9 @@ def build_with_checkpoint(
         empty=empty, fanout=fanout,
     )
     folds: list[_Folded] = []
-    if _ckpt_exists(spark, ckpt_dir):
-        folds.append(fold(files))
+    parts = _ckpt_part_sizes(spark, ckpt_dir)
+    if parts:
+        folds.append(fold(parts, files))
     done = folds[0].files if folds else set()
     missing = [f for f in files if f not in done]
 
@@ -207,7 +213,7 @@ def build_with_checkpoint(
             spark.read.parquet(*missing), make_empty, update, columns=columns
         )
         part.write.mode("append").parquet(ckpt_dir)
-        folds.append(fold(missing))
+        folds.append(fold(_ckpt_part_sizes(spark, ckpt_dir), missing))
 
     payloads = [p for f in folds for p in f.payloads]
     return CheckpointReport(
@@ -220,13 +226,24 @@ def build_with_checkpoint(
     )
 
 
-def _ckpt_exists(spark: SparkSession, ckpt_dir: str) -> bool:
-    """True iff ``ckpt_dir`` holds parquet parts, checked through the
-    Hadoop FileSystem of its URI (so ``hdfs:``/``s3a:`` work too)."""
+def _ckpt_part_sizes(spark: SparkSession, ckpt_dir: str) -> list[int]:
+    """Byte sizes of the parquet parts in ``ckpt_dir`` (empty when it
+    holds none), listed through the Hadoop FileSystem of its URI (so
+    ``hdfs:``/``s3a:`` work too)."""
     jvm = spark.sparkContext._jvm
     path = jvm.org.apache.hadoop.fs.Path(ckpt_dir)
     fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     if not fs.exists(path):
-        return False
+        return []
     parts = fs.globStatus(jvm.org.apache.hadoop.fs.Path(path, "*.parquet"))
-    return parts is not None and len(parts) > 0
+    return [p.getLen() for p in parts] if parts is not None else []
+
+
+def _max_scan_partitions(spark: SparkSession, part_sizes: list[int]) -> int:
+    """Upper bound on the partitions of a scan of files this size: Spark
+    never splits a file finer than min(maxPartitionBytes,
+    openCostInBytes), and every scan partition holds at least one
+    split."""
+    conf = spark._jsparkSession.sessionState().conf()
+    split = min(conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes())
+    return max(1, sum(-(-size // split) for size in part_sizes))

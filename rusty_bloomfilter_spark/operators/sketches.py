@@ -421,7 +421,9 @@ class BlockedBloomSketch(_ColumnSketch):
     filter layout is not required."""
 
     def __init__(self, filt: BlockedBloomFilter, *, col: str = "tokens", ngram: int = 1, scalar: bool = False):
-        self.proto = filt
+        # only the size: every task closure pickles this object, and a
+        # kept all-zero filter would ship its whole block array with it
+        self.n_blocks = filt.n_blocks
         self.col = col
         self.ngram = ngram
         self.scalar = scalar
@@ -430,8 +432,13 @@ class BlockedBloomSketch(_ColumnSketch):
     def for_np(cls, n: int, p: float, **kw) -> "BlockedBloomSketch":
         return cls(BlockedBloomFilter.for_np(n, p), **kw)
 
+    @property
+    def proto(self) -> BlockedBloomFilter:
+        """An empty filter of this sketch's size."""
+        return self._empty()
+
     def _empty(self) -> BlockedBloomFilter:
-        return BlockedBloomFilter(self.proto.n_blocks)
+        return BlockedBloomFilter(self.n_blocks)
 
     def _update(self, acc: BlockedBloomFilter, batch) -> None:
         if self.scalar:

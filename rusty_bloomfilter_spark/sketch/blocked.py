@@ -24,6 +24,20 @@ p^(1/8).)
 Same merge algebra as every sketch here: OR, associative +
 commutative + idempotent, empty identity, canonical bytes. Zero false
 negatives (probe masks computed identically to insert masks).
+
+Two wire layouts behind one canonical chooser (as the classic filter's
+dense/sparse codecs and HLL's and CMS's compact layouts), both after
+the same 24-byte header:
+  v1 dense : the n_blocks x 4 uint64 words.
+  v2 sparse: the strictly increasing <u4 indices of the non-empty
+             blocks, then each listed block's four <u8 words; the
+             block count is the body length over 36.
+``to_bytes`` writes v2 exactly when it is smaller (36*nnz <
+32*n_blocks) and every block index fits its <u4 slot (n_blocks <=
+2^32); otherwise v1. The choice is a function of the words alone, so
+bytes stay canonical under any partitioning or merge order. In memory
+the words are always dense; per-file and per-key filters that touch a
+fraction of their blocks cross the wire at ~36/32 x that fraction.
 """
 
 from __future__ import annotations
@@ -49,6 +63,23 @@ _BLOCK_BITS = 256
 
 _MAGIC = b"RBKB"
 _HEADER = struct.Struct("<4sBxxxQQ")  # magic, version, n_blocks, n_items
+_SPARSE_ENTRY = 4 + 32  # v2: one <u4 block index + one block's words
+_BLOCK = np.dtype("V32")  # one block as a single item: row gathers/scatters
+
+
+def _sparse_layout(nnz: int, n_blocks: int) -> bool:
+    """v2 is written iff it is smaller than v1 (36*nnz < 32*n_blocks)
+    and every block index fits its <u4 slot."""
+    return n_blocks <= 1 << 32 and _SPARSE_ENTRY * nnz < 32 * n_blocks
+
+
+def _block_or(blocks: np.ndarray) -> np.ndarray:
+    """uint64[n_blocks, 4] -> uint64[n_blocks]: each block's words OR-ed
+    (nonzero iff the block has a bit set)."""
+    acc = blocks[:, 0] | blocks[:, 1]
+    acc |= blocks[:, 2]
+    acc |= blocks[:, 3]
+    return acc
 
 
 def _poisson_fpr(lam: float) -> float:
@@ -214,20 +245,62 @@ class BlockedBloomFilter:
     # -- wire -------------------------------------------------------------------
 
     def max_payload_bytes(self) -> int:
-        """``to_bytes`` size: the fixed block array."""
+        """Largest ``to_bytes``: the v1 dense block array (the v2 sparse
+        layout is written only while it is smaller)."""
         return _HEADER.size + self.words.nbytes
 
     def to_bytes(self) -> bytes:
-        return _HEADER.pack(_MAGIC, 1, self.n_blocks, self.n_items) + self.words.tobytes()
+        blocks = self.words.reshape(-1, 4)
+        filled = _block_or(blocks) != 0
+        if not _sparse_layout(int(np.count_nonzero(filled)), self.n_blocks):
+            return _HEADER.pack(_MAGIC, 1, self.n_blocks, self.n_items) + self.words.tobytes()
+        idx = np.flatnonzero(filled)
+        return b"".join((
+            _HEADER.pack(_MAGIC, 2, self.n_blocks, self.n_items),
+            idx.astype("<u4").tobytes(),
+            blocks.take(idx, axis=0).astype("<u8", copy=False).tobytes(),
+        ))
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "BlockedBloomFilter":
+        """Decode either layout; only canonical bytes are accepted
+        (``from_bytes(raw).to_bytes() == raw``), anything else raises
+        ``ValueError``."""
         if len(data) < _HEADER.size:
             raise ValueError("not a serialized BlockedBloomFilter")
         magic, version, n_blocks, n_items = _HEADER.unpack_from(data, 0)
-        if magic != _MAGIC or version != 1:
+        if magic != _MAGIC or version not in (1, 2) or n_blocks == 0:
             raise ValueError("not a serialized BlockedBloomFilter")
-        words = np.frombuffer(memoryview(data)[_HEADER.size :], dtype=_U64).copy()
+        body = memoryview(data)[_HEADER.size :]
+        if version == 1:
+            if len(body) != 32 * n_blocks:
+                raise ValueError(
+                    f"corrupt BlockedBloomFilter payload: {len(body)} bytes for {n_blocks} blocks"
+                )
+            words = np.frombuffer(body, dtype="<u8").astype(_U64)
+            nnz = int(np.count_nonzero(_block_or(words.reshape(-1, 4))))
+            if _sparse_layout(nnz, n_blocks):
+                raise ValueError("non-canonical BlockedBloomFilter: dense blocks that are sparse")
+            return cls(n_blocks, words, n_items=n_items)
+        nnz, rem = divmod(len(body), _SPARSE_ENTRY)
+        if rem:
+            raise ValueError(
+                f"corrupt BlockedBloomFilter payload: {len(body)} bytes is not a whole"
+                f" number of {_SPARSE_ENTRY}-byte sparse blocks"
+            )
+        if not _sparse_layout(nnz, n_blocks):
+            raise ValueError("non-canonical BlockedBloomFilter: sparse blocks that are dense")
+        idx = np.frombuffer(body, dtype="<u4", count=nnz)
+        blocks = np.frombuffer(body, dtype="<u8", count=4 * nnz, offset=4 * nnz).reshape(-1, 4)
+        if nnz and (int(idx[-1]) >= n_blocks or bool((idx[1:] <= idx[:-1]).any())):
+            raise ValueError(
+                "corrupt BlockedBloomFilter payload: block indices must be strictly"
+                f" increasing and < n_blocks={n_blocks}"
+            )
+        if not _block_or(blocks).all():
+            raise ValueError("corrupt BlockedBloomFilter payload: a listed block is empty")
+        words = np.zeros(4 * n_blocks, dtype=_U64)
+        words.view(_BLOCK)[idx] = blocks.view(_BLOCK).reshape(-1)
         return cls(n_blocks, words, n_items=n_items)
 
     def __eq__(self, other: object) -> bool:

@@ -77,3 +77,15 @@ def test_spark_build_matches_oracle(spark, sequences_pdf):
     # distributed probe: zero FN over all tokens
     hits, total = sk.count_contained(df, payload, spark)
     assert hits == total == n_items
+
+
+def test_sketch_keeps_only_the_block_count():
+    """Task closures pickle the column sketch: it must not carry a
+    block array, while ``proto`` still reads as an empty filter."""
+    import pickle
+
+    from rusty_bloomfilter_spark.operators.sketches import BlockedBloomSketch
+
+    sk = BlockedBloomSketch.for_np(n=1 << 20, p=1e-3)
+    assert sk.proto == BlockedBloomFilter(sk.n_blocks)
+    assert len(pickle.dumps(sk)) < 1000 < sk.proto.number_of_bytes()

@@ -9,7 +9,7 @@ positions are pinned: (h1 + i*h2) mod m for i < k (hasher.rs:48-70).
 import numpy as np
 import pytest
 
-from rusty_bloomfilter_spark.sketch import BloomFilter, Shape, km_indices
+from rusty_bloomfilter_spark.sketch import BloomFilter, Shape, km_indices, popcount_words
 
 SHAPE = Shape(m=60, k=2)
 
@@ -213,3 +213,15 @@ def test_canonical_bytes_order_independent():
     a = BloomFilter.empty(shape).add_tokens(items)
     b = BloomFilter.empty(shape).add_tokens(items[::-1].copy())
     assert a.to_bytes() == b.to_bytes()
+
+
+def test_popcount_words_matches_bin_count():
+    ones = np.uint64(0xFFFFFFFFFFFFFFFF)
+    single = np.uint64(1) << np.arange(64, dtype=np.uint64)
+    rng = np.random.default_rng(3)
+    # more words than one SWAR pass takes, so the chunk seam is covered
+    rand = rng.integers(0, 1 << 63, 40_000, dtype=np.int64).view(np.uint64) * np.uint64(3)
+    for words in (np.zeros(5, np.uint64), np.full(7, ones), single, rand, np.zeros(0, np.uint64)):
+        assert popcount_words(words) == sum(bin(int(w)).count("1") for w in words)
+    assert popcount_words(np.full(3, ones)) == 192
+    assert popcount_words(single) == 64

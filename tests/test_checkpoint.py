@@ -6,8 +6,18 @@ import pytest
 
 from rusty_bloomfilter_spark.operators import aggregate, checkpoint
 from rusty_bloomfilter_spark.operators.checkpoint import CKPT_SCHEMA, build_with_checkpoint
-from rusty_bloomfilter_spark.operators.sketches import BloomSketch, flatten_tokens
-from rusty_bloomfilter_spark.sketch import BloomFilter, Shape, merge_payloads
+from rusty_bloomfilter_spark.operators.sketches import (
+    BlockedBloomSketch,
+    BloomSketch,
+    flatten_tokens,
+)
+from rusty_bloomfilter_spark.sketch import (
+    BlockedBloomFilter,
+    BloomFilter,
+    Shape,
+    merge_payloads,
+    merge_sketch_payloads,
+)
 
 SHAPE = Shape.for_np(n=100_000, p=1e-3)
 
@@ -86,11 +96,30 @@ def test_checkpoint_file_uri_resume(spark, sequences_pdf, seq_parquet, tmp_path)
 
 
 def test_ckpt_exists_needs_parquet_parts(spark, tmp_path):
-    assert not checkpoint._ckpt_exists(spark, str(tmp_path / "absent"))
+    assert checkpoint._ckpt_part_sizes(spark, str(tmp_path / "absent")) == []
     (tmp_path / "empty").mkdir()
     (tmp_path / "empty" / "_SUCCESS").write_bytes(b"")
-    assert not checkpoint._ckpt_exists(spark, str(tmp_path / "empty"))
-    assert not checkpoint._ckpt_exists(spark, (tmp_path / "empty").as_uri())
+    assert checkpoint._ckpt_part_sizes(spark, str(tmp_path / "empty")) == []
+    assert checkpoint._ckpt_part_sizes(spark, (tmp_path / "empty").as_uri()) == []
+
+
+def test_scan_partition_bound_covers_the_scan(spark, seq_parquet, tmp_path):
+    """The resume sizes its merge from the part listing, not by planning
+    the scan; the bound must never undercount the scan's partitions,
+    also when Spark splits the parts into small chunks."""
+    ckpt = str(tmp_path / "ckpt_bound")
+    _build(spark, seq_parquet, ckpt)
+    sizes = checkpoint._ckpt_part_sizes(spark, ckpt)
+    parts = sorted((tmp_path / "ckpt_bound").glob("*.parquet"))
+    assert sorted(sizes) == sorted(p.stat().st_size for p in parts) and sizes
+    for max_bytes in ("128MB", "4KB"):
+        spark.conf.set("spark.sql.files.maxPartitionBytes", max_bytes)
+        try:
+            scan = spark.read.schema(CKPT_SCHEMA).parquet(ckpt).rdd.getNumPartitions()
+            assert checkpoint._max_scan_partitions(spark, sizes) >= scan
+        finally:
+            spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert checkpoint._max_scan_partitions(spark, []) == 1
 
 
 def test_full_resume_is_one_spark_job(spark, seq_parquet, tmp_path):
@@ -155,3 +184,41 @@ def test_rows_outside_worklist_are_ignored(spark, sequences_pdf, seq_parquet, tm
     assert r2.built_files == 0 and r2.resumed_files == r1.total_files
     assert r2.payload == r1.payload and r2.n_items == r1.n_items
     assert r2.n_rows == len(sequences_pdf)
+
+
+def test_sparse_blocked_rows_resume_to_the_plain_build(spark, sequences_pdf, seq_parquet, tmp_path):
+    """A blocked filter sized well above one file's tokens writes its
+    per-file checkpoint rows in the sparse (v2) layout; the cold build,
+    the resume and ``build_bytes`` still give the same payload and
+    n_items, and a resume is still one Spark job."""
+    sk = BlockedBloomSketch.for_np(n=2_000_000, p=1e-3)
+    ckpt = str(tmp_path / "ckpt_sparse")
+
+    def build():
+        return build_with_checkpoint(
+            spark, seq_parquet, ckpt, sk._empty, sk._update, merge_sketch_payloads,
+            columns=["tokens"],
+        )
+
+    cold = build()
+    rows = spark.read.parquet(ckpt).collect()
+    assert len(rows) >= cold.total_files > 1
+    for r in rows:
+        raw = bytes(r["payload"])
+        assert raw[4] == 2 and len(raw) < sk.proto.max_payload_bytes()
+    sc = spark.sparkContext
+    group = "test_checkpoint.sparse_resume"
+    sc.setJobGroup(group, "sparse checkpoint resume")
+    try:
+        warm = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    plain, n_items = sk.build_bytes(spark.read.parquet(seq_parquet))
+    assert warm.built_files == 0 and warm.resumed_files == cold.total_files
+    assert cold.payload == warm.payload == plain
+    assert cold.n_items == warm.n_items == n_items == sum(len(t) for t in sequences_pdf["tokens"])
+    assert plain[4] == 2
+    oracle = BlockedBloomFilter(sk.n_blocks).add_tokens(np.concatenate(list(sequences_pdf["tokens"])))
+    assert BlockedBloomFilter.from_bytes(plain) == oracle

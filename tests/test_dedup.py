@@ -91,7 +91,7 @@ def test_simhash_near_dups(spark, dup_corpus):
     (pigeonhole); verify exactly that set is found, vs a numpy oracle."""
     df, _ = dup_corpus
     sig_df = simhash_signatures(df)
-    sigs = {r["doc_id"]: np.uint64(r["simhash"]) for r in sig_df.collect()}
+    sigs = {r["doc_id"]: np.int64(r["simhash"]).view(np.uint64) for r in sig_df.collect()}
 
     def hamming(a, b):
         return bin(int(sigs[a]) ^ int(sigs[b])).count("1")

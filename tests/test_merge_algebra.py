@@ -81,3 +81,27 @@ def test_merge_algebra_on_bytes(cls):
         assert merge([a, b]) == merge([b, a])
         assert merge([merge([a, b]), c]) == merge([a, merge([b, c])])
     assert merge([a, b, c]) == merge([merge([a, b]), c])
+
+
+def _blocked(n_blocks: int, filled) -> bytes:
+    words = np.zeros(4 * n_blocks, dtype=np.uint64)
+    for b in filled:
+        words[4 * b + b % 4] = np.uint64(1 + b)
+    return BlockedBloomFilter(n_blocks, words, n_items=len(filled)).to_bytes()
+
+
+def test_blocked_merge_algebra_across_layouts():
+    """Blocked payloads switch from the sparse (v2) to the dense (v1)
+    layout at 36*nnz >= 32*n_blocks (8 of 9 blocks here); merges that
+    cross the switch, or mix layouts, still commute and associate on
+    bytes."""
+    a, b, c, d = (_blocked(9, f) for f in ([0, 1, 2, 3], [3, 4, 5, 6], [7], [0, 2, 4, 5, 6, 8]))
+    assert [p[4] for p in (a, b, c, d)] == [2, 2, 2, 2]
+    merge = merge_sketch_payloads
+    assert merge([a, b])[4] == 2 and merge([a, b, c])[4] == 1 and merge([a, d])[4] == 1
+    full = merge([a, b, c, d])
+    for x, y in ((a, b), (merge([a, b]), c), (a, merge([c, d])), (full, a)):
+        assert merge([x, y]) == merge([y, x])
+    assert merge([merge([a, b]), c]) == merge([a, merge([b, c])])
+    assert merge([merge([a, d]), merge([b, c])]) == merge([merge([c, a]), merge([d, b])]) == full
+    assert merge([full, _blocked(9, [])]) == full  # the empty (header-only) payload is the identity

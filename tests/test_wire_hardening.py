@@ -155,7 +155,10 @@ _SAMPLES = {
         BloomFilter.empty(Shape.for_np(n=n, p=0.01)).add_tokens(_TOKENS).to_bytes()
         for n in (100_000, 100)  # sparse-coded, dense-coded
     ],
-    BlockedBloomFilter: [BlockedBloomFilter.for_np(1000, 0.01).add_tokens(_TOKENS).to_bytes()],
+    BlockedBloomFilter: [
+        BlockedBloomFilter.for_np(n, 0.01).add_tokens(_TOKENS).to_bytes()
+        for n in (100_000, 1000)  # sparse (v2), dense (v1)
+    ],
     HyperLogLog: [
         HyperLogLog(p).add_tokens(_TOKENS).to_bytes() for p in (14, 6)  # sparse, dense
     ],
@@ -289,6 +292,88 @@ def test_cms_malformed_compact_payloads_rejected():
         _cms_compact_payload(d, w, np.minimum(flat, 255), esc, flat[esc]),
         match="canonical",
     )
+
+
+_BLOCKED_HDR = struct.Struct("<4sBxxxQQ")
+
+
+def _blocked_payload(version, n_blocks, idx=(), blocks=(), n_items=1) -> bytes:
+    return b"".join((
+        _BLOCKED_HDR.pack(b"RBKB", version, n_blocks, n_items),
+        np.asarray(idx, dtype="<u4").tobytes(),
+        np.asarray(blocks, dtype="<u8").reshape(-1).tobytes(),
+    ))
+
+
+def _blocked_with(n_blocks, filled) -> BlockedBloomFilter:
+    """A filter whose listed blocks each hold one distinct bit pattern."""
+    words = np.zeros(4 * n_blocks, dtype=np.uint64)
+    for b in filled:
+        words[4 * b + b % 4] = np.uint64(1 + b)
+    return BlockedBloomFilter(n_blocks, words, n_items=len(filled))
+
+
+def test_blocked_layout_switch_point():
+    """v2 (index + words per non-empty block) is written exactly while
+    it is smaller than the v1 block array: 36*nnz < 32*n_blocks. At 9
+    blocks that is up to 7 listed blocks; at 8 both would be 288 bytes,
+    so v1."""
+    cases = [  # (non-empty blocks, version, payload bytes)
+        (0, 2, 24),
+        (1, 2, 24 + 36),
+        (7, 2, 24 + 36 * 7),
+        (8, 1, 24 + 32 * 9),
+        (9, 1, 24 + 32 * 9),
+    ]
+    for nnz, version, size in cases:
+        f = _blocked_with(9, range(nnz))
+        raw = f.to_bytes()
+        assert (raw[4], len(raw)) == (version, size), nnz
+        got = BlockedBloomFilter.from_bytes(raw)
+        assert got == f and got.n_items == f.n_items and got.to_bytes() == raw
+        assert len(raw) <= f.max_payload_bytes() == 24 + 32 * 9
+    # the listed blocks are the non-empty ones, in index order
+    f = _blocked_with(64, [3, 17, 40])
+    assert f.to_bytes() == _blocked_payload(
+        2, 64, [3, 17, 40], f.words.reshape(-1, 4)[[3, 17, 40]], n_items=3
+    )
+
+
+def test_blocked_malformed_sparse_payloads_rejected():
+    f = _blocked_with(64, [3, 17, 40])
+    blocks = f.words.reshape(-1, 4)[[3, 17, 40]]
+    raw = f.to_bytes()
+
+    def rejects(bad, match):
+        with pytest.raises(ValueError, match=match):
+            BlockedBloomFilter.from_bytes(bad)
+
+    rejects(_blocked_payload(2, 64, [3, 40, 17], blocks), "strictly increasing")  # out of order
+    rejects(_blocked_payload(2, 64, [3, 17, 17], blocks), "strictly increasing")  # duplicate
+    rejects(_blocked_payload(2, 64, [3, 17, 64], blocks), "strictly increasing")  # out of range
+    empty_block = blocks.copy()
+    empty_block[1] = 0
+    rejects(_blocked_payload(2, 64, [3, 17, 40], empty_block), "empty")
+    for cut in (1, 4, 32):
+        rejects(raw[:-cut], "36-byte")
+    rejects(raw + b"\x00" * 8, "36-byte")
+    rejects(_blocked_payload(2, 0), "not a serialized")
+
+
+def test_blocked_each_layout_in_the_other_is_not_canonical():
+    sparse = _blocked_with(9, range(7))
+    dense = _blocked_with(9, range(8))
+    as_v1 = _BLOCKED_HDR.pack(b"RBKB", 1, 9, 7) + sparse.words.tobytes()
+    with pytest.raises(ValueError, match="non-canonical"):
+        BlockedBloomFilter.from_bytes(as_v1)
+    listed = dense.words.reshape(-1, 4)[:8]
+    with pytest.raises(ValueError, match="non-canonical"):
+        BlockedBloomFilter.from_bytes(_blocked_payload(2, 9, range(8), listed))
+    # block indices past 2^32 cannot be <u4: a filter that large is v1
+    with pytest.raises(ValueError, match="non-canonical"):
+        BlockedBloomFilter.from_bytes(_blocked_payload(2, (1 << 32) + 1, [1], listed[:1]))
+    with pytest.raises(ValueError, match="non-canonical"):
+        merge_sketch_payloads([sparse.to_bytes(), as_v1])
 
 
 def test_hll_v1_wrong_register_count_raises():
