@@ -9,10 +9,10 @@ same two explicit steps:
             payloads side by side. Row data never shuffles; only these
             O(sketch_bytes) rows do.
     merge   ``merge_rows``: a left fold of payload rows, in arrival
-            order, into one row. A column plan (``MergeCol``) says which
-            columns are payloads (with their merge function and identity
-            payload), which are counts to sum and which are keys to pass
-            through.
+            order, into one row per key. A column plan (``MergeCol``)
+            says which columns are payloads (with their merge function
+            and identity payload), which are counts to sum and which is
+            the key to group by.
 
 Where the merge runs is the only thing that differs between builds:
 
@@ -25,8 +25,13 @@ Where the merge runs is the only thing that differs between builds:
   DataFrame, the rows go through the tree levels of ``_merge_levels``
   (``mapInArrow`` per level, ceil(P/fanout) tasks each, until one task
   can finish);
-- keyed builds (``build_multi_by_key``, ``build_by_key``) merge per key
-  with ``groupBy(key).applyInArrow`` (``group_merge``), optionally
+- keyed builds (``build_multi_by_key``, ``build_by_key``) take the same
+  budget over partitions x the keys one task folds: the fold caps its
+  keys at the largest count that fits (``_driver_key_cap``), and the
+  rows are merged per key on the driver, again one job with one stage.
+  The build then runs when it is called. A task that meets more keys
+  emits a marker row instead, and the build is re-routed (one INFO log
+  line) to ``groupBy(key).applyInArrow`` (``group_merge``), optionally
   after a salted (key, salt) level.
 
 The reference's merge matrices (``src/bloomfilter/mod.rs:621-761``)
@@ -43,15 +48,16 @@ Scale notes (1000-executor / 100 TB framing):
   worst case, which is why the merge above the driver budget is a tree:
   every task merges ~fanout payloads, and a merge never holds more than
   ``_FLUSH_AT`` of them.
-- Keyed builds shuffle one sketch row per (partition, key): the classic
-  partial-agg pattern. A skewed key (hot `source`) costs nothing extra
-  in the fold, since its rows are already spread across partitions, and
-  its merge fan-in is bounded by the partition count, optionally salted
-  down further.
+- Keyed builds above the budget shuffle one sketch row per
+  (partition, key): the classic partial-agg pattern. A skewed key (hot
+  `source`) costs nothing extra in the fold, since its rows are already
+  spread across partitions, and its merge fan-in is bounded by the
+  partition count, optionally salted down further.
 """
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable, Iterable, Iterator
 from functools import partial
 from typing import Any, NamedTuple
@@ -63,6 +69,8 @@ from pyspark.sql import functions as F
 
 SKETCH_SCHEMA = "payload binary, n_items bigint"
 KEYED_SKETCH_SCHEMA = "key string, payload binary, n_items bigint"
+
+_log = logging.getLogger("rusty_bloomfilter_spark")
 
 # An adapter is (make_empty, update(acc, batch) -> None, payload merge
 # fn). `update` receives a *pyarrow RecordBatch*: list columns flatten
@@ -80,21 +88,38 @@ _FLUSH_AT = 64
 
 # Largest total of stage-1 payloads the driver collects and merges
 # itself: partitions x the bytes one row's payloads can reach. Shared by
-# the unkeyed builds (collect_multi_bytes) and the checkpoint resume
-# through _merges_on_driver.
+# the unkeyed builds (collect_multi_bytes), the keyed builds (x keys per
+# task, _driver_key_cap) and the checkpoint resume.
 _DRIVER_MERGE_BYTES = 256 << 20
 
 
-def _merges_on_driver(n_parts: int, empties: list) -> bool:
-    """The driver-budget rule: True iff ``n_parts`` payloads of every
-    sketch in ``empties``, each at the largest size its config can
-    serialize to (``max_payload_bytes()``), fit in
-    ``_DRIVER_MERGE_BYTES``. A sketch that declares no maximum always
-    merges through the tree."""
+def _row_bytes(empties: list) -> int | None:
+    """The most bytes one stage-1 row's payloads can reach: the sum of
+    every sketch's ``max_payload_bytes()``; None when a sketch declares
+    no maximum."""
     bounds = [getattr(e, "max_payload_bytes", None) for e in empties]
     if None in bounds:
-        return False
-    return n_parts * sum(b() for b in bounds) <= _DRIVER_MERGE_BYTES
+        return None
+    return sum(b() for b in bounds)
+
+
+def _merges_on_driver(n_rows: int, empties: list) -> bool:
+    """The driver-budget rule: True iff ``n_rows`` stage-1 rows of the
+    sketches in ``empties``, each payload at the largest size its config
+    can serialize to, fit in ``_DRIVER_MERGE_BYTES``. A sketch that
+    declares no maximum always merges in Spark."""
+    row = _row_bytes(empties)
+    return row is not None and n_rows * row <= _DRIVER_MERGE_BYTES
+
+
+def _driver_key_cap(n_parts: int, empties: list) -> int:
+    """The keys per task a keyed build may fold and still merge on the
+    driver: the largest k with ``_merges_on_driver(n_parts * k,
+    empties)``, 0 when there is none."""
+    row = _row_bytes(empties)
+    if not row:
+        return 0
+    return _DRIVER_MERGE_BYTES // (max(n_parts, 1) * row)
 
 
 def safe_partition_count(df: DataFrame, default: int) -> int:
@@ -130,13 +155,15 @@ def _shuffle_conf(df: DataFrame, fallback: int = 200) -> int:
 
 
 def iter_key_slices(batch: pa.RecordBatch, key_col: str):
-    """Yield (key, sub_batch) per distinct key in the batch.
+    """Yield (key, sub_batch) per distinct key in the batch, in the
+    order the keys first appear.
 
-    One stable argsort + take, then zero-copy slices — O(n log n) per
-    batch regardless of key cardinality. The previous per-key
-    ``batch.filter(keys == key)`` loop rescanned the whole batch for
-    every key (O(keys_in_batch * batch_rows)): fine for 5 sources,
-    quadratic for high-cardinality keys.
+    The key is dictionary-encoded once; a stable argsort of the int32
+    codes + one take groups the rows, and ``bincount`` of the codes
+    gives the zero-copy slice bounds. Rows keep their order within a
+    key. Keys come from the dictionary's ``to_numpy()`` (numpy scalars,
+    as ``to_numpy`` of the column gives). Null keys are split out first,
+    as one (None, sub_batch).
     """
     import numpy as np
 
@@ -144,37 +171,49 @@ def iter_key_slices(batch: pa.RecordBatch, key_col: str):
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     if col.null_count:
-        # None is not orderable against strings (np.unique would raise);
-        # split the null-key rows out and slice the rest normally
         valid = col.is_valid()
-        null_mask = pc.invert(valid)
-        yield None, batch.filter(null_mask)
+        yield None, batch.filter(pc.invert(valid))
         batch = batch.filter(valid)
         if batch.num_rows == 0:
             return
         col = batch.column(key_col)
-    keys = col.to_numpy(zero_copy_only=False)
-    if len(keys) == 0:
+    if len(col) == 0:
         return
-    uniq, counts = np.unique(keys, return_counts=True)
+    encoded = pc.dictionary_encode(col)
+    uniq = encoded.dictionary.to_numpy(zero_copy_only=False)
     if len(uniq) == 1:
-        yield keys[0], batch
+        yield uniq[0], batch
         return
-    order = np.argsort(keys, kind="stable")
-    sorted_batch = batch.take(pa.array(order))
-    # uniq is sorted, so equal-key runs in sorted_batch follow uniq order
-    offsets = np.concatenate(([0], np.cumsum(counts)))
+    codes = encoded.indices.to_numpy()
+    sorted_batch = batch.take(pa.array(np.argsort(codes, kind="stable")))
+    offsets = np.concatenate(([0], np.cumsum(np.bincount(codes, minlength=len(uniq)))))
     for i, key in enumerate(uniq):
         yield key, sorted_batch.slice(offsets[i], offsets[i + 1] - offsets[i])
 
 
+def _arrow_multi_schema(specs: list[MultiSpec], *, keyed: bool = False) -> pa.Schema:
+    """The fold's row layout: ([key,] n_rows, payload_<name>, n_<name>, ...)."""
+    fields = [("key", pa.string())] if keyed else []
+    fields.append(("n_rows", pa.int64()))
+    for name, *_ in specs:
+        fields += [(f"payload_{name}", pa.binary()), (f"n_{name}", pa.int64())]
+    return pa.schema(fields)
+
+
+_DDL_TYPES = {pa.string(): "string", pa.int64(): "bigint", pa.binary(): "binary"}
+
+
 def _multi_schema(specs: list[MultiSpec], *, keyed: bool = False) -> str:
-    return ("key string, " if keyed else "") + "n_rows bigint, " + ", ".join(
-        f"payload_{name} binary, n_{name} bigint" for name, *_ in specs
+    """``_arrow_multi_schema`` as a Spark DDL string."""
+    return ", ".join(
+        f"{f.name} {_DDL_TYPES[f.type]}" for f in _arrow_multi_schema(specs, keyed=keyed)
     )
 
 
-def _fold(df: DataFrame, specs: list[MultiSpec], *, key_col: str | None = None) -> DataFrame:
+def _fold(
+    df: DataFrame, specs: list[MultiSpec], *, key_col: str | None = None,
+    max_keys: int | None = None,
+) -> DataFrame:
     """THE stage-1 fold: every Arrow batch of a partition goes into one
     accumulator per spec — per key of ``key_col`` when given
     (``iter_key_slices``) — in a single pass over the batch.
@@ -183,9 +222,16 @@ def _fold(df: DataFrame, specs: list[MultiSpec], *, key_col: str | None = None) 
     included: (n_rows, payload_<name>, n_<name>, ...). Keyed, one row
     per (partition, key), with a leading ``key string`` column.
     ``df`` must already be projected to the columns the specs (and the
-    key) read."""
+    key) read.
+
+    ``max_keys`` caps the keys one task folds: a task that meets one
+    key more stops folding, reads the rest of its input without folding
+    it (a Python worker that leaves input unread is killed and replaced
+    by Spark) and emits only a marker row, ``n_rows = -1`` with null
+    key, payloads and counts."""
     makers = [mk for _, mk, _, _ in specs]
     updates = [upd for _, _, upd, _ in specs]
+    schema = _arrow_multi_schema(specs, keyed=key_col is not None)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         accs: dict[Any, list] = {}  # key -> [n_rows, acc per spec...]
@@ -194,6 +240,11 @@ def _fold(df: DataFrame, specs: list[MultiSpec], *, key_col: str | None = None) 
             for key, sub in slices:
                 ent = accs.get(key)
                 if ent is None:
+                    if len(accs) == max_keys:
+                        for _ in batches:
+                            pass
+                        yield pa.RecordBatch.from_pylist([{"n_rows": -1}], schema=schema)
+                        return
                     ent = accs[key] = [0, *(mk() for mk in makers)]
                 ent[0] += sub.num_rows
                 for acc, upd in zip(ent[1:], updates):
@@ -209,7 +260,7 @@ def _fold(df: DataFrame, specs: list[MultiSpec], *, key_col: str | None = None) 
         for i, (name, *_rest) in enumerate(specs, start=1):
             out[f"payload_{name}"] = [ent[i].to_bytes() for ent in accs.values()]
             out[f"n_{name}"] = [ent[i].n_items for ent in accs.values()]
-        yield pa.RecordBatch.from_pydict(out)
+        yield pa.RecordBatch.from_pydict(out, schema=schema)
 
     return df.mapInArrow(fold, schema=_multi_schema(specs, keyed=key_col is not None))
 
@@ -230,8 +281,8 @@ def _single(frame: DataFrame, *keys) -> DataFrame:
 class MergeCol(NamedTuple):
     """One output column of ``merge_rows``, in schema order: a payload
     column when ``merge`` is set (``identity`` makes its empty payload),
-    a group key passed through from the first row when ``key``, else a
-    count that is summed."""
+    the column whose values group the rows when ``key`` (at most one per
+    plan), else a count that is summed."""
 
     name: str
     merge: MergePayloadsFn | None = None
@@ -243,41 +294,60 @@ def merge_rows(
     batches: Iterable[pa.RecordBatch], plan: list[MergeCol], *, or_identity: bool = False
 ) -> Iterator[pa.RecordBatch]:
     """THE payload merge: left-fold every row of ``batches``, in arrival
-    order, into one row laid out by ``plan``. Each payload buffer folds
-    down to one payload whenever it reaches ``_FLUSH_AT`` (stream-fold:
-    a task at P=100k partitions would otherwise buffer its whole fan-in
-    before the first merge call).
+    order, into one row per distinct value of the plan's key column (one
+    row in all when the plan has none), laid out by ``plan``, in one
+    pass. Each payload buffer folds down to one payload whenever it
+    reaches ``_FLUSH_AT`` (stream-fold: a task at P=100k partitions
+    would otherwise buffer its whole fan-in before the first merge
+    call).
 
-    Yields that one row, or nothing when ``batches`` hold no rows —
-    unless ``or_identity``, which yields the identity row then (every
-    payload's ``identity()``, counts 0; key columns are not allowed)."""
-    payloads = {c.name: [] for c in plan if c.merge}
-    sums = {c.name: 0 for c in plan if not c.merge and not c.key}
-    first = None
+    Yields one batch of those rows, in the order their keys first
+    arrived, or nothing when ``batches`` hold no rows — unless
+    ``or_identity``, which yields the identity row then (every payload's
+    ``identity()``, counts 0; key columns are not allowed)."""
+    key = next((c.name for c in plan if c.key), None)
+    merged = [c for c in plan if c.merge]
+    summed = [c.name for c in plan if not c.merge and not c.key]
+
+    def new_group() -> dict[str, Any]:  # column -> running sum or payload buffer
+        return {**{name: 0 for name in summed}, **{c.name: [] for c in merged}}
+
+    groups: dict[Any, dict[str, Any]] = {}
+    key_type = None
     for batch in batches:
         if not batch.num_rows:
             continue
-        if first is None:
-            first = batch.slice(0, 1)
-        for name in sums:
-            sums[name] += pc.sum(batch.column(name)).as_py() or 0
-        for c in plan:
-            if c.merge:
-                buf = payloads[c.name]
-                buf.extend(batch.column(c.name).to_pylist())
+        if key is None:
+            keys = [None] * batch.num_rows
+        else:
+            key_type = batch.schema.field(key).type
+            keys = batch.column(key).to_pylist()
+        counts = [(name, batch.column(name).to_pylist()) for name in summed]
+        payloads = [(c, batch.column(c.name).to_pylist()) for c in merged]
+        for i, k in enumerate(keys):
+            group = groups.get(k)
+            if group is None:
+                group = groups[k] = new_group()
+            for name, col in counts:
+                group[name] += col[i] or 0
+            for c, col in payloads:
+                buf = group[c.name]
+                buf.append(col[i])
                 if len(buf) >= _FLUSH_AT:
-                    payloads[c.name] = [c.merge(buf)]
-    if first is None and not or_identity:
-        return
+                    buf[:] = [c.merge(buf)]
+    if not groups:
+        if not or_identity:
+            return
+        groups[None] = new_group()
     cols = []
     for c in plan:
         if c.key:
-            cols.append(first.column(c.name))
+            cols.append(pa.array(list(groups), key_type))
         elif c.merge:
-            buf = payloads[c.name]
-            cols.append(pa.array([c.merge(buf) if buf else c.identity()], pa.binary()))
+            bufs = [g[c.name] for g in groups.values()]
+            cols.append(pa.array([c.merge(b) if b else c.identity() for b in bufs], pa.binary()))
         else:
-            cols.append(pa.array([sums[c.name]], pa.int64()))
+            cols.append(pa.array([g[c.name] for g in groups.values()], pa.int64()))
     yield pa.RecordBatch.from_arrays(cols, names=[c.name for c in plan])
 
 
@@ -413,8 +483,10 @@ def build_by_key(
     salt: int = 0,
 ) -> DataFrame:
     """Per-key sketches with map-side combine -> (key, payload, n_items):
-    a one-spec ``build_multi_by_key`` (same fold, same merge levels and
-    ``salt``)."""
+    a one-spec ``build_multi_by_key``, with the same fold and the same
+    two routes. Under the driver budget the build runs when this is
+    called and returns a local DataFrame; above it (or on a re-route)
+    the lazy shuffle plan, which ``salt`` shapes."""
     spec: list[MultiSpec] = [("sketch", make_empty, update, merge_payloads)]
     return _single(build_multi_by_key(df, key_col, spec, columns=columns, salt=salt), "key")
 
@@ -529,20 +601,75 @@ def build_multi_by_key(
 
     Where ``build_by_key`` called N times costs N full corpus scans
     (at 100 TB: N x 100 TB of I/O for the same bytes), this folds every
-    Arrow batch into all N accumulators per key in a single pass. The
-    shuffle still carries only sketch rows — one row per
-    (partition, key) with all N payloads side by side — and
-    ``groupBy(key).applyInArrow`` merges them. ``salt > 0`` adds an
-    intermediate (key, salt) merge level first, bounding any single
-    task's fan-in to partitions/salt — use when the partition count is
-    huge (the north rule's explicit skew handling).
+    Arrow batch into all N accumulators per key in a single pass; one
+    stage-1 row per (partition, key) holds all N payloads side by side.
+    Where those rows merge follows the driver budget of the unkeyed
+    builds (``_driver_key_cap``):
+
+    - while every task folds at most k keys, with partitions x k rows
+      within ``_DRIVER_MERGE_BYTES``, the rows are collected over Arrow
+      and ``merge_rows`` merges them per key on the driver. The build
+      then runs when this is called, as one Spark job with one stage,
+      and the result is a local DataFrame: collecting it starts no job;
+    - when a task meets more keys (the fold counts them itself and
+      stops), or no k fits, the build is re-routed, with one INFO line
+      on the ``rusty_bloomfilter_spark`` logger, to the lazy shuffle
+      plan: the rows shuffle (sketch rows only) and
+      ``groupBy(key).applyInArrow`` merges them. ``salt > 0`` adds an
+      intermediate (key, salt) merge level there first, bounding any
+      single task's fan-in to partitions/salt — use when the partition
+      count is huge (the north rule's explicit skew handling).
+
+    Both routes are the same per-key left fold, so they give the same
+    bytes for every canonical sketch; a re-route costs at most one
+    stage-1 pass.
 
     -> (key, n_rows, payload_<name>, n_<name>, ...) one row per key.
     """
+    src = _keyed_input(df, key_col, columns)
+    n_parts = safe_partition_count(src, default=_shuffle_conf(src))
+    cap = _driver_key_cap(n_parts, [mk() for _, mk, _, _ in specs])
+    if cap >= 1:
+        table = _fold(src, specs, key_col=key_col, max_keys=cap).toArrow()
+        if not pc.any(pc.less(table.column("n_rows"), 0)).as_py():
+            merged = list(merge_rows(table.to_batches(), _spec_plan(specs, keyed=True)))
+            if merged:
+                table = pa.Table.from_batches(merged)
+            return src.sparkSession.createDataFrame(table, schema=_multi_schema(specs, keyed=True))
+        why = f"a task met more than {cap} keys, the most that fit"
+    else:
+        why = "not one key per task fits"
+    _log.info(
+        "build_multi_by_key on %r re-routed to the shuffle merge: %s within the driver"
+        " budget (%d bytes at %d partitions)", key_col, why, _DRIVER_MERGE_BYTES, n_parts,
+    )
+    return shuffle_multi_by_key(src, key_col, specs, salt=salt)
+
+
+def _keyed_input(df: DataFrame, key_col: str, columns: list[str] | None) -> DataFrame:
     cols = columns or df.columns
     if key_col not in cols:
         cols = [key_col, *cols]
-    rows = _fold(df.select(*cols), specs, key_col=key_col)
+    return df.select(*cols)
+
+
+def shuffle_multi_by_key(
+    df: DataFrame,
+    key_col: str,
+    specs: list[MultiSpec],
+    *,
+    columns: list[str] | None = None,
+    salt: int = 0,
+) -> DataFrame:
+    """``build_multi_by_key``'s shuffle route as a lazy plan, whatever the
+    budget: the fold, then a shuffle of the sketch rows and
+    ``groupBy(key).applyInArrow`` (``group_merge``), after a (key, salt)
+    level when ``salt > 0``. For callers whose result must stay a plan
+    until its action runs.
+
+    -> (key, n_rows, payload_<name>, n_<name>, ...) one row per key.
+    """
+    rows = _fold(_keyed_input(df, key_col, columns), specs, key_col=key_col)
     schema = _multi_schema(specs, keyed=True)
     merge_group = group_merge(_spec_plan(specs, keyed=True))
     if salt > 0:

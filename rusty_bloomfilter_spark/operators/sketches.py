@@ -234,12 +234,14 @@ def count_contained_in(
         .agg(F.sum("hits").alias("h"), F.sum("total").alias("t"))
         .collect()[0]
     )
-    return int(out["h"]), int(out["t"])
+    # an input with no partitions sums no rows: NULL, not 0
+    return int(out["h"] or 0), int(out["t"] or 0)
 
 
 def flat_ngram_hashes(flat: np.ndarray, lengths: np.ndarray, n: int) -> np.ndarray:
     """All within-row n-gram hashes, vectorized: hash the concatenated
-    stream once, then mask out windows that cross row boundaries."""
+    stream once, then drop every window ``s`` that has a row start in
+    (s, s + n - 1], i.e. that crosses into a later row."""
     if flat.size == 0:
         return np.empty(0, dtype=np.uint64)
     if n == 1:
@@ -247,10 +249,13 @@ def flat_ngram_hashes(flat: np.ndarray, lengths: np.ndarray, n: int) -> np.ndarr
     h = ngram_hashes(flat, n)  # windows over the whole stream
     if h.size == 0:
         return h
-    row_of = np.repeat(np.arange(len(lengths)), lengths)
-    starts = np.arange(len(h))
-    keep = row_of[starts] == row_of[starts + n - 1]
-    return h[keep]
+    starts = np.cumsum(lengths)[:-1]
+    is_start = np.zeros(flat.size, dtype=bool)
+    is_start[starts[starts < flat.size]] = True
+    crosses = np.zeros(h.size, dtype=bool)
+    for j in range(1, n):
+        crosses |= is_start[j : j + h.size]
+    return h[~crosses]
 
 
 class _ColumnSketch:

@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.aggregate import shuffle_multi_by_key
 from ..operators.cache import tie
 from ..operators.sketches import BloomSketch, HllSketch
 from ..sketch import Shape
@@ -51,12 +52,17 @@ def source_overlap(
     # source labels)
     sequences = sequences.where(F.col(key_col).isNotNull())
     if sketch == "hll":
-        keyed = HllSketch(p=14).build_by_key(sequences, key_col)
+        sk = HllSketch(p=14)
     elif sketch == "bloom":
-        shape = shape or Shape.for_np(n=1_000_000, p=1e-4)
-        keyed = BloomSketch(shape).build_by_key(sequences, key_col)
+        sk = BloomSketch(shape or Shape.for_np(n=1_000_000, p=1e-4))
     else:
         raise ValueError(f"sketch must be 'bloom' or 'hll', got {sketch!r}")
+    # the keyed build's shuffle route: build_by_key would run the build
+    # now (its driver route), and this frame stays a plan until its action
+    keyed = shuffle_multi_by_key(
+        sequences, key_col, [("sketch", sk._empty, sk._update, sk._merge)],
+        columns=[key_col, *sk._columns()],
+    ).select("key", F.col("payload_sketch").alias("payload"))
     # self-join on an applyInPandas output recomputes the producing
     # stage per side (Spark 4.1, documented gotcha) — persist so the
     # keyed corpus build runs once; the frame is tiny (one row per key)

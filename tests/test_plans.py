@@ -105,11 +105,16 @@ def test_ngram_jaccard_restricts_before_self_join(spark):
         assert "LeftSemi" in tree[i + 1], "\n".join(tree[i : i + 2])
 
 
-def test_salted_keyed_build_has_two_merge_levels(spark):
+def test_salted_keyed_build_has_two_merge_levels(spark, monkeypatch):
     """salt>0 inserts an intermediate (key, salt) merge stage bounding
-    any single task's fan-in — two FlatMapGroupsInPandas levels."""
+    any single task's fan-in — two FlatMapGroupsInPandas levels. Keyed
+    builds under the driver budget merge on the driver, so the shuffle
+    route is forced here (a budget of 0)."""
+    from rusty_bloomfilter_spark.operators import aggregate
     from rusty_bloomfilter_spark.operators.sketches import BlockedBloomSketch
     from rusty_bloomfilter_spark.sources import sequences_from_documents
+
+    monkeypatch.setattr(aggregate, "_DRIVER_MERGE_BYTES", 0)
 
     seq = sequences_from_documents(spark, SF)
     sk = BlockedBloomSketch.for_np(n=100_000, p=1e-3)

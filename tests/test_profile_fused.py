@@ -122,6 +122,39 @@ def test_iter_key_slices_list_columns_slice_correctly():
     assert got == {"a": [3, 7, 8], "b": [1, 2, 4, 5, 6]}
 
 
+@pytest.mark.parametrize("kind", ["string", "int", "timestamp"])
+def test_iter_key_slices_keys_and_row_order(kind):
+    """Each key once, in first-appearance order, as the numpy scalar
+    ``to_numpy`` of the column gives (``str()`` of it is the keyed
+    row's key), with its rows in batch order; null keys first."""
+    import pyarrow.compute as pc
+
+    rng = np.random.default_rng(3)
+    codes = rng.integers(0, 40, size=700)
+    if kind == "string":
+        col = pa.array([f"k{c}" for c in codes])
+    elif kind == "int":
+        col = pa.array(codes * 1_000_003, pa.int64())
+    else:
+        col = pa.array(codes.astype("datetime64[s]").astype("datetime64[us]"), pa.timestamp("us"))
+    valid = rng.random(700) > 0.1
+    batch = pa.record_batch({
+        "key": pc.if_else(pa.array(valid), col, pa.nulls(700, col.type)), "row": np.arange(700),
+    })
+    got = list(iter_key_slices(batch, "key"))
+    assert got[0][0] is None
+    assert got[0][1].column("row").to_pylist() == np.flatnonzero(~valid).tolist()
+    # the parent's keys: to_numpy of the non-null keys
+    values = col.filter(pa.array(valid)).to_numpy(zero_copy_only=False)
+    first = {}
+    for v, i in zip(values, np.flatnonzero(valid)):
+        first.setdefault(str(v), []).append(int(i))
+    assert [str(k) for k, _ in got[1:]] == list(first)
+    for key, sub in got[1:]:
+        assert type(key) is type(values[0])
+        assert sub.column("row").to_pylist() == first[str(key)]
+
+
 def test_high_cardinality_keyed_build_invariance(spark):
     """10k distinct keys: keyed build completes without the per-key
     batch-rescan blowup and matches a numpy oracle per key."""

@@ -92,6 +92,19 @@ def test_probe_udfs(spark, seq_df, sequences_pdf):
     assert frac == 1.0
 
 
+def test_count_contained_on_an_input_with_no_partitions(spark):
+    """A probe over an input with no partitions sums no rows: (0, 0),
+    not a TypeError from the NULL sums."""
+    from rusty_bloomfilter_spark.operators import BlockedBloomSketch
+
+    df = spark.createDataFrame([([1, 2, 3],)], "tokens array<int>")
+    sk = BlockedBloomSketch.for_np(n=1000, p=1e-3)
+    payload, _ = sk.build_bytes(df)
+    assert df.limit(0).rdd.getNumPartitions() == 0
+    assert sk.count_contained(df.limit(0), payload) == (0, 0)
+    assert sk.count_contained(df, payload) == (3, 3)
+
+
 def test_bloom_by_key_with_salt(spark, seq_df, sequences_pdf):
     sk = BloomSketch(SHAPE)
     rows = sk.build_by_key(seq_df, "source", salt=4).collect()
@@ -587,6 +600,135 @@ def test_unkeyed_builds_run_one_job_one_stage(spark, sequences_pdf, tmp_path):
     assert got["cms"] == collect_sketch_bytes(cms.build(df))
 
 
+def _keyed_rows(rows, names):
+    return {r["key"]: tuple(
+        (bytes(r[f"payload_{n}"]), r[f"n_{n}"]) for n in names
+    ) + (r["n_rows"],) for r in rows}
+
+
+def test_keyed_builds_under_the_budget_run_one_job_one_stage(
+    spark, sequences_pdf, tmp_path, monkeypatch
+):
+    """A keyed build under the driver budget, ``.collect()`` included,
+    is the stage-1 job alone: the rows merge per key on the driver and
+    the result is a local DataFrame. The shuffle route gives the same
+    rows."""
+    from rusty_bloomfilter_spark.operators import aggregate, build_multi_by_key
+
+    path = str(tmp_path / "seq")
+    spark.createDataFrame(sequences_pdf[["source", "tokens"]]).repartition(3).write.parquet(path)
+    df = spark.read.parquet(path)
+    hll, cms = HllSketch(p=12), CmsSketch(d=3, w=1 << 12)
+    specs = [
+        ("hll", hll._empty, hll._update, hll._merge),
+        ("cms", cms._empty, cms._update, cms._merge),
+    ]
+
+    def multi():
+        rows = build_multi_by_key(df, "source", specs, columns=["source", "tokens"]).collect()
+        return _keyed_rows(rows, ["hll", "cms"])
+
+    def single():
+        return {r["key"]: (bytes(r["payload"]), r["n_items"])
+                for r in hll.build_by_key(df, "source").collect()}
+
+    multi()  # warm the Python workers
+    got, jobs, stages = _jobs_and_stages(spark, "test_spark_build.keyed_multi", multi)
+    assert (jobs, stages) == (1, 1)
+    assert set(got) == set(sequences_pdf["source"])
+    assert sum(v[-1] for v in got.values()) == len(sequences_pdf)
+    one, jobs, stages = _jobs_and_stages(spark, "test_spark_build.keyed_single", single)
+    assert (jobs, stages) == (1, 1)
+    assert one == {k: v[0] for k, v in got.items()}
+    monkeypatch.setattr(aggregate, "_DRIVER_MERGE_BYTES", 0)
+    assert multi() == got and single() == one
+
+
+def test_keyed_driver_route_null_keys_and_empty_input(spark, monkeypatch, caplog):
+    """Null keys form their own row on the driver route as in the
+    shuffle; an input without rows, or without partitions, gives no
+    rows and the keyed schema, without a re-route."""
+    import logging
+
+    import pandas as pd
+
+    from rusty_bloomfilter_spark.operators import aggregate, build_multi_by_key
+
+    caplog.set_level(logging.INFO, logger="rusty_bloomfilter_spark")
+    hll = HllSketch(p=8)
+    specs = [("hll", hll._empty, hll._update, hll._merge)]
+    pdf = pd.DataFrame({
+        "source": ["a", None, "b", None, "a", None],
+        "tokens": [[1, 2], [3], [4], [5, 6], [7], []],
+    })
+    df = spark.createDataFrame(pdf, "source string, tokens array<int>").repartition(2)
+    driver = _keyed_rows(build_multi_by_key(df, "source", specs).collect(), ["hll"])
+    assert set(driver) == {"a", "b", None} and driver[None][0][1] == 3 and driver[None][1] == 3
+    for empty in (df.limit(0), df.where("source = 'z'"), spark.createDataFrame([], df.schema)):
+        out = build_multi_by_key(empty, "source", specs)
+        assert out.collect() == []
+        assert out.columns == ["key", "n_rows", "payload_hll", "n_hll"]
+    assert not [r for r in caplog.records if r.name == "rusty_bloomfilter_spark"]
+    monkeypatch.setattr(aggregate, "_DRIVER_MERGE_BYTES", 0)
+    assert _keyed_rows(build_multi_by_key(df, "source", specs).collect(), ["hll"]) == driver
+
+
+def test_keyed_overflow_reroutes_and_keeps_the_python_workers(spark, tmp_path, monkeypatch, caplog):
+    """A task that meets more keys than the cap reads the rest of its
+    input without folding it and emits a marker row: the build re-routes
+    to the shuffle (one INFO line) with the same rows, and the Python
+    workers that ran the capped fold stay alive for reuse (a worker
+    that leaves input unread is killed and replaced)."""
+    import logging
+    import os
+
+    from pyspark.sql import functions as F
+
+    from rusty_bloomfilter_spark.operators import aggregate, build_multi_by_key
+
+    df = spark.range(0, 40_000, numPartitions=4).select(
+        (F.col("id") % 97).cast("string").alias("key"), F.col("id").alias("k")
+    )
+    hll = HllSketch(p=10, col="k", scalar=True)
+    pid_dir = tmp_path / "pids"
+    pid_dir.mkdir()
+
+    def make_empty(pid_dir=str(pid_dir)):  # records the worker that folds
+        open(os.path.join(pid_dir, str(os.getpid())), "w").close()
+        return hll._empty()
+
+    specs = [("hll", make_empty, hll._update, hll._merge)]
+    plain = [("hll", hll._empty, hll._update, hll._merge)]
+    ref = _keyed_rows(build_multi_by_key(df, "key", plain).collect(), ["hll"])
+    caplog.set_level(logging.INFO, logger="rusty_bloomfilter_spark")
+    # room for 2 keys per task; every task meets 97
+    monkeypatch.setattr(aggregate, "_DRIVER_MERGE_BYTES", 2 * 4 * hll._empty().max_payload_bytes())
+    spy = _FoldSpy(aggregate._fold)
+    monkeypatch.setattr(aggregate, "_fold", spy)
+    got = _keyed_rows(build_multi_by_key(df, "key", specs).collect(), ["hll"])
+    assert got == ref and len(got) == 97
+    assert spy.caps == [2, None]
+    logged = [r.getMessage() for r in caplog.records if r.name == "rusty_bloomfilter_spark"]
+    assert len(logged) == 1 and "more than 2 keys" in logged[0], logged
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    pids = {int(p.name) for p in pid_dir.iterdir()} - {os.getpid()}
+    assert pids
+    for pid in pids:
+        with open(f"/proc/{pid}/stat") as f:  # a dead worker has no entry or is a zombie
+            assert f.read().split(") ")[1][0] not in "ZX", pid
+
+
+class _FoldSpy:
+    """Wraps ``aggregate._fold`` and records each call's ``max_keys``."""
+
+    def __init__(self, fold):
+        self.fold, self.caps = fold, []
+
+    def __call__(self, *args, max_keys=None, **kw):
+        self.caps.append(max_keys)
+        return self.fold(*args, max_keys=max_keys, **kw)
+
+
 def test_tree_route_matches_driver_route(spark, monkeypatch):
     """Past the driver budget the rows go through the tree; with more
     partitions than ``fanout`` an intermediate level runs. Payloads and
@@ -676,13 +818,17 @@ def test_build_multi_partition_invariance(spark):
         assert seven[1][name] == one[1][name], name
 
 
-def test_every_route_gives_the_same_sketches(spark, sequences_pdf, tmp_path, monkeypatch):
+def test_every_route_gives_the_same_sketches(spark, sequences_pdf, tmp_path, monkeypatch, caplog):
     """HLL, CMS and KLL over one token table through every route: the
-    unkeyed driver and tree merges, the keyed build over a constant key
-    (plain and salted), the one-spec keyed build, and the checkpointed
-    build cold and resumed. HLL and CMS payloads and every count must be
-    equal. KLL bytes depend on the merge order, so its rank errors are
-    checked against the bound instead."""
+    unkeyed driver and tree merges; the keyed build on its driver route,
+    forced through the shuffle, salted, and re-routed after a task met
+    more keys than the budget allows (per-key sketches merged); the
+    one-spec keyed build; and the checkpointed build cold and resumed.
+    HLL and CMS payloads and every count must be equal. KLL bytes depend
+    on the merge order, so its rank errors are checked against the bound
+    instead."""
+    import logging
+
     from pyspark.sql import functions as F
 
     from rusty_bloomfilter_spark.operators import aggregate
@@ -692,7 +838,8 @@ def test_every_route_gives_the_same_sketches(spark, sequences_pdf, tmp_path, mon
     path = str(tmp_path / "seq")
     spark.createDataFrame(sequences_pdf[["tokens", "n_tok"]]).repartition(6).write.parquet(path)
     df = spark.read.parquet(path)
-    keyed_df = df.withColumn("k", F.lit("all"))
+    one_key = df.withColumn("k", F.lit("all"))
+    two_keys = df.withColumn("k", F.when(F.col("n_tok") % 2 == 0, "even").otherwise("odd"))
     sketches = {"hll": HllSketch(p=12), "cms": CmsSketch(d=3, w=1 << 12), "kll": KllQuantiles(k=50)}
     specs = [(name, sk._empty, sk._update, sk._merge) for name, sk in sketches.items()]
     columns = ["tokens", "n_tok"]
@@ -701,21 +848,38 @@ def test_every_route_gives_the_same_sketches(spark, sequences_pdf, tmp_path, mon
         multi = aggregate.build_multi(df, specs, columns=columns)
         return aggregate.collect_multi_bytes(multi, specs, fanout=2)
 
+    def keyed(frame, salt=0):
+        """The per-key rows merged across keys, and the re-route log."""
+        caplog.clear()
+        rows = aggregate.build_multi_by_key(
+            frame, "k", specs, columns=["k", *columns], salt=salt
+        ).collect()
+        logged = [r.getMessage() for r in caplog.records if r.name == "rusty_bloomfilter_spark"]
+        out = {
+            name: (sk._merge([bytes(r[f"payload_{name}"]) for r in rows]),
+                   sum(r[f"n_{name}"] for r in rows))
+            for name, sk in sketches.items()
+        }
+        return (sum(r["n_rows"] for r in rows), out), logged
+
+    caplog.set_level(logging.INFO, logger="rusty_bloomfilter_spark")
     routes = {"driver": unkeyed()}
+    routes["keyed driver"], logged = keyed(one_key)
+    assert logged == []
     monkeypatch.setattr(aggregate, "_DRIVER_MERGE_BYTES", 0)
     routes["tree"] = unkeyed()
+    routes["keyed shuffle"], logged = keyed(one_key)
+    assert len(logged) == 1 and "not one key per task fits" in logged[0]
+    routes["keyed salted"], _ = keyed(one_key, salt=4)
+    # room for one key per task: every task meets both keys and overflows
+    one_key_bytes = aggregate._row_bytes([sk._empty() for sk in sketches.values()])
+    monkeypatch.setattr(aggregate, "_DRIVER_MERGE_BYTES", one_key_bytes * df.rdd.getNumPartitions())
+    routes["keyed overflow"], logged = keyed(two_keys)
+    assert len(logged) == 1 and "more than 1 keys" in logged[0]
     monkeypatch.undo()
-    for salt in (0, 4):
-        (row,) = aggregate.build_multi_by_key(
-            keyed_df, "k", specs, columns=["k", *columns], salt=salt
-        ).collect()
-        routes[f"keyed salt={salt}"] = (
-            row["n_rows"],
-            {name: (bytes(row[f"payload_{name}"]), row[f"n_{name}"]) for name in sketches},
-        )
     by_key = {}
     for name, sk in sketches.items():
-        (row,) = sk.build_by_key(keyed_df, "k").collect()
+        (row,) = sk.build_by_key(one_key, "k").collect()
         by_key[name] = (bytes(row["payload"]), row["n_items"])
     routes["build_by_key"] = (len(sequences_pdf), by_key)
     for resumed in (False, True):
@@ -768,3 +932,28 @@ def test_ngram_hashes_shorter_than_n_are_empty(spark):
     payload, n_items = sk.build_bytes(short)
     assert n_items == 0
     assert payload == sk._empty().to_bytes()
+
+
+@pytest.mark.parametrize("n", [2, 3, 5])
+def test_flat_ngram_hashes_equal_per_row_ngrams(n):
+    """The flattened n-grams of a ragged token column (empty rows, rows
+    shorter than n, null lists, a sliced batch) are each row's own
+    ``ngram_hashes``, concatenated in row order."""
+    import pyarrow as pa
+
+    from rusty_bloomfilter_spark.operators import flat_ngram_hashes
+    from rusty_bloomfilter_spark.operators.sketches import arrow_flat_tokens, arrow_row_lengths
+    from rusty_bloomfilter_spark.sketch import ngram_hashes
+
+    rng = np.random.default_rng(n)
+    rows = [
+        None if rng.random() < 0.1 else rng.integers(0, 50257, rng.integers(0, 12)).tolist()
+        for _ in range(300)
+    ]
+    rows[:4] = [[], None, [1] * (n - 1), [2] * n]
+    batch = pa.record_batch({"tokens": pa.array(rows, pa.list_(pa.int32()))})
+    for b, part in ((batch, rows), (batch.slice(7, 200), rows[7:207])):
+        got = flat_ngram_hashes(arrow_flat_tokens(b, "tokens"), arrow_row_lengths(b, "tokens"), n)
+        want = [ngram_hashes(np.asarray(r, np.int32), n) for r in part if r]
+        assert got.dtype == np.uint64
+        assert np.array_equal(got, np.concatenate(want))
