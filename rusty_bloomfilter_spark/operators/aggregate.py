@@ -29,10 +29,12 @@ Where the merge runs is the only thing that differs between builds:
   budget over partitions x the keys one task folds: the fold caps its
   keys at the largest count that fits (``_driver_key_cap``), and the
   rows are merged per key on the driver, again one job with one stage.
-  The build then runs when it is called. A task that meets more keys
-  emits a marker row instead, and the build is re-routed (one INFO log
-  line) to ``groupBy(key).applyInArrow`` (``group_merge``), optionally
-  after a salted (key, salt) level.
+  The build then runs when it is called. The fold is checkpointed
+  locally as it runs: a task that folds more keys keeps its rows on the
+  executors and sends a marker row instead, and the build is re-routed
+  (one INFO log line) to ``groupBy(key).applyInArrow`` (``group_merge``)
+  over the checkpointed rows, optionally after a salted (key, salt)
+  level, so the input is still read once.
 
 The reference's merge matrices (``src/bloomfilter/mod.rs:621-761``)
 make merges associative and commutative, so any tree shape or grouping
@@ -191,22 +193,30 @@ def iter_key_slices(batch: pa.RecordBatch, key_col: str):
         yield key, sorted_batch.slice(offsets[i], offsets[i + 1] - offsets[i])
 
 
-def _arrow_multi_schema(specs: list[MultiSpec], *, keyed: bool = False) -> pa.Schema:
-    """The fold's row layout: ([key,] n_rows, payload_<name>, n_<name>, ...)."""
+def _arrow_multi_schema(
+    specs: list[MultiSpec], *, keyed: bool = False, spill: bool = False
+) -> pa.Schema:
+    """The fold's row layout: ([key,] n_rows, payload_<name>, n_<name>,
+    ... [, spill])."""
     fields = [("key", pa.string())] if keyed else []
     fields.append(("n_rows", pa.int64()))
     for name, *_ in specs:
         fields += [(f"payload_{name}", pa.binary()), (f"n_{name}", pa.int64())]
+    if spill:
+        fields.append(("spill", pa.bool_()))
     return pa.schema(fields)
 
 
-_DDL_TYPES = {pa.string(): "string", pa.int64(): "bigint", pa.binary(): "binary"}
+_DDL_TYPES = {
+    pa.string(): "string", pa.int64(): "bigint", pa.binary(): "binary", pa.bool_(): "boolean",
+}
 
 
-def _multi_schema(specs: list[MultiSpec], *, keyed: bool = False) -> str:
+def _multi_schema(specs: list[MultiSpec], *, keyed: bool = False, spill: bool = False) -> str:
     """``_arrow_multi_schema`` as a Spark DDL string."""
     return ", ".join(
-        f"{f.name} {_DDL_TYPES[f.type]}" for f in _arrow_multi_schema(specs, keyed=keyed)
+        f"{f.name} {_DDL_TYPES[f.type]}"
+        for f in _arrow_multi_schema(specs, keyed=keyed, spill=spill)
     )
 
 
@@ -224,14 +234,16 @@ def _fold(
     ``df`` must already be projected to the columns the specs (and the
     key) read.
 
-    ``max_keys`` caps the keys one task folds: a task that meets one
-    key more stops folding, reads the rest of its input without folding
-    it (a Python worker that leaves input unread is killed and replaced
-    by Spark) and emits only a marker row, ``n_rows = -1`` with null
-    key, payloads and counts."""
+    ``max_keys`` caps the rows one task may send to the driver: the
+    rows gain a trailing ``spill`` column, true on every row of a task
+    that folded more keys than that. Such a task still folds its whole
+    input, and adds one marker row with ``spill`` false, ``n_rows =
+    -1`` and null key, payloads and counts, so that filtering out the
+    spilled rows leaves the driver a sign of them."""
     makers = [mk for _, mk, _, _ in specs]
     updates = [upd for _, _, upd, _ in specs]
-    schema = _arrow_multi_schema(specs, keyed=key_col is not None)
+    capped = max_keys is not None
+    schema = _arrow_multi_schema(specs, keyed=key_col is not None, spill=capped)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         accs: dict[Any, list] = {}  # key -> [n_rows, acc per spec...]
@@ -240,11 +252,6 @@ def _fold(
             for key, sub in slices:
                 ent = accs.get(key)
                 if ent is None:
-                    if len(accs) == max_keys:
-                        for _ in batches:
-                            pass
-                        yield pa.RecordBatch.from_pylist([{"n_rows": -1}], schema=schema)
-                        return
                     ent = accs[key] = [0, *(mk() for mk in makers)]
                 ent[0] += sub.num_rows
                 for acc, upd in zip(ent[1:], updates):
@@ -260,9 +267,16 @@ def _fold(
         for i, (name, *_rest) in enumerate(specs, start=1):
             out[f"payload_{name}"] = [ent[i].to_bytes() for ent in accs.values()]
             out[f"n_{name}"] = [ent[i].n_items for ent in accs.values()]
+        if capped:
+            spilled = len(accs) > max_keys
+            out["spill"] = [spilled] * len(accs)
+            if spilled:
+                marker = {"n_rows": -1, "spill": False}
+                for name, col in out.items():
+                    col.append(marker.get(name))
         yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-    return df.mapInArrow(fold, schema=_multi_schema(specs, keyed=key_col is not None))
+    return df.mapInArrow(fold, schema=_multi_schema(specs, keyed=key_col is not None, spill=capped))
 
 
 def _single(frame: DataFrame, *keys) -> DataFrame:
@@ -485,8 +499,8 @@ def build_by_key(
     """Per-key sketches with map-side combine -> (key, payload, n_items):
     a one-spec ``build_multi_by_key``, with the same fold and the same
     two routes. Under the driver budget the build runs when this is
-    called and returns a local DataFrame; above it (or on a re-route)
-    the lazy shuffle plan, which ``salt`` shapes."""
+    called and returns a local DataFrame; above it, the shuffle plan,
+    which ``salt`` shapes."""
     spec: list[MultiSpec] = [("sketch", make_empty, update, merge_payloads)]
     return _single(build_multi_by_key(df, key_col, spec, columns=columns, salt=salt), "key")
 
@@ -611,39 +625,58 @@ def build_multi_by_key(
       and ``merge_rows`` merges them per key on the driver. The build
       then runs when this is called, as one Spark job with one stage,
       and the result is a local DataFrame: collecting it starts no job;
-    - when a task meets more keys (the fold counts them itself and
-      stops), or no k fits, the build is re-routed, with one INFO line
-      on the ``rusty_bloomfilter_spark`` logger, to the lazy shuffle
-      plan: the rows shuffle (sketch rows only) and
-      ``groupBy(key).applyInArrow`` merges them. ``salt > 0`` adds an
-      intermediate (key, salt) merge level there first, bounding any
-      single task's fan-in to partitions/salt — use when the partition
-      count is huge (the north rule's explicit skew handling).
+    - when a task folds more keys (the fold counts them itself), its
+      rows stay on the executors and the build is re-routed, with one
+      INFO line on the ``rusty_bloomfilter_spark`` logger, to the shuffle
+      plan: every task's rows shuffle (sketch rows only) and
+      ``groupBy(key).applyInArrow`` merges them. The fold ran once: the
+      plan reads its rows from a local checkpoint, which ties the result
+      to the executors that hold them (losing one before the result's
+      action fails that action). When no k fits, the build is the lazy
+      shuffle plan from the start (``shuffle_multi_by_key``). ``salt >
+      0`` adds an intermediate (key, salt) merge level to the shuffle
+      plan, bounding any single task's fan-in to partitions/salt — use
+      when the partition count is huge (the north rule's explicit skew
+      handling).
 
     Both routes are the same per-key left fold, so they give the same
-    bytes for every canonical sketch; a re-route costs at most one
-    stage-1 pass.
+    bytes for every canonical sketch.
 
     -> (key, n_rows, payload_<name>, n_<name>, ...) one row per key.
     """
     src = _keyed_input(df, key_col, columns)
     n_parts = safe_partition_count(src, default=_shuffle_conf(src))
     cap = _driver_key_cap(n_parts, [mk() for _, mk, _, _ in specs])
-    if cap >= 1:
-        table = _fold(src, specs, key_col=key_col, max_keys=cap).toArrow()
-        if not pc.any(pc.less(table.column("n_rows"), 0)).as_py():
-            merged = list(merge_rows(table.to_batches(), _spec_plan(specs, keyed=True)))
-            if merged:
-                table = pa.Table.from_batches(merged)
-            return src.sparkSession.createDataFrame(table, schema=_multi_schema(specs, keyed=True))
-        why = f"a task met more than {cap} keys, the most that fit"
-    else:
-        why = "not one key per task fits"
+    if cap < 1:
+        _log_reroute(key_col, "not one key per task fits", n_parts)
+        return shuffle_multi_by_key(src, key_col, specs, salt=salt)
+    rows = _fold(src, specs, key_col=key_col, max_keys=cap).localCheckpoint(eager=False)
+    table = rows.where(~F.col("spill")).drop("spill").toArrow()
+    if pc.any(pc.less(table.column("n_rows"), 0)).as_py():
+        _log_reroute(key_col, f"a task folded more than {cap} keys, the most that fit", n_parts)
+        return _merge_by_key(rows.where(F.col("n_rows") >= 0).drop("spill"), specs, salt=salt)
+    _release(rows)
+    merged = list(merge_rows(table.to_batches(), _spec_plan(specs, keyed=True)))
+    if merged:
+        table = pa.Table.from_batches(merged)
+    return src.sparkSession.createDataFrame(table, schema=_multi_schema(specs, keyed=True))
+
+
+def _log_reroute(key_col: str, why: str, n_parts: int) -> None:
     _log.info(
         "build_multi_by_key on %r re-routed to the shuffle merge: %s within the driver"
         " budget (%d bytes at %d partitions)", key_col, why, _DRIVER_MERGE_BYTES, n_parts,
     )
-    return shuffle_multi_by_key(src, key_col, specs, salt=salt)
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Free the executor blocks of a ``localCheckpoint(eager=False)``
+    frame once it is no longer read, instead of at the JVM's next GC
+    (the context cleaner frees them then if this fails)."""
+    try:
+        checkpointed._jdf.queryExecution().logical().rdd().unpersist(False)
+    except Exception:  # best-effort: the blocks are freed at GC anyway
+        pass
 
 
 def _keyed_input(df: DataFrame, key_col: str, columns: list[str] | None) -> DataFrame:
@@ -662,14 +695,18 @@ def shuffle_multi_by_key(
     salt: int = 0,
 ) -> DataFrame:
     """``build_multi_by_key``'s shuffle route as a lazy plan, whatever the
-    budget: the fold, then a shuffle of the sketch rows and
-    ``groupBy(key).applyInArrow`` (``group_merge``), after a (key, salt)
-    level when ``salt > 0``. For callers whose result must stay a plan
-    until its action runs.
+    budget: the fold, then ``_merge_by_key``. For callers whose result
+    must stay a plan until its action runs.
 
     -> (key, n_rows, payload_<name>, n_<name>, ...) one row per key.
     """
     rows = _fold(_keyed_input(df, key_col, columns), specs, key_col=key_col)
+    return _merge_by_key(rows, specs, salt=salt)
+
+
+def _merge_by_key(rows: DataFrame, specs: list[MultiSpec], *, salt: int) -> DataFrame:
+    """A shuffle of keyed fold rows and ``groupBy(key).applyInArrow``
+    (``group_merge``), after a (key, salt) level when ``salt > 0``."""
     schema = _multi_schema(specs, keyed=True)
     merge_group = group_merge(_spec_plan(specs, keyed=True))
     if salt > 0:

@@ -31,7 +31,14 @@ from ..sketch import (
     tokens_to_u64,
 )
 from ..sketch.hashing import splitmix64
-from .aggregate import build_by_key, build_sketch, build_sketch_bytes
+from .aggregate import (
+    MultiSpec,
+    _single,
+    build_by_key,
+    build_sketch,
+    build_sketch_bytes,
+    shuffle_multi_by_key,
+)
 
 # ---------------------------------------------------------------------------
 # Batch flattening helpers (ragged array<int> columns -> flat numpy)
@@ -240,8 +247,7 @@ def count_contained_in(
 
 def flat_ngram_hashes(flat: np.ndarray, lengths: np.ndarray, n: int) -> np.ndarray:
     """All within-row n-gram hashes, vectorized: hash the concatenated
-    stream once, then drop every window ``s`` that has a row start in
-    (s, s + n - 1], i.e. that crosses into a later row."""
+    stream once, then mask out windows that cross row boundaries."""
     if flat.size == 0:
         return np.empty(0, dtype=np.uint64)
     if n == 1:
@@ -249,13 +255,10 @@ def flat_ngram_hashes(flat: np.ndarray, lengths: np.ndarray, n: int) -> np.ndarr
     h = ngram_hashes(flat, n)  # windows over the whole stream
     if h.size == 0:
         return h
-    starts = np.cumsum(lengths)[:-1]
-    is_start = np.zeros(flat.size, dtype=bool)
-    is_start[starts[starts < flat.size]] = True
-    crosses = np.zeros(h.size, dtype=bool)
-    for j in range(1, n):
-        crosses |= is_start[j : j + h.size]
-    return h[~crosses]
+    row_of = np.repeat(np.arange(len(lengths)), lengths)
+    starts = np.arange(len(h))
+    keep = row_of[starts] == row_of[starts + n - 1]
+    return h[keep]
 
 
 class _ColumnSketch:
@@ -285,6 +288,14 @@ class _ColumnSketch:
         return build_by_key(
             df, key_col, self._empty, self._update, self._merge,
             columns=[key_col, *self._columns()], salt=salt,
+        )
+
+    def shuffle_by_key(self, df: DataFrame, key_col: str) -> DataFrame:
+        """``build_by_key``'s shuffle route as a plan that runs only at
+        its action, whatever the driver budget: (key, payload, n_items)."""
+        spec: list[MultiSpec] = [("sketch", self._empty, self._update, self._merge)]
+        return _single(
+            shuffle_multi_by_key(df, key_col, spec, columns=[key_col, *self._columns()]), "key"
         )
 
 

@@ -19,7 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.aggregate import shuffle_multi_by_key
 from ..operators.cache import tie
 from ..operators.sketches import BloomSketch, HllSketch
 from ..sketch import Shape
@@ -59,10 +58,7 @@ def source_overlap(
         raise ValueError(f"sketch must be 'bloom' or 'hll', got {sketch!r}")
     # the keyed build's shuffle route: build_by_key would run the build
     # now (its driver route), and this frame stays a plan until its action
-    keyed = shuffle_multi_by_key(
-        sequences, key_col, [("sketch", sk._empty, sk._update, sk._merge)],
-        columns=[key_col, *sk._columns()],
-    ).select("key", F.col("payload_sketch").alias("payload"))
+    keyed = sk.shuffle_by_key(sequences, key_col).select("key", "payload")
     # self-join on an applyInPandas output recomputes the producing
     # stage per side (Spark 4.1, documented gotcha) — persist so the
     # keyed corpus build runs once; the frame is tiny (one row per key)

@@ -70,10 +70,7 @@ def merge_sketch_payloads(payloads: list[bytes]) -> bytes:
             )
     acc = sketch_from_bytes(payloads[0])
     for p in payloads[1:]:
-        if isinstance(acc, BlockedBloomFilter):
-            acc.merge_bytes_in_place(p)  # a sparse payload ORs in only its listed blocks
-        else:
-            acc.merge_in_place(sketch_from_bytes(p))
+        acc.merge_in_place(sketch_from_bytes(p))
     return acc.to_bytes()
 
 

@@ -266,48 +266,22 @@ class BlockedBloomFilter:
         """Decode either layout; only canonical bytes are accepted
         (``from_bytes(raw).to_bytes() == raw``), anything else raises
         ``ValueError``."""
-        return _or_payload(data, None)
-
-    def merge_bytes_in_place(self, data: bytes) -> "BlockedBloomFilter":
-        """``merge_in_place(from_bytes(data))`` without the decoded
-        filter: a v2 payload ORs in only its listed blocks. The same
-        canonical checks, so the same bytes raise."""
-        return _or_payload(data, self)
-
-    def __eq__(self, other: object) -> bool:
-        if not isinstance(other, BlockedBloomFilter):
-            return NotImplemented
-        return self.n_blocks == other.n_blocks and bool(np.array_equal(self.words, other.words))
-
-    def __repr__(self) -> str:
-        return (
-            f"BlockedBloomFilter(blocks={self.n_blocks}, "
-            f"bits={self.cardinality()}, n_items={self.n_items})"
-        )
-
-
-def _or_payload(data: bytes, into: BlockedBloomFilter | None) -> BlockedBloomFilter:
-    """THE decoder: check that ``data`` is a canonical payload, then OR
-    its blocks and add its ``n_items`` into ``into`` (a new empty filter
-    of the payload's size when None). Raises ``ValueError`` before
-    touching ``into`` on any malformed or non-canonical payload, or on a
-    block-count mismatch."""
-    if len(data) < _HEADER.size:
-        raise ValueError("not a serialized BlockedBloomFilter")
-    magic, version, n_blocks, n_items = _HEADER.unpack_from(data, 0)
-    if magic != _MAGIC or version not in (1, 2) or n_blocks == 0:
-        raise ValueError("not a serialized BlockedBloomFilter")
-    body = memoryview(data)[_HEADER.size :]
-    if version == 1:
-        if len(body) != 32 * n_blocks:
-            raise ValueError(
-                f"corrupt BlockedBloomFilter payload: {len(body)} bytes for {n_blocks} blocks"
-            )
-        words = np.frombuffer(body, dtype="<u8")
-        nnz = int(np.count_nonzero(_block_or(words.reshape(-1, 4))))
-        if _sparse_layout(nnz, n_blocks):
-            raise ValueError("non-canonical BlockedBloomFilter: dense blocks that are sparse")
-    else:
+        if len(data) < _HEADER.size:
+            raise ValueError("not a serialized BlockedBloomFilter")
+        magic, version, n_blocks, n_items = _HEADER.unpack_from(data, 0)
+        if magic != _MAGIC or version not in (1, 2) or n_blocks == 0:
+            raise ValueError("not a serialized BlockedBloomFilter")
+        body = memoryview(data)[_HEADER.size :]
+        if version == 1:
+            if len(body) != 32 * n_blocks:
+                raise ValueError(
+                    f"corrupt BlockedBloomFilter payload: {len(body)} bytes for {n_blocks} blocks"
+                )
+            words = np.frombuffer(body, dtype="<u8").astype(_U64)
+            nnz = int(np.count_nonzero(_block_or(words.reshape(-1, 4))))
+            if _sparse_layout(nnz, n_blocks):
+                raise ValueError("non-canonical BlockedBloomFilter: dense blocks that are sparse")
+            return cls(n_blocks, words, n_items=n_items)
         nnz, rem = divmod(len(body), _SPARSE_ENTRY)
         if rem:
             raise ValueError(
@@ -325,24 +299,17 @@ def _or_payload(data: bytes, into: BlockedBloomFilter | None) -> BlockedBloomFil
             )
         if not _block_or(blocks).all():
             raise ValueError("corrupt BlockedBloomFilter payload: a listed block is empty")
-    fresh = into is None
-    if fresh:
-        into = BlockedBloomFilter(n_blocks)
-    elif into.n_blocks != n_blocks:
-        raise ValueError(f"n_blocks mismatch: {into.n_blocks} vs {n_blocks}")
-    # OR into a new (all-zero) filter is a plain copy; writing its fresh
-    # pages without reading them first spares each a second page fault
-    if version == 1:
-        if fresh:
-            into.words[:] = words
-        else:
-            into.words |= words
-    else:
-        rows = into.words.view(_BLOCK)
-        listed = blocks.view(_BLOCK).reshape(-1)
-        if not fresh:
-            listed = rows[idx]
-            listed.view(_U64).reshape(-1, 4)[:] |= blocks
-        rows[idx] = listed
-    into.n_items += n_items
-    return into
+        words = np.zeros(4 * n_blocks, dtype=_U64)
+        words.view(_BLOCK)[idx] = blocks.view(_BLOCK).reshape(-1)
+        return cls(n_blocks, words, n_items=n_items)
+
+    def __eq__(self, other: object) -> bool:
+        if not isinstance(other, BlockedBloomFilter):
+            return NotImplemented
+        return self.n_blocks == other.n_blocks and bool(np.array_equal(self.words, other.words))
+
+    def __repr__(self) -> str:
+        return (
+            f"BlockedBloomFilter(blocks={self.n_blocks}, "
+            f"bits={self.cardinality()}, n_items={self.n_items})"
+        )

@@ -89,29 +89,3 @@ def test_sketch_keeps_only_the_block_count():
     sk = BlockedBloomSketch.for_np(n=1 << 20, p=1e-3)
     assert sk.proto == BlockedBloomFilter(sk.n_blocks)
     assert len(pickle.dumps(sk)) < 1000 < sk.proto.number_of_bytes()
-
-
-def test_merge_ors_payloads_of_either_layout_in_place():
-    """``merge_bytes_in_place`` (what ``merge_sketch_payloads`` runs for
-    blocked payloads) equals decoding each payload and merging the
-    filters: same words, same ``n_items``, same bytes, whether the
-    payloads are sparse (v2), dense (v1) or mixed."""
-    from rusty_bloomfilter_spark.sketch import merge_sketch_payloads
-
-    rng = np.random.default_rng(5)
-    n_blocks = BlockedBloomFilter.for_np(20_000, 1e-3).n_blocks
-    parts = [
-        BlockedBloomFilter(n_blocks).add_tokens(rng.integers(0, 1 << 40, n))
-        for n in (40, 0, 3_000, 25_000, 1)
-    ]
-    payloads = [f.to_bytes() for f in parts]
-    assert {p[4] for p in payloads} == {1, 2}
-    ref = BlockedBloomFilter(n_blocks)
-    acc = BlockedBloomFilter.from_bytes(payloads[0])
-    for p in payloads:
-        ref.merge_in_place(BlockedBloomFilter.from_bytes(p))
-    for p in payloads[1:]:
-        acc.merge_bytes_in_place(p)
-    assert acc == ref and acc.n_items == ref.n_items == sum(f.n_items for f in parts)
-    assert merge_sketch_payloads(payloads) == ref.to_bytes()
-    assert merge_sketch_payloads(payloads[::-1]) == ref.to_bytes()

@@ -177,9 +177,12 @@ def test_high_cardinality_keyed_build_invariance(spark):
         assert bytes(r["payload"]) == oracle.to_bytes()
 
 
-def test_fused_salted_build_bitwise_invariant(spark, seq_df):
-    """salt>0 adds an intermediate merge level; output bytes unchanged
-    (merge algebra) and fan-in bounded."""
+def test_fused_salted_build_bitwise_invariant(spark, seq_df, monkeypatch):
+    """salt>0 adds an intermediate merge level to the shuffle route;
+    output bytes equal the driver route's (merge algebra) and fan-in is
+    bounded."""
+    from rusty_bloomfilter_spark.operators import aggregate
+
     bloom = BloomSketch(SHAPE)
     hll = HllSketch(p=12)
     specs = [
@@ -190,6 +193,7 @@ def test_fused_salted_build_bitwise_invariant(spark, seq_df):
         r["key"]: (bytes(r["payload_bloom"]), bytes(r["payload_hll"]), r["n_rows"])
         for r in build_multi_by_key(seq_df, "source", specs, columns=["source", "tokens"]).collect()
     }
+    monkeypatch.setattr(aggregate, "_DRIVER_MERGE_BYTES", 0)  # salt shapes the shuffle only
     salted = {
         r["key"]: (bytes(r["payload_bloom"]), bytes(r["payload_hll"]), r["n_rows"])
         for r in build_multi_by_key(

@@ -105,7 +105,10 @@ def test_count_contained_on_an_input_with_no_partitions(spark):
     assert sk.count_contained(df, payload) == (3, 3)
 
 
-def test_bloom_by_key_with_salt(spark, seq_df, sequences_pdf):
+def test_bloom_by_key_with_salt(spark, seq_df, sequences_pdf, monkeypatch):
+    from rusty_bloomfilter_spark.operators import aggregate
+
+    monkeypatch.setattr(aggregate, "_DRIVER_MERGE_BYTES", 0)  # salt shapes the shuffle only
     sk = BloomSketch(SHAPE)
     rows = sk.build_by_key(seq_df, "source", salt=4).collect()
     got = {r["key"]: BloomFilter.from_bytes(bytes(r["payload"])) for r in rows}
@@ -632,7 +635,10 @@ def test_keyed_builds_under_the_budget_run_one_job_one_stage(
         return {r["key"]: (bytes(r["payload"]), r["n_items"])
                 for r in hll.build_by_key(df, "source").collect()}
 
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     multi()  # warm the Python workers
+    # the fold's checkpoint blocks are freed once its rows are collected
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
     got, jobs, stages = _jobs_and_stages(spark, "test_spark_build.keyed_multi", multi)
     assert (jobs, stages) == (1, 1)
     assert set(got) == set(sequences_pdf["source"])
@@ -674,11 +680,11 @@ def test_keyed_driver_route_null_keys_and_empty_input(spark, monkeypatch, caplog
 
 
 def test_keyed_overflow_reroutes_and_keeps_the_python_workers(spark, tmp_path, monkeypatch, caplog):
-    """A task that meets more keys than the cap reads the rest of its
-    input without folding it and emits a marker row: the build re-routes
-    to the shuffle (one INFO line) with the same rows, and the Python
-    workers that ran the capped fold stay alive for reuse (a worker
-    that leaves input unread is killed and replaced)."""
+    """A task that folds more keys than the cap keeps its rows on the
+    executors and sends a marker row: the build re-routes to the shuffle
+    (one INFO line) over the checkpointed fold rows, salted or not, with
+    the same rows. The input is folded once, and the Python workers
+    that ran the fold stay alive for reuse."""
     import logging
     import os
 
@@ -693,8 +699,10 @@ def test_keyed_overflow_reroutes_and_keeps_the_python_workers(spark, tmp_path, m
     pid_dir = tmp_path / "pids"
     pid_dir.mkdir()
 
-    def make_empty(pid_dir=str(pid_dir)):  # records the worker that folds
-        open(os.path.join(pid_dir, str(os.getpid())), "w").close()
+    def make_empty(pid_dir=str(pid_dir)):  # one file per (worker, call)
+        import tempfile
+
+        os.close(tempfile.mkstemp(dir=pid_dir, prefix=f"{os.getpid()}-")[0])
         return hll._empty()
 
     specs = [("hll", make_empty, hll._update, hll._merge)]
@@ -707,12 +715,16 @@ def test_keyed_overflow_reroutes_and_keeps_the_python_workers(spark, tmp_path, m
     monkeypatch.setattr(aggregate, "_fold", spy)
     got = _keyed_rows(build_multi_by_key(df, "key", specs).collect(), ["hll"])
     assert got == ref and len(got) == 97
-    assert spy.caps == [2, None]
+    assert spy.caps == [2]  # the shuffle reads the checkpointed rows: no second fold
     logged = [r.getMessage() for r in caplog.records if r.name == "rusty_bloomfilter_spark"]
     assert len(logged) == 1 and "more than 2 keys" in logged[0], logged
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    pids = {int(p.name) for p in pid_dir.iterdir()} - {os.getpid()}
-    assert pids
+    calls = [p.name.split("-")[0] for p in pid_dir.iterdir()]
+    worker_calls = [c for c in calls if c != str(os.getpid())]
+    assert len(worker_calls) == 4 * 97  # one accumulator per (task, key): one fold
+    salted = build_multi_by_key(df, "key", specs, salt=3)
+    assert _keyed_rows(salted.collect(), ["hll"]) == ref
+    pids = {int(c) for c in worker_calls}
     for pid in pids:
         with open(f"/proc/{pid}/stat") as f:  # a dead worker has no entry or is a zombie
             assert f.read().split(") ")[1][0] not in "ZX", pid
@@ -855,6 +867,8 @@ def test_every_route_gives_the_same_sketches(spark, sequences_pdf, tmp_path, mon
             frame, "k", specs, columns=["k", *columns], salt=salt
         ).collect()
         logged = [r.getMessage() for r in caplog.records if r.name == "rusty_bloomfilter_spark"]
+        assert len(rows) == len({r["k"] for r in frame.select("k").distinct().collect()})
+        assert len(rows) == len({r["key"] for r in rows}), "a key has more than one row"
         out = {
             name: (sk._merge([bytes(r[f"payload_{name}"]) for r in rows]),
                    sum(r[f"n_{name}"] for r in rows))
